@@ -2536,6 +2536,7 @@ def q68_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from spark_hadoop_automation_in_cloud_spark.operators.components import (  # noqa: E402
+    _owned_checkpoints,
     pagerank,
 )
 
@@ -2612,41 +2613,42 @@ SELECT node, round(rank, 6) AS rank FROM {prev}
 def q69_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "events", parallelize=True)
     k = F.get_json_object(F.col("props"), "$.k").cast("int")
-    purchases = (
-        e.where(F.col("event_type") == "purchase")
-        .select(k.alias("k"), "user_id")
-        .distinct()
+    with _owned_checkpoints(spark) as pins:
         # both sides of the self-join consume this frame — checkpoint so
-        # the events scan + JSON parse runs once, not twice
-        .localCheckpoint()
-    )
-    # r11: the checkpointed distinct lands in ONE AQE-coalesced partition
-    # (18.8k rows), which serialized the self-join's 3.5M-row pair fanout
-    # + partial-distinct on a single task (measured 2.5 s of q69's 7 s).
-    # Re-spreading the small frame across the cluster's cores (one cheap
-    # 19k-row exchange, shared by both join sides via ReusedExchange)
-    # parallelizes the fanout: 2.51 s → 0.87 s.  GATED on the pathology
-    # (fewer partitions than cores): a corpus-scale purchases table
-    # already carries ≥cores partitions and must not pay a redundant
-    # exchange — the join then plans its own k-exchange exactly as
-    # before.  Both the spread count and the gate read the cluster
-    # (defaultParallelism), never a local constant.
-    par = spark.sparkContext.defaultParallelism
-    pk = (
-        purchases.repartition(par, "k")
-        if purchases.rdd.getNumPartitions() < par
-        else purchases
-    )
-    edges = (
-        pk.alias("a")
-        .join(pk.alias("b"), "k")
-        .where(F.col("a.user_id") != F.col("b.user_id"))
-        .select(F.col("a.user_id").alias("src"), F.col("b.user_id").alias("dst"))
-        .distinct()
-    )
-    # edges are .distinct() two lines up — skip pagerank's defensive
-    # re-distinct (a full edge shuffle)
-    return pagerank(edges, n_iter=10, per_iter_round_dp=9, assume_distinct_edges=True)
+        # the events scan + JSON parse runs once, not twice; pagerank is
+        # eager, so the pin is released once its output is materialized
+        purchases = pins.pin(
+            e.where(F.col("event_type") == "purchase")
+            .select(k.alias("k"), "user_id")
+            .distinct()
+        )
+        # r11: the checkpointed distinct lands in ONE AQE-coalesced partition
+        # (18.8k rows), which serialized the self-join's 3.5M-row pair fanout
+        # + partial-distinct on a single task (measured 2.5 s of q69's 7 s).
+        # Re-spreading the small frame across the cluster's cores (one cheap
+        # 19k-row exchange, shared by both join sides via ReusedExchange)
+        # parallelizes the fanout: 2.51 s → 0.87 s.  GATED on the pathology
+        # (fewer partitions than cores): a corpus-scale purchases table
+        # already carries ≥cores partitions and must not pay a redundant
+        # exchange — the join then plans its own k-exchange exactly as
+        # before.  Both the spread count and the gate read the cluster
+        # (defaultParallelism), never a local constant.
+        par = spark.sparkContext.defaultParallelism
+        pk = (
+            purchases.repartition(par, "k")
+            if purchases.rdd.getNumPartitions() < par
+            else purchases
+        )
+        edges = (
+            pk.alias("a")
+            .join(pk.alias("b"), "k")
+            .where(F.col("a.user_id") != F.col("b.user_id"))
+            .select(F.col("a.user_id").alias("src"), F.col("b.user_id").alias("dst"))
+            .distinct()
+        )
+        # edges are .distinct() two lines up — skip pagerank's defensive
+        # re-distinct (a full edge shuffle)
+        return pagerank(edges, n_iter=10, per_iter_round_dp=9, assume_distinct_edges=True)
 
 
 @register(
@@ -7017,7 +7019,11 @@ def _copurchase_edges(li: DataFrame) -> DataFrame:
     "which parallelize. Two equi-join shuffles; AQE splits residual "
     "same-pivot skew. TRIANGLES.json is the measured A/B: 8x edges -> "
     "64x naive wedges, naive wall 5.9->43.7s while the oriented form "
-    "stays flat ~10s. Deterministic (tri_count DESC, node ASC) top-50.",
+    "stays flat ~10s. Deterministic (tri_count DESC, node ASC) top-50. "
+    "Eager: Spark does not reuse the edge subplan across the degree "
+    "aggregate and the two degree joins, so the call pins the "
+    "co-purchase edge list once (a lazy plan derived it three times) "
+    "and returns its top-50 rows as a local frame.",
 )
 def q161_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")

@@ -1034,15 +1034,18 @@ def test_sketch_parquet_roundtrip_merge_estimate(spark, tmp_path):
 
 
 def test_iterative_operators_release_checkpoint_storage(spark):
-    """pagerank/connected_components must not leak localCheckpoint blocks:
+    """pagerank/connected_components/triangle_count/clustering_coefficient
+    must not leak localCheckpoint blocks:
     repeated calls previously pinned every intermediate frame (the edge
     checkpoint is O(|edges|)), degrading the JVM until evictions thrashed.
     Each call may keep exactly ONE new persisted RDD — the returned
     frame — and results must stay usable after cleanup."""
     from spark_hadoop_automation_in_cloud_spark.operators.components import (
         _persistent_rdd_ids,
+        clustering_coefficient,
         connected_components,
         pagerank,
+        triangle_count,
     )
 
     edges = spark.createDataFrame(
@@ -1066,6 +1069,24 @@ def test_iterative_operators_release_checkpoint_storage(spark):
     comp = connected_components(pairs, "a", "b")
     assert comp.count() > 0
     assert len(_persistent_rdd_ids(spark)) <= n_before + 1
+
+    # the eager triangle operators pin their edge list once per call and
+    # release it before returning; their top-k comes back as local rows,
+    # so a call leaves no pin at all (set difference: the suite's shared
+    # session may release an earlier test's RDD in between)
+    graph = spark.createDataFrame(
+        [(a, b) for a in range(12) for b in range(a + 1, 12) if (a * b) % 3 != 1],
+        "u bigint, v bigint",
+    )
+    for op in (triangle_count, clustering_coefficient):
+        base = _persistent_rdd_ids(spark)
+        results = [op(graph, "u", "v", topk=5) for _ in range(3)]
+        assert _persistent_rdd_ids(spark) - base == set(), op.__name__
+        plan = results[0]._jdf.queryExecution().analyzed().toString()
+        assert plan.startswith("LocalRelation"), plan
+        first = results[0].collect()
+        assert len(first) == 5, op.__name__
+        assert all(r.collect() == first for r in results), op.__name__
 
 
 def test_bloom_prune_no_false_negatives_and_fpp(spark, sf_dir):
@@ -3564,6 +3585,72 @@ def test_iterative_operators_release_checkpoints_on_error(spark):
     with _pytest.raises(RuntimeError, match="converge"):
         connected_components(long_chain, "a", "b", max_rounds=2)
     assert _persistent_rdd_ids(spark) - base == set()
+
+
+def test_owned_checkpoints_scope_releases_everything_it_pinned(spark):
+    """The owned-checkpoint scope releases every frame pinned through it,
+    on success and when the body raises; a result checkpointed outside
+    the scope's pins (pagerank's contract) keeps its blocks."""
+    import pytest as _pytest
+
+    from spark_hadoop_automation_in_cloud_spark.operators.components import (
+        _owned_checkpoints,
+        _persistent_rdd_ids,
+        _pinned_rdd_ids,
+    )
+
+    df = spark.range(40)
+    base = _persistent_rdd_ids(spark)
+    with _owned_checkpoints(spark) as pins:
+        mid = pins.pin(df.where("id % 2 = 0"))
+        out = mid.where("id > 10").localCheckpoint()
+    own = _pinned_rdd_ids(out)
+    assert len(pins.pinned) == 1
+    assert own and _persistent_rdd_ids(spark) - base == own
+    assert out.count() == 14
+    with _pytest.raises(ValueError):
+        with _owned_checkpoints(spark) as pins:
+            pins.pin(df)
+            pins.pin(df.where("id > 3"))
+            raise ValueError("boom")
+    assert len(pins.pinned) == 2
+    assert _persistent_rdd_ids(spark) - base == own
+
+
+def test_unpersist_failures_are_counted_and_logged(caplog):
+    """A release that raises is counted in ``cleanup_failures`` and
+    logged, never swallowed: one count per id whose unpersist raised,
+    every id when the persisted-RDD table itself is unreachable."""
+    from types import SimpleNamespace
+
+    from spark_hadoop_automation_in_cloud_spark.operators import components
+
+    class _Rdd:
+        def unpersist(self, blocking):
+            raise RuntimeError("block manager gone")
+
+    def session(get_rdds):
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(
+                _jsc=SimpleNamespace(getPersistentRDDs=get_rdds)
+            )
+        )
+
+    def unreachable():
+        raise RuntimeError("no JVM")
+
+    before = components.cleanup_failures
+    with caplog.at_level("WARNING", logger=components.__name__):
+        components._unpersist_rdds(
+            session(lambda: SimpleNamespace(get=lambda i: _Rdd())), {1, 2}
+        )
+        assert components.cleanup_failures == before + 2
+        components._unpersist_rdds(session(unreachable), {3, 4, 5})
+        assert components.cleanup_failures == before + 5
+    assert len(caplog.records) == 3
+    # nothing to release is not a failure
+    components._unpersist_rdds(session(unreachable), set())
+    assert components.cleanup_failures == before + 5
 
 
 def test_q203_fertility_hand_trace(spark):

@@ -628,3 +628,34 @@ def test_graph_broadcast_arm_round_plans(spark):
     # LogicalRDD inputs have no stats, so nothing else can auto-broadcast)
     assert "BroadcastHashJoin" not in closed_plans, closed_plans[:3000]
     assert closed_plans.count("SortMergeJoin") >= 6, closed_plans[:3000]
+
+
+def test_triangle_count_normalizes_edges_once(spark):
+    """One ``triangle_count`` call derives its normalized edge list once:
+    the ``least``/``greatest`` projection appears in exactly one executed
+    plan, the edge pin's.  When the operator was lazy, the degree
+    aggregate and both degree joins each re-derived it (their inferred
+    ``IS NOT NULL`` filters differ, so AQE never reused the exchange):
+    the same call's executed plans held that projection 15 times, all
+    in the one plan of the collect (AQE's current and initial plans)."""
+    import re
+
+    from spark_hadoop_automation_in_cloud_spark.operators.components import (
+        triangle_count,
+    )
+
+    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    edges = spark.createDataFrame(
+        k4 + [(4, 10), (10, 11), (4, 11), (11, 4), (7, 7)], "p1 bigint, p2 bigint"
+    )
+    got = {}
+    plans = _executed_plan_descriptions(
+        spark,
+        lambda: got.update(
+            (r["p1"], r["tri_count"])
+            for r in triangle_count(edges, "p1", "p2").collect()
+        ),
+    )
+    assert got == {1: 3, 2: 3, 3: 3, 4: 4, 10: 1, 11: 1}
+    norm = re.findall(r"least\(p1#\d+L, p2#\d+L\) AS u#", plans)
+    assert len(norm) == 1, plans[:3000]
