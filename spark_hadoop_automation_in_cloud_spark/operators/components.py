@@ -84,11 +84,12 @@ def _unpersist_rdds(spark, ids: set[int]) -> None:
     checkpoints (the edge frame alone is O(|edges|) memory), and repeated
     calls degrade the whole JVM — measured on the 17.9M-edge PageRank
     input: run-to-run wall oscillated 11s→52s as dead blocks forced
-    eviction and GC.  Callers record each checkpoint's own pinned ids via
-    ``_pinned_rdd_ids`` and release that exact set minus the returned
-    frame's (a localCheckpoint'd RDD must never be unpersisted while
-    still referenced — its lineage is truncated, so lost blocks are
-    unrecoverable).
+    eviction and GC.  Operators release through
+    :func:`_owned_checkpoints`, which records each checkpoint's own
+    pinned ids via ``_pinned_rdd_ids``; a returned frame keeps its own
+    checkpoint outside that set (a localCheckpoint'd RDD must never be
+    unpersisted while still referenced — its lineage is truncated, so
+    lost blocks are unrecoverable).
 
     A release that raises leaves its blocks pinned: each such id adds
     one to :data:`cleanup_failures` and logs a warning, so a leak shows
@@ -158,13 +159,105 @@ def _owned_checkpoints(spark):
         _unpersist_rdds(spark, scope.pinned)
 
 
+#: gates of the per-round node-state broadcast (see :func:`_node_broadcast`)
+_BROADCAST_MIN_EDGE_ROWS = 1_000_000
+_BROADCAST_NODES_MAX = 1_000_000
+#: lineage-cut cadence of the chained-round loops (see :func:`_cut_every`)
+_CUT_EVERY = 2
+_CHAIN_MAX_EDGE_ROWS = 4_000_000
+
+
+def _node_broadcast(edge_rows: int, count_nodes):
+    """The join hint for the per-round node-state side of an edge join:
+    ``F.broadcast`` when the edge list holds at least
+    ``_BROADCAST_MIN_EDGE_ROWS`` rows AND ``count_nodes()`` is at most
+    ``_BROADCAST_NODES_MAX``, identity otherwise.  ``count_nodes`` runs
+    only past the edge gate, so a small graph pays no node-count job.
+
+    Why broadcast: a ``localCheckpoint``'d frame is a ``LogicalRDD`` with
+    no Catalyst statistics, so without the hint every round plans a
+    sort-merge join that exchanges and sorts the EDGE list.  Broadcasting
+    the ≤ |V|-row node state leaves the checkpointed edge partitions in
+    place: each round is one map-side hash join plus a map-side-combined
+    aggregate (the same shape in :func:`pagerank` measured 2.0-2.2×
+    faster broadcast at 1.8M and 17.9M edges).
+
+    Why the edge gate: the broadcast spends ~2 fixed driver barriers
+    (collect + ship) per round, which only pays once the avoided edge
+    exchange is large.  Measured 2026-08-17 on label propagation, same
+    code: the 3.6k-edge co-purchase graph ran 4.4 s sort-merge vs 12.4 s
+    broadcast, while the 3.6M-sym-edge contact graph ran 6.9/5.6 s
+    sort-merge vs 5.3/4.9 s broadcast.  So the registered queries over
+    the gated operators take the sort-merge arm at bench scale, on
+    purpose.
+
+    Results are bit-identical on either arm (integer counts and sums,
+    order-free MIN, deterministic argmax); tests force each arm by
+    patching the two constants.
+    """
+    if edge_rows >= _BROADCAST_MIN_EDGE_ROWS and count_nodes() <= _BROADCAST_NODES_MAX:
+        return F.broadcast
+    return lambda df: df
+
+
+def _cut_every(chainable: bool, edge_rows: int) -> int:
+    """Rounds between lineage cuts (``localCheckpoint``) of a round loop:
+    ``_CUT_EVERY`` when the loop is ``chainable`` and the edge list holds
+    at most ``_CHAIN_MAX_EDGE_ROWS`` rows, else 1 (cut every round).
+
+    ``chainable`` means each round's plan references the previous round's
+    frame exactly ONCE.  Then rounds can chain lazily between cuts, and K
+    rounds cost ~K/``_CUT_EVERY`` checkpoint actions instead of K, with
+    bit-identical output (the same plan tree, materialized less often;
+    the per-round dp snap already pins summation order).  A loop whose
+    round references the previous frame twice (PageRank's dangling-mass
+    aggregate) is not chainable: an unmaterialized chain re-executes each
+    round's subtree per reference (2^rounds growth).
+
+    Why 2: each checkpoint materializes a |V|-row frame and schedules a
+    job, while longer chains grow the plan until analysis and AQE
+    re-planning dominate.  On the 1.8M-edge q69 graph, cadence 2 measured
+    6.25 s vs 6.96 s every-round (4-trial interleaved medians), cadence 5
+    6.86 s and a full 10-round unroll 9.9 s; q69 went 53 → 48 scheduler
+    jobs.  On the q188 LPA graph cadence 2 measured 3.18 s vs 3.61 s
+    every-round and 3.27 s full-chain, and 32.4 vs 34.5 s on its 100×
+    disjoint-copy graph (714k sym edges).
+
+    Why the edge gate: the win is a latency effect.  On q69's 17.9M-edge
+    10× replication, chaining REGRESSED 7.4/10.0 s → 9.8/12/31 s
+    (erratic: the two edge joins per action compete for execution memory
+    within one job), so large edge lists keep the every-round cut.
+    """
+    return _CUT_EVERY if chainable and edge_rows <= _CHAIN_MAX_EDGE_ROWS else 1
+
+
+def _undirected_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """The normalized undirected edge list ``(u, v)`` with ``u < v``:
+    self-loops dropped, either orientation and duplicates collapsed."""
+    u, v = F.col(src_col), F.col(dst_col)
+    return (
+        edges.where(u != v)
+        .select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
+        .distinct()
+    )
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """``(node, d)``: each endpoint's degree in an undirected ``(u, v)``
+    edge list."""
+    return (
+        e.select(F.col("u").alias("node"))
+        .unionAll(e.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     left_col: str,
     right_col: str,
     max_rounds: int = 25,
-    broadcast_nodes_max: int = 1_000_000,
-    broadcast_min_edge_rows: int = 1_000_000,
 ) -> DataFrame:
     """Pairs (undirected edges) → (node, component_id = min node id reachable).
 
@@ -180,47 +273,28 @@ def connected_components(
     (e.g. an unbounded pair generator), never a case to paper over with
     wrong cluster ids.
 
-    Join strategy of the per-round edges⋈labels hop follows
-    :func:`label_propagation`'s dispatch (its docstring has the measured
-    two-way A/B): on a large edge list with a bounded node set, the
-    |V|-row label frame broadcasts so the checkpointed edges are never
-    exchanged per round (LogicalRDD frames have no Catalyst statistics,
-    so the planner would sort-merge every round).  Only the edge join is
-    dispatched: the pointer-jump self-join's two sides share one
-    subtree, which sort-merge deduplicates via ReusedExchange but a
-    broadcast build would compute twice.  Bit-identical results either
-    way (integer MIN labels — order-free).
+    The per-round edges⋈labels hop takes the :func:`_node_broadcast`
+    join hint.  Only the edge join is hinted: the pointer-jump
+    self-join's two sides share one subtree, which sort-merge
+    deduplicates via ReusedExchange but a broadcast build would compute
+    twice.
     """
-    spark = pairs.sparkSession
-    created: set[int] = set()
-    # any failure (a raise below, or a Spark action dying mid-round)
-    # must not strand this call's localCheckpoint blocks — the
-    # r11 review finding: the error path leaked `created` (the same
-    # degradation _unpersist_rdds documents for the success path)
-    try:
-        edges = (
+    # every intermediate checkpoint is owned by the scope; the result is
+    # checkpointed outside it so that it outlives the call
+    with _owned_checkpoints(pairs.sparkSession) as pins:
+        edges = pins.pin(
             pairs.select(F.col(left_col).alias("a"), F.col(right_col).alias("b"))
             .unionByName(
                 pairs.select(F.col(right_col).alias("a"), F.col(left_col).alias("b"))
             )
             .distinct()
-            .localCheckpoint()
         )
-        created |= _pinned_rdd_ids(edges)
-        labels = edges.select(F.col("a").alias("node")).distinct().select(
-            "node", F.col("node").alias("component_id")
-        ).localCheckpoint()
-        created |= _pinned_rdd_ids(labels)
-        # join-strategy dispatch (docstring); the edge gate
-        # short-circuits so small graphs pay no label-count job
-        bc = (
-            F.broadcast
-            if (
-                edges.count() >= broadcast_min_edge_rows
-                and labels.count() <= broadcast_nodes_max
+        labels = pins.pin(
+            edges.select(F.col("a").alias("node")).distinct().select(
+                "node", F.col("node").alias("component_id")
             )
-            else (lambda df: df)
         )
+        bc = _node_broadcast(edges.count(), labels.count)
 
         # Convergence probe (r11): each round takes per-node MIN over (own
         # label, neighbor labels) and then a pointer jump to a label that
@@ -239,7 +313,6 @@ def connected_components(
             ).first()["s"]
 
         prev_sum = _label_sum(labels)
-        changed = 1
         for _ in range(max_rounds):
             # candidate label per node: min over (own label, neighbors' labels)
             lab_r = bc(labels)
@@ -259,33 +332,21 @@ def connected_components(
             parent = propagated.select(
                 F.col("node").alias("__lbl"), F.col("component_id").alias("__lbl_comp")
             )
-            new_labels = (
+            labels = pins.pin(
                 propagated.join(parent, propagated.component_id == parent.__lbl)
                 .select("node", F.col("__lbl_comp").alias("component_id"))
-                .localCheckpoint()
             )
-            created |= _pinned_rdd_ids(new_labels)
-            new_sum = _label_sum(new_labels)
-            changed = 0 if new_sum == prev_sum else 1
-            prev_sum = new_sum
-            labels = new_labels
-            if changed == 0:
+            new_sum = _label_sum(labels)
+            if new_sum == prev_sum:
                 break
-        if changed != 0:
+            prev_sum = new_sum
+        else:
             raise RuntimeError(
                 f"connected_components did not converge in {max_rounds} rounds; "
                 "labels would be wrong — raise max_rounds or check the pair "
                 "generator for unbounded chains"
             )
-        # re-checkpoint the result, then release the edge frame and every
-        # per-round label snapshot THIS call pinned (its own ids, never a
-        # concurrent caller's) — see _unpersist_rdds
-        out = labels.localCheckpoint()
-        _unpersist_rdds(spark, created - _pinned_rdd_ids(out))
-        return out
-    except BaseException:
-        _unpersist_rdds(spark, created)
-        raise
+        return labels.localCheckpoint()
 
 
 def neardup_clusters(
@@ -318,11 +379,7 @@ def pagerank(
     n_iter: int = 10,
     damping: float = 0.85,
     per_iter_round_dp: int | None = None,
-    checkpoint_every: int = 2,
-    broadcast_nodes_max: int = 1_000_000,
     assume_distinct_edges: bool = False,
-    small_checkpoint_every: int = 2,
-    chain_max_edge_rows: int = 4_000_000,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list.
 
@@ -346,7 +403,7 @@ def pagerank(
     Join strategy is picked ONCE from ``n = |nodes|`` (a scalar the driver
     already needs for the 1/n terms):
 
-    - ``n <= broadcast_nodes_max`` — the rank frame is broadcast into the
+    - ``n <= _BROADCAST_NODES_MAX`` — the rank frame is broadcast into the
       edge join.  The big side (edges) is then never exchanged or sorted:
       each round is one map-side hash join over the checkpointed edge
       partitions + a map-side-combined aggregate whose exchange carries
@@ -356,35 +413,14 @@ def pagerank(
       (7.4s→3.4s, 29.8s→17.0s), with per-round cost dropping ~2.5s→
       ~0.8s at 10x — the remaining 10x wall is the one-time linear setup
       (edge distinct + degree build), i.e. work proportional to data, not
-      per-round overhead.  On a dangling-free graph whose edge list is
-      small enough (``chain_max_edge_rows``, read for free from the setup
-      aggregate's degree sum), the per-round rank frame is referenced
-      exactly ONCE by the next round's plan (inside the contribs
-      broadcast), so rounds chain LAZILY and the path checkpoints every
-      ``small_checkpoint_every`` rounds (r11): K rounds cost
-      ~K/small_checkpoint_every driver actions and measurably fewer
-      scheduler jobs (53 → 48 jobs for q69's 10 rounds at 2), with
-      bit-identical output (same plan tree, materialized less often; the
-      per-round dp snap already pins summation order).  The chain gate
-      exists because the win is a LATENCY effect: on the 1.8M-edge q69
-      graph cadence 2 measured 6.25 s vs 6.96 s every-round (4-trial
-      interleaved medians; cadence 5 = 6.86 s and a full 10-round unroll
-      regressed to 9.9 s — AQE re-planning grows with plan depth), but
-      on its 17.9M-edge 10x replication chaining REGRESSED 7.4/10.0 s →
-      9.8/12/31 s (erratic — the two e-joins per action compete for
-      execution memory within one job), so large edge lists keep the
-      every-round cut;
-      a graph WITH dangling mass keeps the every-round checkpoint — its
-      dangling aggregate is a second reference to the rank frame, and an
-      unmaterialized chain would re-execute each round's subtree per
-      reference (2^rounds growth).
-    - larger graphs — sort-merge join with ``checkpoint_every`` lineage
-      cuts; 2 is the measured sweet spot (each checkpoint materializes a
-      |nodes|-row frame and schedules a job — every round pays that fixed
-      cost twice as often for no lineage benefit, while 5+ lets the
-      chained-round plan grow enough that analysis/AQE overhead
-      dominates).  On either path the final round materializes straight
-      into the returned (6dp-rounded) checkpoint.
+      per-round overhead.  Unlike the other graph loops there is no
+      edge-volume gate (:func:`_node_broadcast`): q69 takes this arm.
+      Rounds cut lineage at the :func:`_cut_every` cadence, chainable
+      when the graph has no dangling mass (the total edge count is read
+      for free from the setup aggregate's degree sum).
+    - larger graphs — sort-merge join, cut every ``_CUT_EVERY`` rounds.
+      On either path the final round materializes straight into the
+      returned (6dp-rounded) checkpoint.
 
     Both paths run the IDENTICAL scalar arithmetic in the identical
     order (rank/deg contributions, damped sum, optional per-round
@@ -428,12 +464,6 @@ def pagerank(
     output rounding.  The perturbation itself (<5e-10/round) sits far
     below PageRank's meaningful resolution.  ``None`` keeps raw doubles.
     """
-    if checkpoint_every < 1 or small_checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}/"
-            f"{small_checkpoint_every} "
-            "(pass n_iter to checkpoint only the final round)"
-        )
     # every intermediate checkpoint (edge frame, node state, the per-round
     # rank snapshots) is owned by the scope and released on the way out,
     # also when a Spark action dies mid-round
@@ -475,24 +505,12 @@ def pagerank(
         n = int(setup["n"])
         has_dangling = bool(setup["hd"])
         total_edges = int(setup["te"])
-        small = n <= broadcast_nodes_max
+        small = n <= _BROADCAST_NODES_MAX
         # the first round reads the checkpointed node state plus a literal;
         # pinning that projection would only copy nd
         ranks = nd.select("node", "deg", F.lit(1.0 / n).alias("rank"))
-
-        # lineage-cut cadence (docstring): broadcast path chains rounds
-        # lazily iff the dangling aggregate adds no second reference to
-        # the per-round rank frame AND the edge list is small enough that
-        # per-round latency (not compute) is the wall
-        cut_every = (
-            (
-                small_checkpoint_every
-                if not has_dangling and total_edges <= chain_max_edge_rows
-                else 1
-            )
-            if small
-            else checkpoint_every
-        )
+        # the dangling aggregate is a second reference to the rank frame
+        cut_every = _cut_every(not has_dangling, total_edges) if small else _CUT_EVERY
         for i in range(n_iter):
             r = F.broadcast(ranks) if small else ranks
             contribs = (
@@ -574,50 +592,42 @@ def incremental_components(
     )
     la = labels.select(F.col(node_col).alias("__a"), F.col(comp_col).alias("__ra"))
     lb = labels.select(F.col(node_col).alias("__b"), F.col(comp_col).alias("__rb"))
-    spark = new_pairs.sparkSession
-    # batch-sized; checkpointed EAGERLY so the endpoint-lookup joins (the
-    # history pass) run exactly once, feeding both the reduced CC and the
-    # new-node pick — then released below once its two consumers have
-    # their own checkpoints (the usual localCheckpoint ownership dance,
-    # see _unpersist_rdds)
-    mapped = (
-        e.join(la, "__a", "left")
-        .join(lb, "__b", "left")
-        .select(
-            F.coalesce("__ra", "__a").alias("ma"),
-            F.col("__ra").isNull().alias("__a_new"),
-            F.coalesce("__rb", "__b").alias("mb"),
-            F.col("__rb").isNull().alias("__b_new"),
+    with _owned_checkpoints(new_pairs.sparkSession) as pins:
+        # batch-sized; checkpointed EAGERLY so the endpoint-lookup joins
+        # (the history pass) run exactly once, feeding both the reduced CC
+        # and the new-node pick
+        mapped = pins.pin(
+            e.join(la, "__a", "left")
+            .join(lb, "__b", "left")
+            .select(
+                F.coalesce("__ra", "__a").alias("ma"),
+                F.col("__ra").isNull().alias("__a_new"),
+                F.coalesce("__rb", "__b").alias("mb"),
+                F.col("__rb").isNull().alias("__b_new"),
+            )
         )
-        .localCheckpoint()
-    )
-    pinned = _pinned_rdd_ids(mapped)
-    reduced = connected_components(mapped, "ma", "mb", max_rounds)
-    pinned |= _pinned_rdd_ids(reduced)
-    new_ids = (
-        mapped.select(F.col("ma").alias("__nid")).where(F.col("__a_new"))
-        .unionByName(
-            mapped.select(F.col("mb").alias("__nid")).where(F.col("__b_new"))
+        reduced = connected_components(mapped, "ma", "mb", max_rounds)
+        pins.pinned |= _pinned_rdd_ids(reduced)
+        new_ids = (
+            mapped.select(F.col("ma").alias("__nid")).where(F.col("__a_new"))
+            .unionByName(
+                mapped.select(F.col("mb").alias("__nid")).where(F.col("__b_new"))
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    # ONE batch-sized result checkpoint (the convention every iterative
-    # operator here follows: the returned lineage pins exactly one
-    # block): reduced labels annotated with the is-new flag.  The EAGER
-    # checkpoint materializes it, after which mapped's and reduced's own
-    # blocks are released — a per-batch ingest loop accumulates one
-    # O(batch) block per call instead of three (the accumulation
-    # pathology _unpersist_rdds' docstring measures).
-    ann = (
-        reduced.join(
-            F.broadcast(new_ids), reduced.node == F.col("__nid"), "left"
+        # ONE batch-sized result checkpoint, outside the scope's pins (the
+        # returned lineage pins exactly one block): reduced labels
+        # annotated with the is-new flag.  A per-batch ingest loop then
+        # accumulates one O(batch) block per call instead of three.
+        ann = (
+            reduced.join(
+                F.broadcast(new_ids), reduced.node == F.col("__nid"), "left"
+            )
+            .select(
+                "node", "component_id", F.col("__nid").isNotNull().alias("__is_new")
+            )
+            .localCheckpoint()
         )
-        .select(
-            "node", "component_id", F.col("__nid").isNotNull().alias("__is_new")
-        )
-        .localCheckpoint()
-    )
-    _unpersist_rdds(spark, pinned - _pinned_rdd_ids(ann))
     remap = ann.select(
         F.col("node").alias("__root"), F.col("component_id").alias("__new_comp")
     )
@@ -697,18 +707,8 @@ def _node_triangles_and_degrees(
     :func:`clustering_coefficient`: (per-node triangle counts, per-node
     degrees) over the normalized undirected graph, whose edge list is
     pinned once through ``pins``."""
-    u, v = F.col(src_col), F.col(dst_col)
-    e = pins.pin(
-        edges.where(u != v)
-        .select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    e = pins.pin(_undirected_edges(edges, src_col, dst_col))
+    deg = _degrees(e)
     da, db = F.col("__da"), F.col("__db")
     ordered = e.join(
         deg.select(F.col("node").alias("u"), F.col("d").alias("__da")), "u"
@@ -880,8 +880,6 @@ def personalized_pagerank(
     damping: float = 0.85,
     per_iter_round_dp: int | None = 9,
     assume_distinct_edges: bool = False,
-    small_checkpoint_every: int = 2,
-    chain_max_edge_rows: int = 4_000_000,
 ) -> DataFrame:
     """Personalized PageRank: power iteration whose teleport lands on a
     SEED SET instead of uniformly — the "related to THIS cohort /
@@ -909,14 +907,11 @@ def personalized_pagerank(
     over the checkpointed edge partitions per round, the aggregate is
     map-side combined, and the rank update joins the CHECKPOINTED node
     state (not the previous rank frame), so each round's plan references
-    the previous ranks exactly once — which lets a dangling-free graph
-    with a small-enough edge list (``chain_max_edge_rows``) chain rounds
-    lazily and checkpoint every ``small_checkpoint_every`` rounds (r11,
-    :func:`pagerank`'s cadence rationale and chain gate; a graph with
-    dangling mass keeps the every-round checkpoint because its dangling
-    aggregate is a second reference to the rank frame, and a large edge
-    list keeps it because chaining measured erratic there).  This call's
-    checkpoints release on exit, ownership-scoped.  Edges
+    the previous ranks exactly once: rounds cut lineage at the
+    :func:`_cut_every` cadence, chainable when the graph has no dangling
+    mass.  The final round materializes straight into the returned
+    checkpoint; every other checkpoint releases on exit,
+    ownership-scoped.  Edges
     are distinct-ed defensively unless ``assume_distinct_edges``
     (:func:`pagerank`'s contract verbatim: a duplicated edge would
     double-count its contribution, so True is the CALLER's promise that
@@ -926,20 +921,13 @@ def personalized_pagerank(
 
     Output: node, rank (double, 6dp).
     """
-    spark = edges.sparkSession
-    created: set[int] = set()
-    # any failure (a raise below, or a Spark action dying mid-round)
-    # must not strand this call's localCheckpoint blocks — the
-    # r11 review finding: the error path leaked `created` (the same
-    # degradation _unpersist_rdds documents for the success path)
-    try:
+    with _owned_checkpoints(edges.sparkSession) as pins:
         e = edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
         ).where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         if not assume_distinct_edges:
             e = e.distinct()
-        e = e.localCheckpoint()
-        created |= _pinned_rdd_ids(e)
+        e = pins.pin(e)
         # node state in ONE map-side-combined aggregate over the edge
         # endpoints (src endpoints count toward out-degree, dst endpoints
         # only assert existence) — pagerank's nd shape; the previous
@@ -954,20 +942,17 @@ def personalized_pagerank(
             .agg(F.sum("__is_src").alias("deg"))
         )
         seed_nodes = seeds.select(F.col(seed_col).alias("node")).distinct()
-        state = (
+        state = pins.pin(
             nd.join(
                 F.broadcast(seed_nodes.withColumn("__sflag", F.lit(1))),
                 "node",
                 "left",
-            )
-            .select(
+            ).select(
                 "node",
                 F.coalesce(F.col("__sflag"), F.lit(0)).alias("__is_seed"),
                 "deg",
             )
-            .localCheckpoint()
         )
-        created |= _pinned_rdd_ids(state)
         # both one-time setup scalars (seed count; the dangling flag that
         # skips the per-round dangling-mass job — the exactly-0.0
         # dm·seed_share term is a no-op in IEEE arithmetic on symmetric
@@ -985,25 +970,12 @@ def personalized_pagerank(
             raise ValueError("personalized_pagerank: no seed is present in the graph")
         has_dangling = bool(setup["hd"])
         seed_share = F.col("__is_seed").cast("double") / float(n_seeds)
-        ranks = state.select(
-            "node", "__is_seed", "deg", seed_share.alias("rank")
-        ).localCheckpoint()
-        created |= _pinned_rdd_ids(ranks)
+        # the first round reads the checkpointed state plus a projection;
+        # pinning it would only copy state
+        ranks = state.select("node", "__is_seed", "deg", seed_share.alias("rank"))
         d = float(damping)
-        if small_checkpoint_every < 1:
-            raise ValueError(
-                f"small_checkpoint_every must be >= 1, got {small_checkpoint_every}"
-            )
-        # lineage-cut cadence (docstring / pagerank's rationale + chain
-        # gate): the rank update joins the checkpointed `state`, so the
-        # previous rank frame appears exactly once per round plan (inside
-        # the inflow broadcast) unless the dangling aggregate adds a
-        # second reference; large edge lists keep every-round cuts
-        cut_every = (
-            small_checkpoint_every
-            if not has_dangling and total_edges <= chain_max_edge_rows
-            else 1
-        )
+        # the dangling aggregate is a second reference to the rank frame
+        cut_every = _cut_every(not has_dangling, total_edges)
         for i in range(n_iter):
             inflow = (
                 e.join(
@@ -1035,16 +1007,11 @@ def personalized_pagerank(
             if per_iter_round_dp is not None:
                 nxt = nxt.withColumn("rank", F.round("rank", per_iter_round_dp))
             ranks = nxt
-            if (i + 1) % cut_every == 0 or i == n_iter - 1:
-                ranks = ranks.localCheckpoint()
-                created |= _pinned_rdd_ids(ranks)
-        out = ranks.select("node", (F.round("rank", 6) + F.lit(0.0)).alias("rank"))
-        res = out.localCheckpoint()
-        _unpersist_rdds(spark, created - _pinned_rdd_ids(res))
-        return res
-    except BaseException:
-        _unpersist_rdds(spark, created)
-        raise
+            if (i + 1) % cut_every == 0 and i < n_iter - 1:
+                ranks = pins.pin(ranks)
+        return ranks.select(
+            "node", (F.round("rank", 6) + F.lit(0.0)).alias("rank")
+        ).localCheckpoint()
 
 
 def k_core(
@@ -1053,8 +1020,6 @@ def k_core(
     dst_col: str,
     k: int,
     max_rounds: int = 20,
-    broadcast_nodes_max: int = 1_000_000,
-    broadcast_min_edge_rows: int = 1_000_000,
 ) -> DataFrame:
     """The k-core of an undirected graph: the maximal subgraph where
     every node keeps degree ≥ k — the density filter that separates a
@@ -1079,72 +1044,28 @@ def k_core(
     exit, ownership-scoped.  Output: node, core_degree (bigint — the
     node's degree WITHIN the core), empty when no k-core exists.
 
-    Join strategy is the :func:`pagerank` dispatch with the edge-volume
-    gate (see :func:`label_propagation`'s docstring for the measured
-    two-way A/B): when the edge list is large enough that its per-round
-    exchange dominates (``broadcast_min_edge_rows``) and the node set
-    fits (``broadcast_nodes_max``, one node-count job paid only past
-    the edge gate), the per-round survivor set (``keep``, ≤ |V| rows)
-    BROADCASTS into the two semi-joins, so the checkpointed edge list
-    is filtered map-side instead of being exchanged+sorted twice per
-    peel round (a localCheckpoint'd frame has no Catalyst statistics,
-    so without the hint both semi-joins plan as sort-merge).  Results
-    are bit-identical (integer degree filter); smaller graphs keep the
-    sort-merge form.
+    The per-round survivor set (``keep``, ≤ |V| rows) takes the
+    :func:`_node_broadcast` join hint into the two semi-joins, so on
+    the broadcast arm the checkpointed edge list is filtered map-side
+    instead of being exchanged and sorted twice per peel round.  The
+    node count behind the hint is a distinct count, not a 2·|E| proxy:
+    dense graphs have |V| far below 2·|E|, so the proxy would veto the
+    broadcast exactly where it pays most.
     """
-    spark = edges.sparkSession
-    created: set[int] = set()
-    # any failure (a raise below, or a Spark action dying mid-round)
-    # must not strand this call's localCheckpoint blocks — the
-    # r11 review finding: the error path leaked `created` (the same
-    # degradation _unpersist_rdds documents for the success path)
-    try:
-        u, v = F.col(src_col), F.col(dst_col)
-        e = (
-            edges.where(u != v)
-            .select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        created |= _pinned_rdd_ids(e)
+    with _owned_checkpoints(edges.sparkSession) as pins:
+        e = pins.pin(_undirected_edges(edges, src_col, dst_col))
         n_edges = e.count()
-        # join-strategy dispatch (pagerank's, with the edge-volume gate —
-        # see label_propagation's docstring).  The edge gate
-        # short-circuits first, so small graphs pay nothing extra; only
-        # a large graph pays the one-time node count (dense graphs have
-        # |V| far below 2·|E|, so a 2·|E| proxy would wrongly veto the
-        # broadcast exactly where it pays most).
-        bc = (
-            F.broadcast
-            if (
-                n_edges >= broadcast_min_edge_rows
-                and e.select(F.col("u").alias("node"))
-                .unionAll(e.select(F.col("v").alias("node")))
-                .distinct()
-                .count()
-                <= broadcast_nodes_max
-            )
-            else (lambda df: df)
-        )
+        bc = _node_broadcast(n_edges, lambda: _degrees(e).count())
         for _ in range(max_rounds):
             if n_edges == 0:
                 break
-            deg = (
-                e.select(F.col("u").alias("node"))
-                .unionAll(e.select(F.col("v").alias("node")))
-                .groupBy("node")
-                .agg(F.count(F.lit(1)).alias("d"))
-            )
-            keep = deg.where(F.col("d") >= k).select("node")
-            nxt = (
+            keep = _degrees(e).where(F.col("d") >= k).select("node")
+            e = pins.pin(
                 e.join(bc(keep.select(F.col("node").alias("u"))), "u", "left_semi")
                 .join(bc(keep.select(F.col("node").alias("v"))), "v", "left_semi")
                 .select("u", "v")
-                .localCheckpoint()
             )
-            created |= _pinned_rdd_ids(nxt)
-            n_next = nxt.count()
-            e = nxt
+            n_next = e.count()
             # n_next == 0 IS the fixpoint (the empty graph is trivially
             # stable) — without it, peeling to empty on the final permitted
             # round would hit the for-else RuntimeError (r07 ADVICE item 3)
@@ -1157,18 +1078,11 @@ def k_core(
                 "raise max_rounds; returning a partially-peeled supergraph "
                 "would be silently wrong"
             )
-        out = (
-            e.select(F.col("u").alias("node"))
-            .unionAll(e.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))
+        return (
+            _degrees(e)
+            .select("node", F.col("d").cast("bigint").alias("core_degree"))
             .localCheckpoint()
         )
-        _unpersist_rdds(spark, created - _pinned_rdd_ids(out))
-        return out
-    except BaseException:
-        _unpersist_rdds(spark, created)
-        raise
 
 
 def sql_k_core(
@@ -1217,10 +1131,6 @@ def label_propagation(
     src_col: str,
     dst_col: str,
     n_rounds: int = 5,
-    broadcast_nodes_max: int = 1_000_000,
-    broadcast_min_edge_rows: int = 1_000_000,
-    checkpoint_every: int = 2,
-    chain_max_edge_rows: int = 4_000_000,
 ) -> DataFrame:
     """Synchronous label-propagation communities (LPA, Raghavan et al.):
     every node starts as its own label, and each round adopts the most
@@ -1247,41 +1157,14 @@ def label_propagation(
     current labels (|V| rows) onto the symmetric edge list, count
     (node, label) with map-side combine, and ``max_by(label,
     struct(cnt, -label))`` collapses the argmax inside the same
-    aggregate; the label frame localCheckpoints every
-    ``checkpoint_every`` rounds when the edge list is at most
-    ``chain_max_edge_rows`` (r11: each round's plan references the
-    previous label frame exactly ONCE — the old per-round label-update
-    join is gone — so rounds chain lazily between lineage cuts; the
-    q188-graph A/B measured cadence 2 at 3.18 s vs every-round 3.61 s
-    and full-chain 3.27 s, bit-identical, and the 100x disjoint-copy
-    graph (714k sym edges) still favored cadence 2, 32.4 vs 34.5 s —
-    but pagerank's chain measured ERRATIC on a 17.9M-edge graph, so
-    large edge lists keep the every-round cut, pagerank's chain-gate
-    rationale) with ownership-scoped release.  No driver state beyond
-    the round counter; edges checkpoint ONCE.
-
-    Join strategy follows :func:`pagerank`'s dispatch with an
-    edge-volume gate: when ``|V| <= broadcast_nodes_max`` AND the
-    symmetric edge list holds at least ``broadcast_min_edge_rows`` rows,
-    the per-round label frame BROADCASTS into the one edge join (since
-    r11 the argmax aggregate IS the next label frame — the old
-    label-update join was a row-wise no-op, see the loop comment — so
-    there is exactly one join per round), and the checkpointed edge
-    partitions are never exchanged or sorted — each round becomes one map-side hash
-    join + one map-side-combined aggregate (LPA's labels-onto-edges
-    join is pagerank's shape, which measured 2.0–2.2× faster broadcast
-    at 1.8M/17.9M edges).  The statistics of a localCheckpoint'd frame
-    are unknown to Catalyst (``LogicalRDD`` reports the default size),
-    so without the explicit hint every round plans a sort-merge join
-    that shuffles the EDGE list.  The edge gate exists because the
-    broadcast spends ~2 fixed driver barriers (collect + ship) per
-    round, which only pays once the avoided edge exchange is large —
-    measured 2026-08-17 on the same code: the 3.6k-edge co-purchase
-    graph ran 4.4 s sort-merge vs 12.4 s broadcast, while the
-    3.6M-sym-edge contact graph ran 6.9/5.6 s sort-merge vs 5.3/4.9 s
-    broadcast.  Results are bit-identical either way (integer counts,
-    deterministic argmax); both thresholds are caller-tunable for
-    cluster deployments where the exchange-vs-barrier balance differs.
+    aggregate.  Each round's plan references the previous label frame
+    exactly ONCE (the old per-round label-update join is gone), so
+    rounds chain lazily and cut lineage at the :func:`_cut_every`
+    cadence, with ownership-scoped release.  No driver state beyond the
+    round counter; edges checkpoint ONCE.  The per-round label frame
+    takes the :func:`_node_broadcast` join hint into the one edge join
+    (the argmax aggregate IS the next label frame, so there is exactly
+    one join per round).
 
     Output: ``node``, ``community`` (bigint; the round-``n_rounds``
     label), ``community_size`` (bigint — members sharing the label).
@@ -1297,8 +1180,6 @@ def label_propagation(
     """
     if n_rounds < 1:
         raise ValueError(f"n_rounds must be >= 1, got {n_rounds}")
-    if checkpoint_every < 1:
-        raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
     _integral = {"tinyint", "smallint", "int", "bigint"}
     dtypes = dict(edges.dtypes)
     for c in (src_col, dst_col):
@@ -1310,44 +1191,20 @@ def label_propagation(
                 "bigint — a non-numeric id would silently become a NULL "
                 "label. Map string keys to dense bigint ids first."
             )
-    spark = edges.sparkSession
-    created: set[int] = set()
-    # any failure (a raise below, or a Spark action dying mid-round)
-    # must not strand this call's localCheckpoint blocks — the
-    # r11 review finding: the error path leaked `created` (the same
-    # degradation _unpersist_rdds documents for the success path)
-    try:
-        u, v = F.col(src_col), F.col(dst_col)
-        sym = (
-            edges.where(u != v)
-            .select(F.least(u, v).alias("a"), F.greatest(u, v).alias("b"))
-            .distinct()
+    with _owned_checkpoints(edges.sparkSession) as pins:
+        sym = _undirected_edges(edges, src_col, dst_col)
+        e = pins.pin(
+            sym.select(F.col("u").alias("src"), F.col("v").alias("dst"))
+            .unionAll(sym.select(F.col("v").alias("src"), F.col("u").alias("dst")))
         )
-        e = (
-            sym.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            .unionAll(sym.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-            .localCheckpoint()
-        )
-        created |= _pinned_rdd_ids(e)
-        lab = (
+        lab = pins.pin(
             e.select(F.col("src").alias("node"))
             .distinct()
             .select("node", F.col("node").cast("bigint").alias("lbl"))
-            .localCheckpoint()
         )
-        created |= _pinned_rdd_ids(lab)
-        # two scalars (counts of the checkpointed frames) pick the join
-        # strategy ONCE — the pagerank dispatch with an edge-volume gate
-        # (docstring); the edge gate short-circuits first so small graphs
-        # never pay the label-count job.  The edge count doubles as the
-        # chain gate (docstring cadence).
         n_edges = e.count()
-        small = (
-            n_edges >= broadcast_min_edge_rows
-            and lab.count() <= broadcast_nodes_max
-        )
-        bc = F.broadcast if small else (lambda df: df)
-        cut_every = checkpoint_every if n_edges <= chain_max_edge_rows else 1
+        bc = _node_broadcast(n_edges, lab.count)
+        cut_every = _cut_every(True, n_edges)
         for i in range(n_rounds):
             nb = e.join(bc(lab.withColumnRenamed("node", "src")), "src").select(
                 F.col("dst").alias("node"), "lbl"
@@ -1372,9 +1229,8 @@ def label_propagation(
             # lineage cut (docstring cadence) — the final round always
             # checkpoints: the community-size readout references it twice
             if (i + 1) % cut_every == 0 or i == n_rounds - 1:
-                lab = lab.localCheckpoint()
-                created |= _pinned_rdd_ids(lab)
-        out = (
+                lab = pins.pin(lab)
+        return (
             lab.join(
                 bc(
                     lab.groupBy("lbl").agg(
@@ -1390,11 +1246,6 @@ def label_propagation(
             )
             .localCheckpoint()
         )
-        _unpersist_rdds(spark, created - _pinned_rdd_ids(out))
-        return out
-    except BaseException:
-        _unpersist_rdds(spark, created)
-        raise
 
 
 def sql_label_propagation(
@@ -1457,8 +1308,6 @@ def modularity(
     dst_col: str,
     node_col: str = "node",
     label_col: str = "community",
-    broadcast_nodes_max: int = 1_000_000,
-    broadcast_min_edge_rows: int = 1_000_000,
 ) -> DataFrame:
     """Exact Newman modularity of a community assignment, per community —
     the evaluation side of :func:`label_propagation` (did LPA actually
@@ -1483,14 +1332,10 @@ def modularity(
     inner-joins and the caller owns completeness (LPA labels every
     endpoint by construction).
 
-    Join strategy is the :func:`pagerank` dispatch: when the label
-    table is ``<= broadcast_nodes_max`` rows (one cheap count — labels
-    are usually LPA's already-checkpointed output) it BROADCASTS into
-    the degree join and both endpoint joins, so the canonical edge list
-    is scanned map-side instead of exchanged+sorted twice (label frames
-    from localCheckpoint have no Catalyst statistics, so the planner
-    would otherwise sort-merge every one of these).  Bit-identical
-    results (integer counts/sums); larger graphs keep sort-merge.
+    The label table takes the :func:`_node_broadcast` join hint into
+    the degree join and both endpoint joins; the edge count that gates
+    it is the ``m`` the arithmetic needs anyway, and the node count is
+    one cheap job over the caller's (usually checkpointed) label frame.
 
     Output: ``community``, ``n_members``, ``internal_edges``,
     ``degree_sum`` (bigints), ``contribution`` (double).  The canonical
@@ -1511,48 +1356,16 @@ def modularity(
     DuckDB exact) rather than fail loudly; enable ANSI mode
     (``spark.sql.ansi.enabled``) to turn the overflow into an error.
     """
-    spark = edges.sparkSession
-    created: set[int] = set()
-    # any failure (a raise below, or a Spark action dying mid-round)
-    # must not strand this call's localCheckpoint blocks — the
-    # r11 review finding: the error path leaked `created` (the same
-    # degradation _unpersist_rdds documents for the success path)
-    try:
-        dec = "decimal(38,0)"
-        u, v = F.col(src_col), F.col(dst_col)
-        e = (
-            edges.where(u != v)
-            .select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        created |= _pinned_rdd_ids(e)
+    dec = "decimal(38,0)"
+    with _owned_checkpoints(edges.sparkSession) as pins:
+        e = pins.pin(_undirected_edges(edges, src_col, dst_col))
         lab = labels.select(
             F.col(node_col).alias("node"), F.col(label_col).alias("community")
         )
-        # the edge count is needed by the modularity arithmetic anyway —
-        # collect it once (exact integer; inlined as a literal below, the
-        # identical value the old 1-row agg frame carried) and let it
-        # double as the dispatch scalar, so the edge-volume gate costs no
-        # extra job; the label count is one cheap job over the caller's
-        # (usually checkpointed) label frame
+        # exact integer, inlined as a literal into the arithmetic below
         m_val = e.count()
-        # the edge gate short-circuits first: small graphs skip the
-        # label-count job entirely
-        bc = (
-            F.broadcast
-            if (
-                m_val >= broadcast_min_edge_rows
-                and lab.count() <= broadcast_nodes_max
-            )
-            else (lambda df: df)
-        )
-        deg = (
-            e.select(F.col("u").alias("node"))
-            .unionAll(e.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
+        bc = _node_broadcast(m_val, lab.count)
+        deg = _degrees(e)
         dc = (
             bc(lab).join(deg, "node")
             .groupBy("community")
@@ -1574,7 +1387,7 @@ def modularity(
             - F.col("degree_sum") * F.col("degree_sum")
         )
         den = F.lit(4).cast(dec) * m * m
-        out = (
+        return (
             dc.join(mc, "community", "left")
             .select(
                 "community",
@@ -1587,11 +1400,6 @@ def modularity(
             )
             .localCheckpoint()
         )
-        _unpersist_rdds(spark, created - _pinned_rdd_ids(out))
-        return out
-    except BaseException:
-        _unpersist_rdds(spark, created)
-        raise
 
 
 def sql_modularity(

@@ -79,8 +79,8 @@ def register(name: str, sql: str | None, doc: str = ""):
 #   - q69/q185: the co-purchase prologue re-spreads the 1-partition
 #     checkpointed distinct before the pair fanout (2.51 s -> 0.87 s),
 #     and pagerank/PPR chain rounds lazily between lineage cuts
-#     (small_checkpoint_every=2 on dangling-free broadcast paths;
-#     bit-equal, 51->46 / 53->48 scheduler jobs);
+#     (components._CUT_EVERY=2 on dangling-free broadcast paths up to
+#     _CHAIN_MAX_EDGE_ROWS; bit-equal, 51->46 / 53->48 scheduler jobs);
 #   - q188/q189/q196: LPA's per-round label-update join (a row-wise
 #     no-op on the internally symmetric edge list) is removed and
 #     rounds chain at cadence 2 (bit-equal, trajectory-test-pinned);
@@ -8028,32 +8028,34 @@ SELECT node, round(rank, 6) + 0.0 AS rank FROM {prev}
 def q185_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "events", parallelize=True)
     k = F.get_json_object(F.col("props"), "$.k").cast("int")
-    purchases = (
-        e.where(F.col("event_type") == "purchase")
-        .select(k.alias("k"), "user_id")
-        .distinct()
-        .localCheckpoint()
-    )
-    # r11: parallelize the single-partition pair fanout — q69's comment
-    # (the checkpointed distinct is 1 AQE-coalesced partition, which
-    # serialized the 3.5M-row fanout on one task; the respread is gated
-    # on partitions < cores so a corpus-scale table never pays it)
-    par = spark.sparkContext.defaultParallelism
-    pk = (
-        purchases.repartition(par, "k")
-        if purchases.rdd.getNumPartitions() < par
-        else purchases
-    )
-    edges = (
-        pk.alias("a")
-        .join(pk.alias("b"), "k")
-        .where(F.col("a.user_id") != F.col("b.user_id"))
-        .select(F.col("a.user_id").alias("src"), F.col("b.user_id").alias("dst"))
-    )
-    seeds = purchases.select(F.col("user_id").alias("node")).where(
-        F.col("node") < 20
-    )
-    return personalized_pagerank(edges, seeds, n_iter=10)
+    with _owned_checkpoints(spark) as pins:
+        # q69's prologue pin: released once the eager operator's output
+        # is materialized
+        purchases = pins.pin(
+            e.where(F.col("event_type") == "purchase")
+            .select(k.alias("k"), "user_id")
+            .distinct()
+        )
+        # r11: parallelize the single-partition pair fanout — q69's comment
+        # (the checkpointed distinct is 1 AQE-coalesced partition, which
+        # serialized the 3.5M-row fanout on one task; the respread is gated
+        # on partitions < cores so a corpus-scale table never pays it)
+        par = spark.sparkContext.defaultParallelism
+        pk = (
+            purchases.repartition(par, "k")
+            if purchases.rdd.getNumPartitions() < par
+            else purchases
+        )
+        edges = (
+            pk.alias("a")
+            .join(pk.alias("b"), "k")
+            .where(F.col("a.user_id") != F.col("b.user_id"))
+            .select(F.col("a.user_id").alias("src"), F.col("b.user_id").alias("dst"))
+        )
+        seeds = purchases.select(F.col("user_id").alias("node")).where(
+            F.col("node") < 20
+        )
+        return personalized_pagerank(edges, seeds, n_iter=10)
 
 
 from spark_hadoop_automation_in_cloud_spark.operators.components import (  # noqa: E402
@@ -8162,33 +8164,22 @@ from spark_hadoop_automation_in_cloud_spark.operators.components import (  # noq
 def q189_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_hadoop_automation_in_cloud_spark.operators.components import (
         _pinned_rdd_ids,
-        _unpersist_rdds,
     )
 
     li = read_table(spark, sf_dir, "lineitem")
-    # checkpoint the basket self-join ONCE: lazily it would re-run inside
-    # BOTH label_propagation and modularity (the family's dominant cost —
-    # shuffle_slope NOTES; r11 review finding)
-    edges = _copurchase_edges(li).localCheckpoint()
-    # caller-level checkpoints need the operator-level error-path
-    # discipline too: if label_propagation or modularity raises mid-run,
-    # the edges (and labels, if it exists yet) blocks must not outlive
-    # this call (r08 ADVICE item 1)
-    created = _pinned_rdd_ids(edges)
-    try:
+    # the edge pin and LPA's label frame are released on exit, also when
+    # an operator raises; modularity's checkpointed result is the ONE
+    # pinned frame that survives the call
+    with _owned_checkpoints(spark) as pins:
+        # checkpoint the basket self-join ONCE: lazily it would re-run
+        # inside BOTH label_propagation and modularity (the family's
+        # dominant cost — shuffle_slope NOTES)
+        edges = pins.pin(_copurchase_edges(li))
         labels = label_propagation(edges, "p1", "p2", n_rounds=5).select(
             "node", "community"
         )
-        created |= _pinned_rdd_ids(labels)
-        out = modularity(edges, labels, "p1", "p2")
-    except BaseException:
-        _unpersist_rdds(spark, created)
-        raise
-    # modularity checkpointed its result, so the edge frame and the LPA
-    # label frame are fully consumed — release both (iterative-family
-    # contract: ONE pinned frame survives a queries() call, the returned)
-    _unpersist_rdds(spark, created - _pinned_rdd_ids(out))
-    return out
+        pins.pinned |= _pinned_rdd_ids(labels)
+        return modularity(edges, labels, "p1", "p2")
 
 
 @register(

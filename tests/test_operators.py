@@ -479,9 +479,10 @@ def test_approx_count_distinct_error_bound(spark, sf_dir):
         assert abs(r["approx"] - r["exact"]) <= max(3, 0.15 * r["exact"]), r
 
 
-def test_pagerank_matches_dense_power_iteration(spark):
+def test_pagerank_matches_dense_power_iteration(spark, monkeypatch):
     import numpy as np
 
+    from spark_hadoop_automation_in_cloud_spark.operators import components
     from spark_hadoop_automation_in_cloud_spark.operators.components import pagerank
 
     # 5-node graph with a hub (0), a cycle (1->2->3->1) and a dangler (4)
@@ -508,11 +509,9 @@ def test_pagerank_matches_dense_power_iteration(spark):
 
     # both join strategies must produce BIT-equal ranks: the broadcast
     # fast path (default here — 5 nodes) and the sort-merge path
-    # (forced via broadcast_nodes_max=0) run the same scalar arithmetic
-    big = {
-        r["node"]: r["rank"]
-        for r in pagerank(df, n_iter=10, broadcast_nodes_max=0).collect()
-    }
+    # (forced via _BROADCAST_NODES_MAX=0) run the same scalar arithmetic
+    monkeypatch.setattr(components, "_BROADCAST_NODES_MAX", 0)
+    big = {r["node"]: r["rank"] for r in pagerank(df, n_iter=10).collect()}
     assert big == got
 
 
@@ -1034,8 +1033,7 @@ def test_sketch_parquet_roundtrip_merge_estimate(spark, tmp_path):
 
 
 def test_iterative_operators_release_checkpoint_storage(spark):
-    """pagerank/connected_components/triangle_count/clustering_coefficient
-    must not leak localCheckpoint blocks:
+    """The graph operators must not leak localCheckpoint blocks:
     repeated calls previously pinned every intermediate frame (the edge
     checkpoint is O(|edges|)), degrading the JVM until evictions thrashed.
     Each call may keep exactly ONE new persisted RDD — the returned
@@ -1044,7 +1042,11 @@ def test_iterative_operators_release_checkpoint_storage(spark):
         _persistent_rdd_ids,
         clustering_coefficient,
         connected_components,
+        k_core,
+        label_propagation,
+        modularity,
         pagerank,
+        personalized_pagerank,
         triangle_count,
     )
 
@@ -1069,6 +1071,28 @@ def test_iterative_operators_release_checkpoint_storage(spark):
     comp = connected_components(pairs, "a", "b")
     assert comp.count() > 0
     assert len(_persistent_rdd_ids(spark)) <= n_before + 1
+
+    # the other owned-scope operators: three calls keep at most their
+    # three returned frames (set difference, as below), and earlier
+    # results stay readable after later calls released their pins
+    sym = spark.createDataFrame(
+        [(a, b) for a in range(8) for b in range(8) if a != b and (a + b) % 3],
+        "u bigint, v bigint",
+    )
+    seeds = spark.createDataFrame([(0,), (1,)], "node bigint")
+    labels = label_propagation(sym, "u", "v", n_rounds=3).select("node", "community")
+    for name, call in (
+        ("personalized_pagerank", lambda: personalized_pagerank(sym, seeds, "u", "v", n_iter=4)),
+        ("k_core", lambda: k_core(sym, "u", "v", k=2)),
+        ("label_propagation", lambda: label_propagation(sym, "u", "v", n_rounds=3)),
+        ("modularity", lambda: modularity(sym, labels, "u", "v")),
+    ):
+        base = _persistent_rdd_ids(spark)
+        results = [call() for _ in range(3)]
+        assert len(_persistent_rdd_ids(spark) - base) <= 3, name
+        first = sorted(results[0].collect())
+        assert first, name
+        assert all(sorted(r.collect()) == first for r in results), name
 
     # the eager triangle operators pin their edge list once per call and
     # release it before returning; their top-k comes back as local rows,
@@ -3363,14 +3387,16 @@ def test_label_propagation_two_triangles_bridge(spark):
         label_propagation(strs, "u", "v")
 
 
-def test_graph_broadcast_dispatch_bit_equal(spark):
+def test_graph_broadcast_dispatch_bit_equal(spark, monkeypatch):
     """The r10 join-strategy dispatch (broadcast the per-round node
     state into the edge joins when |V| fits AND the edge list is large
     enough to make its exchange the dominant cost) must be a pure plan
-    change: forcing the broadcast arm (broadcast_min_edge_rows=0) and
-    forcing the sort-merge arm (broadcast_nodes_max=0) must produce
+    change: forcing the broadcast arm (_BROADCAST_MIN_EDGE_ROWS=0) and
+    forcing the sort-merge arm (_BROADCAST_NODES_MAX=0) must produce
     identical rows for LPA, k-core and modularity."""
+    from spark_hadoop_automation_in_cloud_spark.operators import components
     from spark_hadoop_automation_in_cloud_spark.operators.components import (
+        connected_components,
         k_core,
         label_propagation,
         modularity,
@@ -3383,25 +3409,23 @@ def test_graph_broadcast_dispatch_bit_equal(spark):
     def rows(frame):
         return sorted(tuple(r) for r in frame.collect())
 
-    lpa_b = label_propagation(df, "u", "v", n_rounds=5, broadcast_min_edge_rows=0)
-    lpa_s = label_propagation(df, "u", "v", n_rounds=5, broadcast_nodes_max=0)
-    assert rows(lpa_b) == rows(lpa_s)
+    def run_all(gate: str):
+        with monkeypatch.context() as m:
+            m.setattr(components, gate, 0)
+            lpa = label_propagation(df, "u", "v", n_rounds=5)
+            return [
+                rows(lpa),
+                rows(k_core(df, "u", "v", k=3)),
+                rows(modularity(df, lpa, "u", "v")),
+                rows(connected_components(df, "u", "v")),
+            ]
 
-    assert rows(k_core(df, "u", "v", k=3, broadcast_min_edge_rows=0)) == rows(
-        k_core(df, "u", "v", k=3, broadcast_nodes_max=0)
-    )
-
-    assert rows(
-        modularity(df, lpa_b, "u", "v", broadcast_min_edge_rows=0)
-    ) == rows(modularity(df, lpa_s, "u", "v", broadcast_nodes_max=0))
-
-    from spark_hadoop_automation_in_cloud_spark.operators.components import (
-        connected_components,
-    )
-
-    assert rows(
-        connected_components(df, "u", "v", broadcast_min_edge_rows=0)
-    ) == rows(connected_components(df, "u", "v", broadcast_nodes_max=0))
+    # open gate vs closed gate, operator by operator
+    ops = ("label_propagation", "k_core", "modularity", "connected_components")
+    opened = run_all("_BROADCAST_MIN_EDGE_ROWS")
+    closed = run_all("_BROADCAST_NODES_MAX")
+    for op, b, s in zip(ops, opened, closed):
+        assert b == s, op
 
 
 def test_exact_substring_dedup_keeper_semantics(spark):
@@ -3563,6 +3587,7 @@ def test_iterative_operators_release_checkpoints_on_error(spark):
         _persistent_rdd_ids,
         connected_components,
         k_core,
+        personalized_pagerank,
     )
 
     k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
@@ -3585,6 +3610,81 @@ def test_iterative_operators_release_checkpoints_on_error(spark):
     with _pytest.raises(RuntimeError, match="converge"):
         connected_components(long_chain, "a", "b", max_rounds=2)
     assert _persistent_rdd_ids(spark) - base == set()
+
+    # PPR's no-seed check fires after the edge and node-state pins
+    orphan = spark.createDataFrame([(99,)], "node bigint")
+    base = _persistent_rdd_ids(spark)
+    with _pytest.raises(ValueError, match="no seed"):
+        personalized_pagerank(df, orphan, "u", "v")
+    assert _persistent_rdd_ids(spark) - base == set()
+
+
+def test_chain_gate_arms_bit_equal(spark, monkeypatch):
+    """Both arms of the lineage-cut chain gate (:func:`_cut_every`) give
+    bit-equal rows: the default cadence chains rounds between cuts on
+    these small graphs, and ``_CHAIN_MAX_EDGE_ROWS = 0`` forces a cut
+    every round.  Covers pagerank with and without dangling nodes,
+    personalized_pagerank and label_propagation."""
+    from spark_hadoop_automation_in_cloud_spark.operators import components
+
+    sym = spark.createDataFrame(
+        [(a, b) for a in range(9) for b in range(9) if a != b and (a * b + a + b) % 4],
+        "src bigint, dst bigint",
+    )
+    dangling = spark.createDataFrame(
+        [(0, 1), (0, 2), (1, 2), (2, 3), (3, 1), (1, 4)], "src bigint, dst bigint"
+    )
+    seeds = spark.createDataFrame([(0,), (5,)], "node bigint")
+    calls = {
+        "pagerank": lambda: components.pagerank(sym, n_iter=7),
+        "pagerank_dangling": lambda: components.pagerank(dangling, n_iter=7),
+        "personalized_pagerank": lambda: components.personalized_pagerank(
+            sym, seeds, n_iter=7
+        ),
+        "label_propagation": lambda: components.label_propagation(
+            sym, "src", "dst", n_rounds=5
+        ),
+    }
+    pins = []
+    real_pin = components._CheckpointScope.pin
+
+    def counting_pin(self, df):
+        pins.append(1)
+        return real_pin(self, df)
+
+    monkeypatch.setattr(components._CheckpointScope, "pin", counting_pin)
+
+    def run(name):
+        pins.clear()
+        return sorted(tuple(r) for r in calls[name]().collect()), len(pins)
+
+    chained = {name: run(name) for name in calls}
+    monkeypatch.setattr(components, "_CHAIN_MAX_EDGE_ROWS", 0)
+    every_round = {name: run(name) for name in calls}
+    for name in calls:
+        assert chained[name][0] == every_round[name][0], name
+    # the dangling-free loops really took the chained arm by default
+    for name in ("pagerank", "personalized_pagerank", "label_propagation"):
+        assert chained[name][1] < every_round[name][1], name
+    # a dangling graph cuts every round on either arm
+    assert chained["pagerank_dangling"][1] == every_round["pagerank_dangling"][1]
+
+
+def test_q185_releases_its_prologue_checkpoint(spark, sf_dir):
+    """Two held q185 results leave at most their two result checkpoints
+    pinned: the prologue's purchases pin is released once the eager
+    operator's output is materialized."""
+    from spark_hadoop_automation_in_cloud_spark.operators.components import (
+        _persistent_rdd_ids,
+    )
+    from spark_hadoop_automation_in_cloud_spark.queries import (
+        q185_personalized_pagerank,
+    )
+
+    base = _persistent_rdd_ids(spark)
+    held = [q185_personalized_pagerank(spark, sf_dir) for _ in range(2)]
+    assert len(_persistent_rdd_ids(spark) - base) <= 2
+    assert all(r.count() > 0 for r in held)
 
 
 def test_owned_checkpoints_scope_releases_everything_it_pinned(spark):

@@ -578,15 +578,16 @@ def _executed_plan_descriptions(spark, fn) -> str:
     )
 
 
-def test_graph_broadcast_arm_round_plans(spark):
+def test_graph_broadcast_arm_round_plans(spark, monkeypatch):
     """r10 VERDICT item 1→r11 item 2: no registered consumer exercises
     the edge-volume-gated broadcast dispatch at driver-checked scales,
     so pin the broadcast ARM itself: forcing the gate open
-    (broadcast_min_edge_rows=0) must plan the per-round node-state joins
+    (_BROADCAST_MIN_EDGE_ROWS=0) must plan the per-round node-state joins
     of LPA, k-core, modularity and connected_components as
-    BroadcastHashJoin, and forcing it closed (broadcast_nodes_max=0)
+    BroadcastHashJoin, and forcing it closed (_BROADCAST_NODES_MAX=0)
     must keep every round sort-merge.  A dropped ``bc()`` wrap in any
     operator's round turns the open-gate arm sort-merge and fails here."""
+    from spark_hadoop_automation_in_cloud_spark.operators import components
     from spark_hadoop_automation_in_cloud_spark.operators.components import (
         connected_components,
         k_core,
@@ -598,11 +599,13 @@ def test_graph_broadcast_arm_round_plans(spark):
     edges = k4 + [(4, 10), (10, 11), (11, 12), (5, 6), (5, 7), (6, 7), (4, 5)]
     df = spark.createDataFrame(edges, "u bigint, v bigint")
 
-    def run_all(**gate):
-        lab = label_propagation(df, "u", "v", n_rounds=3, **gate)
-        k_core(df, "u", "v", k=3, **gate)
-        modularity(df, lab, "u", "v", **gate)
-        connected_components(df, "u", "v", **gate)
+    def run_all(gate: str):
+        with monkeypatch.context() as m:
+            m.setattr(components, gate, 0)
+            lab = label_propagation(df, "u", "v", n_rounds=3)
+            k_core(df, "u", "v", k=3)
+            modularity(df, lab, "u", "v")
+            connected_components(df, "u", "v")
 
     # pin the STATIC dispatch: with AQE on, the runtime would convert the
     # tiny test graph's sort-merge rounds to broadcast on observed sizes,
@@ -613,10 +616,10 @@ def test_graph_broadcast_arm_round_plans(spark):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         open_plans = _executed_plan_descriptions(
-            spark, lambda: run_all(broadcast_min_edge_rows=0)
+            spark, lambda: run_all("_BROADCAST_MIN_EDGE_ROWS")
         )
         closed_plans = _executed_plan_descriptions(
-            spark, lambda: run_all(broadcast_nodes_max=0)
+            spark, lambda: run_all("_BROADCAST_NODES_MAX")
         )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
