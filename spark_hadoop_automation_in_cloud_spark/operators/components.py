@@ -11,9 +11,11 @@ propagation with a pointer-jumping shortcut (label := label's label, the
 same doubling trick as Hash-to-Min / large-star contraction), so rounds
 needed = O(log diameter) — a 1M-hop boilerplate chain converges in ~20
 rounds, and at 100 TB that is a bounded handful of shuffles, each
-AQE-sized.  Lineage is cut every round with ``localCheckpoint`` so the
-plan doesn't grow with iterations.  If the round budget is ever exhausted
-the operator RAISES rather than returning silently-wrong labels.
+AQE-sized.  Its lineage is cut every round with ``localCheckpoint`` (the
+convergence probe reads the materialized labels); the other round loops
+here cut at the :func:`_cut_every` cadence, so no plan grows with
+iterations.  If the round budget is ever exhausted the operator RAISES
+rather than returning silently-wrong labels.
 
 Determinism: the final label of every node is exactly
 min(id over its component) — independent of iteration order, partitioning,
@@ -179,8 +181,8 @@ def _node_broadcast(edge_rows: int, count_nodes):
     sort-merge join that exchanges and sorts the EDGE list.  Broadcasting
     the ≤ |V|-row node state leaves the checkpointed edge partitions in
     place: each round is one map-side hash join plus a map-side-combined
-    aggregate (the same shape in :func:`pagerank` measured 2.0-2.2×
-    faster broadcast at 1.8M and 17.9M edges).
+    aggregate (the same shape in :func:`_power_iteration` measured
+    2.0-2.2× faster broadcast at 1.8M and 17.9M edges; OPTIMIZATION_r11.md).
 
     Why the edge gate: the broadcast spends ~2 fixed driver barriers
     (collect + ship) per round, which only pays once the avoided edge
@@ -372,6 +374,145 @@ def neardup_clusters(
     )
 
 
+def _power_iteration(
+    edges: DataFrame,
+    seeds: DataFrame | None,
+    src_col: str,
+    dst_col: str,
+    seed_col: str,
+    n_iter: int,
+    damping: float,
+    per_iter_round_dp: int | None,
+    assume_distinct_edges: bool,
+) -> DataFrame:
+    """The one power-iteration loop behind :func:`pagerank` (``seeds``
+    None: uniform teleport) and :func:`personalized_pagerank` (teleport
+    onto the seed set).  Every round is
+
+        ``rank' = base + d·(inflow + spread(dangling_mass))``
+
+    where inflow is the rank mass flowing src→dst divided by out-degree
+    and dangling mass (the rank of nodes with no out-edge) teleports like
+    the base: uniformly, ``(1−d)/n`` and ``dm/n``, or onto the seeds,
+    ``(1−d)·share`` and ``dm·share`` with ``share = 1[v∈S]/|S|``.  Each
+    mode keeps its own scalar expressions, which are the IEEE operation
+    sequences its DuckDB oracle runs (q69, q185).
+
+    Nodes are the endpoints of the non-null edges; an edge with a null
+    endpoint is dropped.  A duplicated edge would double-count its
+    contribution, so edges are distinct-ed (a full shuffle) unless
+    ``assume_distinct_edges`` — the caller's promise that the dedup was
+    already paid; there is no cheap way to verify it.
+
+    Shape: the node state ``(node, deg)`` (``deg`` 0 marks a dangling
+    node; seeded mode adds ``__is_seed``) is pinned once, and its setup
+    scalars (n, seed count, dangling flag, |E|) come from one aggregate.
+    Each round joins the pinned edges with the ``rank/deg``
+    contributions on ``src``, aggregates inflow per ``dst`` and
+    left-joins it onto the pinned state, so a round references the
+    previous ranks once — twice when there is dangling mass, whose 1-row
+    aggregate is broadcast-crossed in (a graph without dangling nodes
+    skips that job: its term is exactly 0.0).  The driver only counts
+    rounds.  Both joins broadcast their ≤ |V|-row side when
+    ``n <= _BROADCAST_NODES_MAX`` (no edge-volume gate, unlike
+    :func:`_node_broadcast`: q69 takes this arm) and plan sort-merge
+    joins otherwise.  Lineage is cut at the :func:`_cut_every` cadence on
+    the broadcast arm (chainable when there is no dangling mass) and
+    every ``_CUT_EVERY`` rounds on the sort-merge arm; the last round
+    materializes straight into the returned checkpoint, taken outside
+    the scope so it outlives the call.  Both arms run the identical
+    scalar arithmetic in the identical order, so their results are
+    bit-equal (pinned by tests forcing each arm).
+
+    Fixed ``n_iter``, not convergence-tested: a deterministic round
+    count is what makes two runs comparable.
+
+    ``per_iter_round_dp``: snap each round's ranks to this many decimal
+    places.  Engines sum each node's inflow in different orders, and the
+    resulting last-ulp differences grow over damped rounds; a 9dp grid
+    re-synchronizes the trajectories, since the inflow sum's ~1e-18
+    wobble makes a snap disagreement ~1e-9 per node-round unlikely — not
+    a guarantee, but negligible against the 6dp output.  ``None`` keeps
+    raw doubles.
+
+    Output: node, rank (double, 6dp).
+    """
+    d = float(damping)
+    with _owned_checkpoints(edges.sparkSession) as pins:
+        e = edges.select(
+            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+        ).where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        if not assume_distinct_edges:
+            e = e.distinct()
+        e = pins.pin(e)
+        # one map-side-combined aggregate over the endpoints: src endpoints
+        # count toward out-degree, dst endpoints only assert existence
+        state = (
+            e.select(F.col("src").alias("node"), F.lit(1).alias("__is_src"))
+            .unionByName(e.select(F.col("dst").alias("node"), F.lit(0).alias("__is_src")))
+            .groupBy("node")
+            .agg(F.sum("__is_src").alias("deg"))
+        )
+        scalars = [
+            F.count(F.lit(1)).alias("n"),
+            F.max(F.when(F.col("deg") == 0, 1).otherwise(0)).alias("hd"),
+            # total out-degree == |E|, feeds the chain gate
+            F.coalesce(F.sum("deg"), F.lit(0)).alias("te"),
+        ]
+        if seeds is not None:
+            seed_nodes = seeds.select(F.col(seed_col).alias("node")).distinct()
+            state = state.join(
+                F.broadcast(seed_nodes.withColumn("__sflag", F.lit(1))), "node", "left"
+            ).select(
+                "node", F.coalesce(F.col("__sflag"), F.lit(0)).alias("__is_seed"), "deg"
+            )
+            scalars.append(F.sum("__is_seed").alias("ns"))
+        state = pins.pin(state)
+        setup = state.agg(*scalars).first()
+        n = int(setup["n"])
+        has_dangling = bool(setup["hd"])
+        if seeds is None:
+            start, base, spread = F.lit(1.0 / n), F.lit((1.0 - d) / n), lambda dm: dm / n
+        else:
+            if not setup["ns"]:
+                raise ValueError("personalized_pagerank: no seed is present in the graph")
+            share = F.col("__is_seed").cast("double") / float(setup["ns"])
+            start, base, spread = share, (1.0 - d) * share, lambda dm: dm * share
+        small = n <= _BROADCAST_NODES_MAX
+        bc = F.broadcast if small else (lambda df: df)
+        # the dangling aggregate is a second reference to the rank frame
+        cut_every = _cut_every(not has_dangling, int(setup["te"])) if small else _CUT_EVERY
+        # the first round reads the pinned state plus a projection;
+        # pinning it would only copy the state
+        ranks = state.select(*state.columns, start.alias("rank"))
+        for i in range(n_iter):
+            contrib = ranks.where(F.col("deg") > 0).select(
+                F.col("node").alias("src"), (F.col("rank") / F.col("deg")).alias("__c")
+            )
+            inflow = (
+                e.join(bc(contrib), "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum("__c").alias("__inflow"))
+            )
+            nxt = state.join(bc(inflow), "node", "left")
+            damped = F.coalesce(F.col("__inflow"), F.lit(0.0))
+            if has_dangling:
+                dangling = ranks.where(F.col("deg") == 0).agg(
+                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
+                )
+                nxt = nxt.crossJoin(F.broadcast(dangling))
+                damped = damped + spread(F.col("__dm"))
+            rank = base + d * damped
+            if per_iter_round_dp is not None:
+                rank = F.round(rank, per_iter_round_dp)
+            ranks = nxt.select(*state.columns, rank.alias("rank"))
+            if (i + 1) % cut_every == 0 and i < n_iter - 1:
+                ranks = pins.pin(ranks)
+        return ranks.select(
+            "node", (F.round("rank", 6) + F.lit(0.0)).alias("rank")
+        ).localCheckpoint()
+
+
 def pagerank(
     edges: DataFrame,
     src_col: str = "src",
@@ -381,167 +522,38 @@ def pagerank(
     per_iter_round_dp: int | None = None,
     assume_distinct_edges: bool = False,
 ) -> DataFrame:
-    """Power-iteration PageRank over a directed edge list.
+    """PageRank over a directed edge list: :func:`_power_iteration` with a
+    uniform teleport; dangling mass spreads over all nodes.  Output:
+    node, rank (6dp; Σ rank ≈ 1)."""
+    return _power_iteration(
+        edges, None, src_col, dst_col, "node", n_iter, damping,
+        per_iter_round_dp, assume_distinct_edges,
+    )
 
-    ``assume_distinct_edges``: a duplicated edge would double-count its
-    rank contribution, so the input is distinct-ed defensively — a full
-    shuffle of the edge list.  Callers that construct edges with their own
-    ``.distinct()`` (the common case: any derived co-occurrence graph)
-    pass True to skip that redundant shuffle; the setup then only scans
-    the input once to checkpoint it.  Correctness is entirely the
-    caller's promise — there is no cheap way to verify it.
 
-    Same driver-role contract as :func:`connected_components`: every round
-    is one distributed join+aggregate (rank mass flows src→dst divided by
-    out-degree), the driver only counts rounds.  The rank state carries
-    each node's out-degree (``nd`` below), so the loop joins ranks
-    straight to the RAW edge list — no per-round rank⋈degree chain — and
-    dangling mass (nodes with no out-edges) is a filter-scan of the rank
-    state itself, not a join: one 1-row aggregate broadcast-crossed back
-    in, no collect, no driver math.
-
-    Join strategy is picked ONCE from ``n = |nodes|`` (a scalar the driver
-    already needs for the 1/n terms):
-
-    - ``n <= _BROADCAST_NODES_MAX`` — the rank frame is broadcast into the
-      edge join.  The big side (edges) is then never exchanged or sorted:
-      each round is one map-side hash join over the checkpointed edge
-      partitions + a map-side-combined aggregate whose exchange carries
-      at most |nodes| rows per task.  Profiled on the q69 co-purchase
-      graph at sf0.1 (1.8M edges) and its 10x replication (17.9M edges):
-      2.0-2.2x faster end-to-end than the sort-merge form at BOTH scales
-      (7.4s→3.4s, 29.8s→17.0s), with per-round cost dropping ~2.5s→
-      ~0.8s at 10x — the remaining 10x wall is the one-time linear setup
-      (edge distinct + degree build), i.e. work proportional to data, not
-      per-round overhead.  Unlike the other graph loops there is no
-      edge-volume gate (:func:`_node_broadcast`): q69 takes this arm.
-      Rounds cut lineage at the :func:`_cut_every` cadence, chainable
-      when the graph has no dangling mass (the total edge count is read
-      for free from the setup aggregate's degree sum).
-    - larger graphs — sort-merge join, cut every ``_CUT_EVERY`` rounds.
-      On either path the final round materializes straight into the
-      returned (6dp-rounded) checkpoint.
-
-    Both paths run the IDENTICAL scalar arithmetic in the identical
-    order (rank/deg contributions, damped sum, optional per-round
-    rounding), so results are bit-equal regardless of which is taken —
-    pinned by tests/test_operators.py running the dense-power-iteration
-    fixture against both.
-
-    Local wall floor (measured 2026-08-14, q69 graph, 1.8M edges, 32
-    cores): fully UNROLLING all 10 rounds into one lazy plan (no
-    checkpoints, single action) is bit-identical and saved <20%
-    (3.5-4.4s vs ~4.5s loop); a join-free prototype that inlined the
-    rank state as a foldable ``from_json`` array literal (the bloom
-    idiom — no broadcast exchange, no checkpoint, one aggregate job +
-    a ≤|nodes|-row collect per round) still cost 0.28-0.33s/round vs
-    the broadcast form's ~0.35s.  So the per-round floor is the JOB
-    itself — task scheduling plus the full edge-partition scan feeding
-    the aggregate — with the BroadcastExchange contributing only
-    ~0.06s; power iteration's data dependence makes those rounds
-    inherently sequential.  The literal-map form was rejected on that
-    measurement: ~0.7s total saving, a 2.3s one-time node-index pass,
-    driver-resident rank state (unbounded in |nodes|, unlike k-means'
-    k·dim model), and a measured 1-ulp 6dp divergence on one node.  On
-    a real cluster the per-round term is the edge scan+join, which the
-    shipped forms already minimize, so the loop (simpler, resumable,
-    bounded plans) stays.
-
-    Fixed ``n_iter`` (not convergence-tested): PageRank mass moves <1%
-    after ~10 damped rounds on social-shaped graphs, and a deterministic
-    round count is what makes two runs comparable.  Output:
-    node, rank (rounded 6dp; Σ rank = 1).
-
-    ``per_iter_round_dp``: round each iteration's ranks to this many
-    decimal places.  The per-round float summation ORDER differs between
-    engines (Spark sums inflow in partition order, a sequential engine in
-    scan order) — last-ulp differences that 10 damped rounds then amplify.
-    Snapping every iteration re-synchronizes the trajectories: with
-    identical scalar arithmetic on both sides (see q69's oracle), the only
-    per-round noise is the inflow sum's ~1e-18 absolute wobble, so a 9dp
-    grid makes a cross-engine snap disagreement ~1e-9-per-node-round
-    unlikely — not a guarantee, but negligible against the oracle's 6dp
-    output rounding.  The perturbation itself (<5e-10/round) sits far
-    below PageRank's meaningful resolution.  ``None`` keeps raw doubles.
-    """
-    # every intermediate checkpoint (edge frame, node state, the per-round
-    # rank snapshots) is owned by the scope and released on the way out,
-    # also when a Spark action dies mid-round
-    with _owned_checkpoints(edges.sparkSession) as pins:
-        e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        if not assume_distinct_edges:
-            e = e.distinct()
-        # edge construction may be expensive; it feeds 2 setup frames + the loop
-        e = pins.pin(e)
-        # node state: (node, deg) — deg NULL marks a dangling node.  Carrying
-        # deg inside the rank frame removes both per-round joins the old shape
-        # paid (rank⋈degree for contributions, rank⋈dangling for the mass).
-        # Built in ONE map-side-combined aggregation over the edge endpoints
-        # (src endpoints count toward degree, dst endpoints only assert node
-        # existence) — the previous distinct-union ⋈ degree-aggregate shape
-        # paid two exchanges and a join for the identical (node, deg) rows.
-        nd = pins.pin(
-            e.select(F.col("src").alias("node"), F.lit(1).alias("__is_src"))
-            .unionByName(e.select(F.col("dst").alias("node"), F.lit(0).alias("__is_src")))
-            .groupBy("node")
-            .agg(F.sum("__is_src").alias("__deg_raw"))
-            .select(
-                "node",
-                F.when(F.col("__deg_raw") > 0, F.col("__deg_raw")).alias("deg"),
-            )
-        )
-        # BOTH one-time setup scalars (node count for the 1/n terms; the
-        # dangling flag that skips the per-round dangling-mass job on
-        # symmetric graphs — adding the exact-zero dm/n term was a no-op
-        # in IEEE arithmetic anyway) ride ONE aggregate over the
-        # checkpointed node state instead of a count job + a filter-scan
-        # job (r10: one fewer setup action per call, same values)
-        setup = nd.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.when(F.col("deg").isNull(), 1).otherwise(0)).alias("hd"),
-            # total out-degree == |E| — free here, feeds the chain gate
-            F.coalesce(F.sum("deg"), F.lit(0)).alias("te"),
-        ).first()
-        n = int(setup["n"])
-        has_dangling = bool(setup["hd"])
-        total_edges = int(setup["te"])
-        small = n <= _BROADCAST_NODES_MAX
-        # the first round reads the checkpointed node state plus a literal;
-        # pinning that projection would only copy nd
-        ranks = nd.select("node", "deg", F.lit(1.0 / n).alias("rank"))
-        # the dangling aggregate is a second reference to the rank frame
-        cut_every = _cut_every(not has_dangling, total_edges) if small else _CUT_EVERY
-        for i in range(n_iter):
-            r = F.broadcast(ranks) if small else ranks
-            contribs = (
-                r.join(e, r.node == e.src)
-                .select(F.col("dst").alias("node"), (r.rank / r.deg).alias("c"))
-                .groupBy("node")
-                .agg(F.sum("c").alias("inflow"))
-            )
-            inflow = F.coalesce(F.col("inflow"), F.lit(0.0))
-            # contribs is at most |nodes| rows post-aggregate — on the small
-            # path broadcast it too, so the rank update never exchanges nd
-            nxt = nd.join(F.broadcast(contribs) if small else contribs, "node", "left")
-            if has_dangling:
-                dangling = (
-                    ranks.where(F.col("deg").isNull())
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
-                )
-                nxt = nxt.crossJoin(F.broadcast(dangling))
-                new_rank = F.lit((1.0 - damping) / n) + damping * (
-                    inflow + F.col("dm") / n
-                )
-            else:
-                new_rank = F.lit((1.0 - damping) / n) + damping * inflow
-            if per_iter_round_dp is not None:
-                new_rank = F.round(new_rank, per_iter_round_dp)
-            ranks = nxt.select("node", "deg", new_rank.alias("rank"))
-            if (i + 1) % cut_every == 0 and i < n_iter - 1:
-                ranks = pins.pin(ranks)
-        # the last round materializes straight into the returned frame's OWN
-        # checkpoint, taken outside the scope so that it outlives the call
-        return ranks.select("node", F.round("rank", 6).alias("rank")).localCheckpoint()
+def personalized_pagerank(
+    edges: DataFrame,
+    seeds: DataFrame,
+    src_col: str = "src",
+    dst_col: str = "dst",
+    seed_col: str = "node",
+    n_iter: int = 10,
+    damping: float = 0.85,
+    per_iter_round_dp: int | None = 9,
+    assume_distinct_edges: bool = False,
+) -> DataFrame:
+    """Personalized PageRank: :func:`_power_iteration` with the teleport,
+    and the dangling mass, landing on the seed set ``seeds[seed_col]``
+    instead of uniformly — "important FROM HERE" (recommendation
+    candidates, local communities) where :func:`pagerank` answers
+    "important overall".  Seeds outside the graph are ignored (the seed
+    frame is assumed cohort-sized and broadcasts into the setup join);
+    raises ValueError if no seed is in the graph (every rank would be 0 —
+    a caller bug, not a result).  Output: node, rank (6dp)."""
+    return _power_iteration(
+        edges, seeds, src_col, dst_col, seed_col, n_iter, damping,
+        per_iter_round_dp, assume_distinct_edges,
+    )
 
 
 def incremental_components(
@@ -868,150 +880,6 @@ WITH {_sql_triangle_core_ctes(edges_sql, src_col, dst_col)}
 SELECT node AS {src_col}, tri_count FROM per_node
 ORDER BY tri_count DESC, {src_col} ASC LIMIT {topk}
 """
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    seed_col: str = "node",
-    n_iter: int = 10,
-    damping: float = 0.85,
-    per_iter_round_dp: int | None = 9,
-    assume_distinct_edges: bool = False,
-) -> DataFrame:
-    """Personalized PageRank: power iteration whose teleport lands on a
-    SEED SET instead of uniformly — the "related to THIS cohort /
-    item" primitive (recommendation candidates, local community
-    discovery) that global PageRank (:func:`pagerank`, q69) cannot
-    express: its scores answer "important overall", these answer
-    "important FROM HERE".
-
-    ``rank' = (1−d)·1[v∈S]/|S| + d·(inflow + dangling_mass·1[v∈S]/|S|)``
-    — dangling mass teleports back to the seeds (the standard PPR
-    convention), computed as a filter-aggregate of the rank state and
-    broadcast-crossed back: no collect, no driver math (q69's
-    discipline).  Like :func:`pagerank`, a one-time setup scalar
-    (``has_dangling``) skips that per-round 1-row job entirely on
-    graphs with no dangling nodes — any symmetric graph, e.g. q185's
-    contact graph — where the term is exactly 0.0 in IEEE arithmetic
-    anyway (r08 verdict item 5: the skipped job was ~1/3 of q185's
-    per-round job count).  Nodes are the edge endpoints; seeds outside
-    the graph are ignored (the seed frame is assumed cohort-sized and
-    broadcasts into the setup join); raises if no seed is in the graph
-    (every rank would be 0 — a caller bug, not a result).
-
-    Distributed shape: identical to :func:`pagerank`'s broadcast path —
-    the |nodes|-row rank frame broadcasts into one map-side hash join
-    over the checkpointed edge partitions per round, the aggregate is
-    map-side combined, and the rank update joins the CHECKPOINTED node
-    state (not the previous rank frame), so each round's plan references
-    the previous ranks exactly once: rounds cut lineage at the
-    :func:`_cut_every` cadence, chainable when the graph has no dangling
-    mass.  The final round materializes straight into the returned
-    checkpoint; every other checkpoint releases on exit,
-    ownership-scoped.  Edges
-    are distinct-ed defensively unless ``assume_distinct_edges``
-    (:func:`pagerank`'s contract verbatim: a duplicated edge would
-    double-count its contribution, so True is the CALLER's promise that
-    the dedup shuffle was already paid).  Rounds
-    snap to a 9dp grid so summation-order noise cannot accumulate
-    (the q69 oracle convention).
-
-    Output: node, rank (double, 6dp).
-    """
-    with _owned_checkpoints(edges.sparkSession) as pins:
-        e = edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        ).where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        if not assume_distinct_edges:
-            e = e.distinct()
-        e = pins.pin(e)
-        # node state in ONE map-side-combined aggregate over the edge
-        # endpoints (src endpoints count toward out-degree, dst endpoints
-        # only assert existence) — pagerank's nd shape; the previous
-        # distinct-union ⋈ degree-aggregate chain paid two extra
-        # exchanges and a join for the identical (node, deg) rows
-        nd = (
-            e.select(F.col("src").alias("node"), F.lit(1).alias("__is_src"))
-            .unionByName(
-                e.select(F.col("dst").alias("node"), F.lit(0).alias("__is_src"))
-            )
-            .groupBy("node")
-            .agg(F.sum("__is_src").alias("deg"))
-        )
-        seed_nodes = seeds.select(F.col(seed_col).alias("node")).distinct()
-        state = pins.pin(
-            nd.join(
-                F.broadcast(seed_nodes.withColumn("__sflag", F.lit(1))),
-                "node",
-                "left",
-            ).select(
-                "node",
-                F.coalesce(F.col("__sflag"), F.lit(0)).alias("__is_seed"),
-                "deg",
-            )
-        )
-        # both one-time setup scalars (seed count; the dangling flag that
-        # skips the per-round dangling-mass job — the exactly-0.0
-        # dm·seed_share term is a no-op in IEEE arithmetic on symmetric
-        # graphs) ride ONE aggregate over the checkpointed state instead
-        # of an agg job + a filter-scan job (r10: one fewer setup action)
-        setup = state.agg(
-            F.sum("__is_seed").alias("ns"),
-            F.max(F.when(F.col("deg") == 0, 1).otherwise(0)).alias("hd"),
-            # total out-degree == |E| — free here, feeds the chain gate
-            F.coalesce(F.sum("deg"), F.lit(0)).alias("te"),
-        ).first()
-        n_seeds = setup["ns"]
-        total_edges = int(setup["te"])
-        if not n_seeds:
-            raise ValueError("personalized_pagerank: no seed is present in the graph")
-        has_dangling = bool(setup["hd"])
-        seed_share = F.col("__is_seed").cast("double") / float(n_seeds)
-        # the first round reads the checkpointed state plus a projection;
-        # pinning it would only copy state
-        ranks = state.select("node", "__is_seed", "deg", seed_share.alias("rank"))
-        d = float(damping)
-        # the dangling aggregate is a second reference to the rank frame
-        cut_every = _cut_every(not has_dangling, total_edges)
-        for i in range(n_iter):
-            inflow = (
-                e.join(
-                    F.broadcast(
-                        ranks.where(F.col("deg") > 0).select(
-                            F.col("node").alias("src"),
-                            (F.col("rank") / F.col("deg")).alias("__contrib"),
-                        )
-                    ),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum("__contrib").alias("__inflow"))
-            )
-            nxt = state.join(F.broadcast(inflow), "node", "left")
-            damped = F.coalesce(F.col("__inflow"), F.lit(0.0))
-            if has_dangling:
-                dangling = ranks.where(F.col("deg") == 0).agg(
-                    F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm")
-                )
-                nxt = nxt.crossJoin(F.broadcast(dangling))
-                damped = damped + F.col("__dm") * seed_share
-            nxt = nxt.select(
-                "node",
-                "__is_seed",
-                "deg",
-                ((1.0 - d) * seed_share + d * damped).alias("rank"),
-            )
-            if per_iter_round_dp is not None:
-                nxt = nxt.withColumn("rank", F.round("rank", per_iter_round_dp))
-            ranks = nxt
-            if (i + 1) % cut_every == 0 and i < n_iter - 1:
-                ranks = pins.pin(ranks)
-        return ranks.select(
-            "node", (F.round("rank", 6) + F.lit(0.0)).alias("rank")
-        ).localCheckpoint()
 
 
 def k_core(

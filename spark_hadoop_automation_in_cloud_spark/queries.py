@@ -2597,57 +2597,63 @@ SELECT node, round(rank, 6) AS rank FROM {prev}
 """
 
 
+def _contact_graph(spark: SparkSession, sf_dir: str, pins):
+    """The user contact graph of q69/q185: ``(purchases, edges)`` where
+    ``purchases`` is the distinct ``(k, user_id)`` purchase frame, pinned
+    through ``pins`` (both self-join sides read it, so the events scan +
+    JSON parse runs once), and ``edges`` the distinct directed ``(src,
+    dst)`` pairs of users sharing a purchase key, both directions."""
+    e = read_table(spark, sf_dir, "events", parallelize=True)
+    k = F.get_json_object(F.col("props"), "$.k").cast("int")
+    purchases = pins.pin(
+        e.where(F.col("event_type") == "purchase").select(k.alias("k"), "user_id").distinct()
+    )
+    # r11: the checkpointed distinct lands in ONE AQE-coalesced partition
+    # (18.8k rows), which serialized the self-join's 3.5M-row pair fanout
+    # + partial-distinct on a single task (measured 2.5 s of q69's 7 s).
+    # Re-spreading the small frame across the cluster's cores (one cheap
+    # 19k-row exchange, shared by both join sides via ReusedExchange)
+    # parallelizes the fanout: 2.51 s → 0.87 s.  GATED on the pathology
+    # (fewer partitions than cores): a corpus-scale purchases table
+    # already carries ≥cores partitions and must not pay a redundant
+    # exchange — the join then plans its own k-exchange exactly as
+    # before.  Both the spread count and the gate read the cluster
+    # (defaultParallelism), never a local constant.
+    par = spark.sparkContext.defaultParallelism
+    pk = (
+        purchases.repartition(par, "k")
+        if purchases.rdd.getNumPartitions() < par
+        else purchases
+    )
+    edges = (
+        pk.alias("a")
+        .join(pk.alias("b"), "k")
+        .where(F.col("a.user_id") != F.col("b.user_id"))
+        .select(F.col("a.user_id").alias("src"), F.col("b.user_id").alias("dst"))
+        .distinct()
+    )
+    return purchases, edges
+
+
 @register(
     "q69_pagerank",
     _pagerank_oracle_sql(n_iter=10),
     doc="PageRank over the user contact graph (users sharing a purchase "
     "key, edges both directions): 10 damped power-iteration rounds, "
-    "each one distributed join+aggregate with per-round localCheckpoint "
-    "lineage cuts; dangling mass redistributed via a 1-row broadcast, "
-    "no driver-side math. The influence-scoring companion to q39's "
-    "connected components on the same iterative-dataflow skeleton. "
+    "each one distributed join+aggregate, localCheckpoint lineage cuts "
+    "every 2 rounds at bench scale (components._cut_every); dangling "
+    "mass redistributed via a 1-row broadcast, no driver-side math. The "
+    "influence-scoring companion to q39's connected components on the "
+    "same iterative-dataflow skeleton. "
     "Oracle: iteration-unrolled CTE chain with identical IEEE-double "
     "scalar arithmetic forced on both engines; ranks snap to a 9dp grid "
     "per round so summation-order noise cannot accumulate.",
 )
 def q69_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_table(spark, sf_dir, "events", parallelize=True)
-    k = F.get_json_object(F.col("props"), "$.k").cast("int")
+    # pagerank is eager, so the prologue's pin is released once its
+    # output is materialized
     with _owned_checkpoints(spark) as pins:
-        # both sides of the self-join consume this frame — checkpoint so
-        # the events scan + JSON parse runs once, not twice; pagerank is
-        # eager, so the pin is released once its output is materialized
-        purchases = pins.pin(
-            e.where(F.col("event_type") == "purchase")
-            .select(k.alias("k"), "user_id")
-            .distinct()
-        )
-        # r11: the checkpointed distinct lands in ONE AQE-coalesced partition
-        # (18.8k rows), which serialized the self-join's 3.5M-row pair fanout
-        # + partial-distinct on a single task (measured 2.5 s of q69's 7 s).
-        # Re-spreading the small frame across the cluster's cores (one cheap
-        # 19k-row exchange, shared by both join sides via ReusedExchange)
-        # parallelizes the fanout: 2.51 s → 0.87 s.  GATED on the pathology
-        # (fewer partitions than cores): a corpus-scale purchases table
-        # already carries ≥cores partitions and must not pay a redundant
-        # exchange — the join then plans its own k-exchange exactly as
-        # before.  Both the spread count and the gate read the cluster
-        # (defaultParallelism), never a local constant.
-        par = spark.sparkContext.defaultParallelism
-        pk = (
-            purchases.repartition(par, "k")
-            if purchases.rdd.getNumPartitions() < par
-            else purchases
-        )
-        edges = (
-            pk.alias("a")
-            .join(pk.alias("b"), "k")
-            .where(F.col("a.user_id") != F.col("b.user_id"))
-            .select(F.col("a.user_id").alias("src"), F.col("b.user_id").alias("dst"))
-            .distinct()
-        )
-        # edges are .distinct() two lines up — skip pagerank's defensive
-        # re-distinct (a full edge shuffle)
+        _, edges = _contact_graph(spark, sf_dir, pins)
         return pagerank(edges, n_iter=10, per_iter_round_dp=9, assume_distinct_edges=True)
 
 
@@ -8016,9 +8022,10 @@ SELECT node, round(rank, 6) + 0.0 AS rank FROM {prev}
     "components.py personalized_pagerank): q69's power iteration with "
     "the teleport landing on users 0-19 instead of uniformly — scores "
     "answer 'important FROM HERE', the related-items / local-community "
-    "primitive global PageRank cannot express. Same broadcast-rank "
-    "iteration shape (|nodes|-row frame into one map-side hash join "
-    "over checkpointed edges per round, ownership-scoped checkpoint "
+    "primitive global PageRank cannot express. q69's contact graph and "
+    "power-iteration kernel (one map-side hash join of the |nodes|-row "
+    "contributions over the checkpointed edges per round, lineage cut "
+    "at q69's cadence, ownership-scoped checkpoint "
     "release), dangling mass teleports to the seeds via a 1-row "
     "filter-aggregate broadcast (identically zero on this symmetric "
     "graph — the oracle omits the exact-0.0 term, the operator keeps "
@@ -8026,36 +8033,12 @@ SELECT node, round(rank, 6) + 0.0 AS rank FROM {prev}
     "unrolled-CTE conventions with the seed-share base.",
 )
 def q185_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_table(spark, sf_dir, "events", parallelize=True)
-    k = F.get_json_object(F.col("props"), "$.k").cast("int")
+    # q69's prologue pin, released once the eager operator's output is
+    # materialized
     with _owned_checkpoints(spark) as pins:
-        # q69's prologue pin: released once the eager operator's output
-        # is materialized
-        purchases = pins.pin(
-            e.where(F.col("event_type") == "purchase")
-            .select(k.alias("k"), "user_id")
-            .distinct()
-        )
-        # r11: parallelize the single-partition pair fanout — q69's comment
-        # (the checkpointed distinct is 1 AQE-coalesced partition, which
-        # serialized the 3.5M-row fanout on one task; the respread is gated
-        # on partitions < cores so a corpus-scale table never pays it)
-        par = spark.sparkContext.defaultParallelism
-        pk = (
-            purchases.repartition(par, "k")
-            if purchases.rdd.getNumPartitions() < par
-            else purchases
-        )
-        edges = (
-            pk.alias("a")
-            .join(pk.alias("b"), "k")
-            .where(F.col("a.user_id") != F.col("b.user_id"))
-            .select(F.col("a.user_id").alias("src"), F.col("b.user_id").alias("dst"))
-        )
-        seeds = purchases.select(F.col("user_id").alias("node")).where(
-            F.col("node") < 20
-        )
-        return personalized_pagerank(edges, seeds, n_iter=10)
+        purchases, edges = _contact_graph(spark, sf_dir, pins)
+        seeds = purchases.select(F.col("user_id").alias("node")).where(F.col("node") < 20)
+        return personalized_pagerank(edges, seeds, n_iter=10, assume_distinct_edges=True)
 
 
 from spark_hadoop_automation_in_cloud_spark.operators.components import (  # noqa: E402

@@ -515,6 +515,65 @@ def test_pagerank_matches_dense_power_iteration(spark, monkeypatch):
     assert big == got
 
 
+def test_personalized_pagerank_dangling_matches_dense_power_iteration(spark, monkeypatch):
+    """PPR's dangling-mass branch against an independent dense
+    computation: on the 5-node graph above (node 4 dangles), the mass
+    of the dangler teleports back to the seed {0} each round."""
+    import numpy as np
+
+    from spark_hadoop_automation_in_cloud_spark.operators import components
+
+    edges = [(0, 1), (0, 2), (1, 2), (2, 3), (3, 1), (1, 4)]
+    df = spark.createDataFrame(edges, "src int, dst int")
+    seeds = spark.createDataFrame([(0,)], "node int")
+
+    def run():
+        out = components.personalized_pagerank(df, seeds, n_iter=10, per_iter_round_dp=None)
+        return {r["node"]: r["rank"] for r in out.collect()}
+
+    got = run()
+    n, d = 5, 0.85
+    out: dict[int, int] = {}
+    for s, _ in edges:
+        out[s] = out.get(s, 0) + 1
+    share = np.zeros(n)
+    share[0] = 1.0
+    r = share.copy()
+    for _ in range(10):
+        dangling = sum(r[v] for v in range(n) if v not in out)
+        nxt = (1 - d) * share + d * dangling * share
+        for s, t in edges:
+            nxt[t] += d * r[s] / out[s]
+        r = nxt
+    for v in range(n):
+        assert abs(got[v] - r[v]) < 1e-6, (v, got[v], r[v])
+    # the sort-merge arm gives bit-equal rows
+    monkeypatch.setattr(components, "_BROADCAST_NODES_MAX", 0)
+    assert run() == got
+
+
+def test_pagerank_ignores_null_endpoint_edges(spark):
+    """An edge with a NULL endpoint adds no node and no rank mass: both
+    entry points see the graph without it."""
+    from spark_hadoop_automation_in_cloud_spark.operators.components import (
+        pagerank,
+        personalized_pagerank,
+    )
+
+    clean = [(0, 1), (1, 2), (2, 0), (2, 1)]
+    with_nulls = spark.createDataFrame(clean + [(1, None), (None, 2)], "src int, dst int")
+    clean = spark.createDataFrame(clean, "src int, dst int")
+    seeds = spark.createDataFrame([(0,)], "node int")
+
+    def ranks(frame):
+        return {r["node"]: r["rank"] for r in frame.collect()}
+
+    assert ranks(pagerank(with_nulls)) == ranks(pagerank(clean))
+    assert ranks(personalized_pagerank(with_nulls, seeds)) == ranks(
+        personalized_pagerank(clean, seeds)
+    )
+
+
 def test_approx_count_distinct_within_documented_rsd(spark, sf_dir):
     """HLL++ default rsd is 5%; pin the measured error under 3x that so a
     Spark upgrade silently degrading the sketch fails here (the full
@@ -3393,18 +3452,22 @@ def test_graph_broadcast_dispatch_bit_equal(spark, monkeypatch):
     enough to make its exchange the dominant cost) must be a pure plan
     change: forcing the broadcast arm (_BROADCAST_MIN_EDGE_ROWS=0) and
     forcing the sort-merge arm (_BROADCAST_NODES_MAX=0) must produce
-    identical rows for LPA, k-core and modularity."""
+    identical rows for LPA, k-core, modularity, connected components
+    and personalized PageRank (whose only gate is the node count, so
+    the open arm is its default broadcast)."""
     from spark_hadoop_automation_in_cloud_spark.operators import components
     from spark_hadoop_automation_in_cloud_spark.operators.components import (
         connected_components,
         k_core,
         label_propagation,
         modularity,
+        personalized_pagerank,
     )
 
     k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
     edges = k4 + [(3, 10), (10, 11), (11, 12), (4, 5), (4, 6), (5, 6), (3, 4)]
     df = spark.createDataFrame(edges, "u bigint, v bigint")
+    seeds = spark.createDataFrame([(0,), (4,)], "node bigint")
 
     def rows(frame):
         return sorted(tuple(r) for r in frame.collect())
@@ -3418,10 +3481,17 @@ def test_graph_broadcast_dispatch_bit_equal(spark, monkeypatch):
                 rows(k_core(df, "u", "v", k=3)),
                 rows(modularity(df, lpa, "u", "v")),
                 rows(connected_components(df, "u", "v")),
+                rows(personalized_pagerank(df, seeds, "u", "v", n_iter=5)),
             ]
 
     # open gate vs closed gate, operator by operator
-    ops = ("label_propagation", "k_core", "modularity", "connected_components")
+    ops = (
+        "label_propagation",
+        "k_core",
+        "modularity",
+        "connected_components",
+        "personalized_pagerank",
+    )
     opened = run_all("_BROADCAST_MIN_EDGE_ROWS")
     closed = run_all("_BROADCAST_NODES_MAX")
     for op, b, s in zip(ops, opened, closed):

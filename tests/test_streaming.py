@@ -421,133 +421,6 @@ def test_stream_events_starts_on_empty_landing_dir(spark, tmp_path):
     assert spark.sql("SELECT * FROM empty_landing").count() == 0
 
 
-def test_v2_processor_logic_equals_v1_kernel_without_spark():
-    """The v2 session kernel, exercised WITHOUT protobuf/Spark: drive
-    SessionTotalsProcessor through mock ValueState/handle objects that
-    implement the documented StatefulProcessor state API (methods:
-    exists()/get()/update()), replay the same chunked, shuffled
-    micro-batches through the v1 applyInPandasWithState kernel via a mock
-    GroupState (properties: exists/get), and require identical emitted
-    totals after every batch.  This is the logic half of the protobuf-
-    gated e2e equivalence below — it keeps the v2 module exercised in
-    environments where transformWithState's IPC dependency is absent."""
-    import pandas as pd
-
-    from spark_hadoop_automation_in_cloud_spark.streaming.stateful import (
-        _update_user_state,
-    )
-    from spark_hadoop_automation_in_cloud_spark.streaming.stateful_v2 import (
-        SessionTotalsProcessor,
-    )
-
-    class MockValueState:  # v2 API: methods
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-    class MockHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema):
-            return self.states.setdefault(name, MockValueState())
-
-    class MockGroupState:  # v1 API: properties
-        def __init__(self):
-            self._v = None
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-    # deterministic event times (epoch micros): gaps straddle the 30-min
-    # threshold, shuffled within each batch, split into uneven Arrow chunks
-    gap = 30 * 60 * 1_000_000
-    ts, t, x = [], 1_600_000_000_000_000, 123456789
-    for _ in range(60):
-        x = (1103515245 * x + 12345) % (1 << 31)
-        t += (x % (2 * gap)) + 1  # gaps in (0, 2*gap] — both sides of the cut
-        ts.append(t)
-    batches = [ts[0:25], ts[25:26], ts[26:60]]
-
-    proc = SessionTotalsProcessor()
-    proc.init(MockHandle())
-    v1_state = MockGroupState()
-    for batch in batches:
-        shuffled = batch[::-1]  # intra-batch order must not matter
-        chunks = [
-            pd.DataFrame({"ts": shuffled[:7]}),
-            pd.DataFrame({"ts": shuffled[7:]}),
-        ]
-        (v2_out,) = list(proc.handleInputRows((42,), iter(chunks), None))
-        (v1_out,) = list(
-            _update_user_state(
-                (42,),
-                iter([pd.DataFrame({"ts": shuffled[:7]}), pd.DataFrame({"ts": shuffled[7:]})]),
-                v1_state,
-            )
-        )
-        assert v2_out.to_dict("records") == v1_out.to_dict("records")
-    # sanity: the replay actually split sessions and counted every event
-    final = v2_out.iloc[0]
-    assert final["n_events"] == 60
-    assert 1 < final["n_sessions"] < 60
-    proc.close()
-
-
-def test_transform_with_state_v2_equals_v1(spark, sf_dir, events_dir):
-    """The Arbitrary State API v2 implementation must produce exactly the
-    v1 (applyInPandasWithState) totals on a full availableNow replay — a
-    cross-validation of both the new API wiring and the session kernel.
-    Skips where transformWithState's protobuf IPC dependency is absent
-    (this container); the v1 operator is the portable default."""
-    from spark_hadoop_automation_in_cloud_spark.streaming.stateful_v2 import (
-        run_session_totals_v2,
-        v2_available,
-    )
-
-    if not v2_available():
-        pytest.skip("google.protobuf unavailable - transformWithState gated off")
-
-    stream = stream_events(spark, events_dir)
-    run_session_totals_v2(stream, "v2_totals")
-    got = spark.sql(
-        "SELECT user_id, max(n_events) AS n_events, max(n_sessions) AS n_sessions "
-        "FROM v2_totals GROUP BY user_id"
-    )
-
-    v1 = (
-        user_session_totals(stream_events(spark, events_dir))
-        .writeStream.format("memory")
-        .queryName("v1_totals_ref")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    v1.awaitTermination()
-    want = spark.sql(
-        "SELECT user_id, max(n_events) AS n_events, max(n_sessions) AS n_sessions "
-        "FROM v1_totals_ref GROUP BY user_id"
-    )
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-
-
 def test_newer_than_condition_escapes_quote_chars():
     """A quote char embedded in a column name is doubled (standard SQL
     identifier escaping), so it can't break out of — or inject into — the
