@@ -13,18 +13,15 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spark_hadoop_automation_in_cloud_spark.config import resolve_job_args
-from spark_hadoop_automation_in_cloud_spark.io import read_events_window, write_datamart
-from spark_hadoop_automation_in_cloud_spark.plans.demographics import user_demographics
-from spark_hadoop_automation_in_cloud_spark.queries import nearest_city_events
+from spark_hadoop_automation_in_cloud_spark.io import write_datamart
+from spark_hadoop_automation_in_cloud_spark.queries import q17_user_demographics
 from spark_hadoop_automation_in_cloud_spark.session import session_scope
 
 
 def main(argv: list[str]) -> int:
     args = resolve_job_args(argv, "collect_demographics_job")
     with session_scope() as spark:
-        ez = nearest_city_events(spark, args.src_path)
-        windowed = read_events_window(ez, "ts", args.date, args.depth)
-        dm = user_demographics(windowed)
+        dm = q17_user_demographics(spark, args.src_path, window=(args.date, args.depth))
         write_datamart(dm, args.tgt_path, "users-demographics-dm", args.date)
     return 0
 

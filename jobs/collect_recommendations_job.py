@@ -12,48 +12,16 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
 from spark_hadoop_automation_in_cloud_spark.config import resolve_job_args
-from spark_hadoop_automation_in_cloud_spark.io import (
-    read_events_window,
-    read_table,
-    write_datamart,
-)
-from spark_hadoop_automation_in_cloud_spark.plans.recommendations import (
-    friend_recommendations,
-)
-from spark_hadoop_automation_in_cloud_spark.queries import geo_events
+from spark_hadoop_automation_in_cloud_spark.io import write_datamart
+from spark_hadoop_automation_in_cloud_spark.queries import q16_friend_recommendations
 from spark_hadoop_automation_in_cloud_spark.session import session_scope
 
 
 def main(argv: list[str]) -> int:
     args = resolve_job_args(argv, "collect_recommendations_job")
     with session_scope() as spark:
-        e = read_events_window(
-            read_table(spark, args.src_path, "events"), "ts", args.date, args.depth
-        )
-        k = F.get_json_object(F.col("props"), "$.k").cast("int")
-        subs = e.where(F.col("event_type") == "signup").select(
-            "user_id", (k % 20).alias("channel")
-        )
-        contact_src = e.where(F.col("event_type") == "purchase").select(
-            k.alias("k"), "user_id"
-        )
-        last_pos = (
-            read_events_window(geo_events(spark, args.src_path), "ts", args.date, args.depth)
-            .groupBy("user_id")
-            .agg(
-                F.max_by(
-                    F.struct(F.col("lat"), F.col("lon")),
-                    F.struct(F.col("ts"), F.col("event_id")),
-                ).alias("__p")
-            )
-            .select("user_id", F.col("__p.lat").alias("lat"), F.col("__p.lon").alias("lon"))
-        )
-        dm = friend_recommendations(
-            subs, None, last_pos, max_km=500.0, contact_memberships=contact_src
-        )
+        dm = q16_friend_recommendations(spark, args.src_path, window=(args.date, args.depth))
         write_datamart(dm, args.tgt_path, "friend-recommendations-dm", args.date)
     return 0
 

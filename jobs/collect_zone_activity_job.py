@@ -14,25 +14,15 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spark_hadoop_automation_in_cloud_spark.config import resolve_job_args
-from spark_hadoop_automation_in_cloud_spark.io import read_events_window, write_datamart
-from spark_hadoop_automation_in_cloud_spark.plans.activity_rollup import (
-    require_all_classes,
-    zone_week_month_rollup,
-)
-from spark_hadoop_automation_in_cloud_spark.queries import EVENT_CLASSES, nearest_city_events
+from spark_hadoop_automation_in_cloud_spark.io import write_datamart
+from spark_hadoop_automation_in_cloud_spark.queries import q18_zone_activity
 from spark_hadoop_automation_in_cloud_spark.session import session_scope
 
 
 def main(argv: list[str]) -> int:
     args = resolve_job_args(argv, "collect_zone_activity_job")
     with session_scope() as spark:
-        ez = nearest_city_events(spark, args.src_path).withColumnRenamed(
-            "city_id", "zone_id"
-        )
-        windowed = read_events_window(ez, "ts", args.date, args.depth)
-        dm = require_all_classes(
-            zone_week_month_rollup(windowed, EVENT_CLASSES), EVENT_CLASSES
-        )
+        dm = q18_zone_activity(spark, args.src_path, window=(args.date, args.depth))
         write_datamart(dm, args.tgt_path, "zone-activity-dm", args.date)
     return 0
 

@@ -9,9 +9,11 @@ Reference parity map (SURVEY §2.1):
   Catalyst prunes directories — ``src/helper/helper.py:169-231`` did this
   driver-side with boto3; per-read ``mergeSchema`` matches
   ``src/spark/collector.py:302-304``)
-- S2 dimension scan                  → ``read_dim`` (broadcast-tagged)
+- S2 dimension scan                  → ``read_table``; the 1-NN operator
+  broadcast-tags the dimension itself (``operators.nearest``)
 - S4 idempotent datamart sink        → ``write_datamart``
-- S5 partitioned staging sink        → ``write_partitioned``
+- S5 partitioned staging sink        → ``write_partitioned`` (the mover's
+  sink, ``sources.mover.move_raw_to_staging``)
 """
 
 from __future__ import annotations
@@ -236,22 +238,11 @@ def read_table(
     return df
 
 
-def read_dim(spark: SparkSession, path: str) -> DataFrame:
-    """Small dimension table, broadcast-tagged for join planning.
-
-    Reference: cities dict read (``src/spark/collector.py:135-166``) — it
-    relied on auto-broadcast; we state the intent explicitly.
-    """
-    return F.broadcast(spark.read.parquet(path))
-
-
 def read_events_window(
     df: DataFrame,
     date_col: str,
     end_date: dt.date | str,
     depth_days: int,
-    event_type: str | None = None,
-    type_col: str = "event_type",
 ) -> DataFrame:
     """Incremental processing window: the ``depth`` days ending at ``date``.
 
@@ -263,10 +254,7 @@ def read_events_window(
     """
     end = dt.date.fromisoformat(end_date) if isinstance(end_date, str) else end_date
     start = end - dt.timedelta(days=depth_days - 1)
-    out = df.where(F.col(date_col).cast("date").between(F.lit(start), F.lit(end)))
-    if event_type is not None:
-        out = out.where(F.col(type_col) == event_type)
-    return out
+    return df.where(F.col(date_col).cast("date").between(F.lit(start), F.lit(end)))
 
 
 def write_datamart(df: DataFrame, tgt_root: str, dm_name: str, processed_date: str) -> str:
@@ -290,33 +278,16 @@ def write_partitioned(
 ) -> str:
     """Staging sink: hive-partitioned parquet (reference
     ``src/spark/mover.py:107-112``, which used gzip; zstd is the modern
-    default — faster decode at comparable ratio)."""
+    default — faster decode at comparable ratio).
+
+    Overwrite is DYNAMIC and set on this writer only: a re-run replaces
+    just the partitions its rows land in (re-moving one day keeps the
+    others; the reference truncated the whole target), and the session's
+    ``partitionOverwriteMode`` is left as the caller set it."""
     df.write.mode("overwrite").partitionBy(*partition_by).option(
-        "compression", compression
-    ).parquet(path)
+        "partitionOverwriteMode", "dynamic"
+    ).option("compression", compression).parquet(path)
     return path
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: tuple[str, ...],
-    num_buckets: int = 64,
-    sort_cols: tuple[str, ...] | None = None,
-) -> None:
-    """Bucketed managed-table sink: pre-shuffles ONCE at write time so that
-    every later equi-join or aggregation on ``bucket_cols`` between
-    co-bucketed tables runs with NO exchange at all.
-
-    This is the storage-level answer to repeated big-table⋈big-table joins
-    at 100 TB (SURVEY §4: "bucketing for co-located joins"): the shuffle is
-    paid once during ingestion, not on every query.  Sorting within buckets
-    additionally removes the sort from sort-merge joins.
-    """
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
 
 
 def write_zordered(
@@ -334,7 +305,7 @@ def write_zordered(
     on ``a``.  The key is layout-only: rows are unchanged, no query
     result ever depends on it.  One range-exchange (sampled boundaries)
     is the entire cost — the write-time shuffle that buys scan-time
-    pruning, same trade as ``write_bucketed``.
+    pruning, same trade as ``operators.bucketing.write_bucketed``.
     """
     from spark_hadoop_automation_in_cloud_spark.functions.zorder import zorder_key
 

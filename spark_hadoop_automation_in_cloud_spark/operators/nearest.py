@@ -40,7 +40,6 @@ def nearest_neighbor_agg(
     dim_lon: str,
     dim_payload: Sequence[str] = (),
     distance_col: str = "distance_km",
-    reference_quirk: bool = False,
 ) -> DataFrame:
     """Assign each fact row its nearest dim row (haversine, min distance).
 
@@ -53,10 +52,7 @@ def nearest_neighbor_agg(
     column the caller needs downstream.
     """
     d = F.broadcast(dim)
-    dist = haversine_km(
-        F.col(fact_lat), F.col(fact_lon), F.col(dim_lat), F.col(dim_lon),
-        reference_quirk=reference_quirk,
-    )
+    dist = haversine_km(F.col(fact_lat), F.col(fact_lon), F.col(dim_lat), F.col(dim_lon))
     payload_cols = [dim_id, *dim_payload]
     joined = facts.crossJoin(d).select(
         *fact_keys,
@@ -86,7 +82,6 @@ def nearest_neighbor_fold(
     dim_lon: str,
     dim_payload: Sequence[str] = (),
     distance_col: str = "distance_km",
-    reference_quirk: bool = False,
 ) -> DataFrame:
     """STATELESS 1-NN: the dimension is inlined as literal candidate structs
     and the minimum is taken with ``least()`` — a pure projection, no join,
@@ -110,7 +105,6 @@ def nearest_neighbor_fold(
             F.col(fact_lon),
             F.lit(float(r[dim_lat])),
             F.lit(float(r[dim_lon])),
-            reference_quirk=reference_quirk,
         )
         cands.append(
             F.struct(

@@ -6,11 +6,14 @@ contact, and (c) whose latest known positions are within ``max_km``.
 Re-expression vs the reference:
 - pairs are canonical (left < right) from the start — the reference emitted
   both orders and deduplicated later (``collector.py:967-974``);
-- the contact exclusion is ONE left-anti join on the canonical pair
-  (reference did two, ``collector.py:1012-1019``);
-- the distance predicate can run as a plain post-join filter (parity) or
-  via the grid-bucketed join in ``operators.pairs.geo_bucket_join`` when
-  candidate volume explodes (SURVEY §4's 100 TB path).
+- "in contact" means sharing a key (the reference's shared purchase key):
+  the exclusion tests key-set overlap per candidate pair
+  (``operators.pairs.exclude_pairs_by_shared_key``) instead of
+  materializing the quadratic contact-pair list and anti-joining it
+  twice (``collector.py:1012-1019``);
+- the distance predicate runs inside candidate generation, as the
+  grid-bucketed join ``operators.pairs.geo_bucket_join`` (SURVEY §4's
+  100 TB path), not as a filter after the pair join.
 
 Scale: the self-join on channel is the quadratic risk; AQE skew-join is on
 session-wide, and the candidate frame never carries payload wider than the
@@ -23,7 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_hadoop_automation_in_cloud_spark.operators.pairs import (
-    exclude_pairs,
     exclude_pairs_by_shared_key,
     geo_bucket_join,
 )
@@ -31,10 +33,9 @@ from spark_hadoop_automation_in_cloud_spark.operators.pairs import (
 
 def friend_recommendations(
     subscriptions: DataFrame,  # (user_id, channel)
-    contacts: DataFrame | None,  # (user_a, user_b) any order, or None
+    contact_memberships: DataFrame,  # (user_id, k): users sharing a k are in contact
     last_positions: DataFrame,  # (user_id, lat, lon)
     max_km: float,
-    contact_memberships: DataFrame | None = None,  # (user_id, k) alternative
 ) -> DataFrame:
     """Output: left_user_id, right_user_id, distance_km (rounded 4dp).
 
@@ -69,27 +70,14 @@ def friend_recommendations(
     )
     # two shared channels yield the same (pair, distance) row twice
     cand = near.select("left_user_id", "right_user_id", "distance_km").distinct()
-    if contact_memberships is not None:
-        # exclusion relation defined by a shared key (e.g. "both purchased
-        # k"): test key-set overlap directly — linear, no pair blowup
-        cand = exclude_pairs_by_shared_key(
-            cand,
-            contact_memberships,
-            "left_user_id",
-            "right_user_id",
-            member_col="user_id",
-            key_col="k",
-        )
-    else:
-        if contacts is None:
-            raise ValueError(
-                "friend_recommendations needs an exclusion relation: pass "
-                "contacts (pair list) or contact_memberships (shared-key "
-                "membership) — got neither"
-            )
-        cand = exclude_pairs(
-            cand, contacts, "left_user_id", "right_user_id", "user_a", "user_b"
-        )
+    cand = exclude_pairs_by_shared_key(
+        cand,
+        contact_memberships,
+        "left_user_id",
+        "right_user_id",
+        member_col="user_id",
+        key_col="k",
+    )
     return cand.select(
         "left_user_id",
         "right_user_id",

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from spark_hadoop_automation_in_cloud_spark.functions import geo, hashing
 from spark_hadoop_automation_in_cloud_spark.functions.timeutils import epoch_us
-from spark_hadoop_automation_in_cloud_spark.io import read_table
+from spark_hadoop_automation_in_cloud_spark.io import read_events_window, read_table
 from spark_hadoop_automation_in_cloud_spark.operators import changes as chg
 from spark_hadoop_automation_in_cloud_spark.operators import topk as topk_ops
 from spark_hadoop_automation_in_cloud_spark.operators.nearest import nearest_neighbor_agg
@@ -216,17 +216,23 @@ SELECT CAST(n_nationkey AS INT) AS city_id,
 FROM nation
 """
 
-# Events with synthetic coordinates (the geo fact table).  parallelize=True:
-# every consumer fans out per row (×n_cities 1-NN candidates), so the
-# single-row-group scan must not stay a single task.
-def geo_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+# Events with synthetic coordinates (the geo fact table), optionally cut to
+# a (date, depth_days) window.  parallelize=True: every consumer fans out
+# per row (×n_cities 1-NN candidates), so the single-row-group scan must
+# not stay a single task.
+def geo_events(
+    spark: SparkSession, sf_dir: str, *, window: tuple[str, int] | None = None
+) -> DataFrame:
     e = read_table(spark, sf_dir, "events", parallelize=True)
+    if window is not None:
+        e = read_events_window(e, "ts", *window)
     return e.select(
         "event_id",
         "user_id",
         "event_type",
         "ts",
         "value",
+        "props",
         geo.synth_event_lat(F.col("user_id"), F.col("event_id")).alias("lat"),
         geo.synth_event_lon(F.col("user_id"), F.col("event_id")).alias("lon"),
     )
@@ -256,9 +262,11 @@ SELECT * FROM cand WHERE rnk = 1
 """
 
 
-def nearest_city_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+def nearest_city_events(
+    spark: SparkSession, sf_dir: str, *, window: tuple[str, int] | None = None
+) -> DataFrame:
     """Every event with its nearest city attached (shared building block)."""
-    ev = geo_events(spark, sf_dir)
+    ev = geo_events(spark, sf_dir, window=window)
     return nearest_neighbor_agg(
         ev,
         city_dim(spark, sf_dir),
@@ -781,24 +789,24 @@ FROM pairs WHERE dist <= 500
     "Channel/contact keys come from the JSON props column "
     "(get_json_object — the raw layer the reference's upstream parsed).",
 )
-def q16_friend_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # per-row JSON extraction + self-join fanout → don't leave the
-    # unsplittable scan single-task
-    e = read_table(spark, sf_dir, "events", parallelize=True)
+def q16_friend_recommendations(
+    spark: SparkSession, sf_dir: str, *, window: tuple[str, int] | None = None
+) -> DataFrame:
+    # ONE events scan feeds channels, contact keys and last positions
+    e = geo_events(spark, sf_dir, window=window)
     k = F.get_json_object(F.col("props"), "$.k").cast("int")
     subs = e.where(F.col("event_type") == "signup").select(
         "user_id", (k % 20).alias("channel")
-    )
-    contact_src = e.where(F.col("event_type") == "purchase").select(
-        k.alias("k"), "user_id"
     )
     # "in contact" = shares a purchase key — pass the membership relation
     # itself; the plan tests key-set overlap per candidate instead of
     # materializing the quadratic contact-pair list (exclude_pairs_by_
     # shared_key). Semantics identical to the pair-join + anti-join form.
+    contact_src = e.where(F.col("event_type") == "purchase").select(
+        k.alias("k"), "user_id"
+    )
     last_pos = (
-        geo_events(spark, sf_dir)
-        .groupBy("user_id")
+        e.groupBy("user_id")
         .agg(
             F.max_by(
                 F.struct(F.col("lat"), F.col("lon")),
@@ -807,9 +815,7 @@ def q16_friend_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("user_id", F.col("__p.lat").alias("lat"), F.col("__p.lon").alias("lon"))
     )
-    return friend_recommendations(
-        subs, None, last_pos, max_km=500.0, contact_memberships=contact_src
-    )
+    return friend_recommendations(subs, contact_src, last_pos, max_km=500.0)
 
 
 @register(
@@ -855,8 +861,12 @@ WHERE l.rnk = 1
     "local time — reference collector.py:378-560 semantics with "
     "deterministic ordering.",
 )
-def q17_user_demographics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return user_demographics(nearest_city_events(spark, sf_dir), min_stay_days=7)
+def q17_user_demographics(
+    spark: SparkSession, sf_dir: str, *, window: tuple[str, int] | None = None
+) -> DataFrame:
+    return user_demographics(
+        nearest_city_events(spark, sf_dir, window=window), min_stay_days=7
+    )
 
 
 def _sql_rollup_branch(t: str) -> str:
@@ -892,8 +902,12 @@ JOIN b_signup   USING (zone_id, week, month)
     "parity semantics (collector.py:819-823). Spark side runs the "
     "single-pass pivot form (1 shuffle) instead of 4 aggs + 3 joins.",
 )
-def q18_zone_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ez = nearest_city_events(spark, sf_dir).withColumnRenamed("city_id", "zone_id")
+def q18_zone_activity(
+    spark: SparkSession, sf_dir: str, *, window: tuple[str, int] | None = None
+) -> DataFrame:
+    ez = nearest_city_events(spark, sf_dir, window=window).withColumnRenamed(
+        "city_id", "zone_id"
+    )
     piv = zone_week_month_rollup(ez, EVENT_CLASSES)
     out = require_all_classes(piv, EVENT_CLASSES)
     cols = ["zone_id", "week", "month"]

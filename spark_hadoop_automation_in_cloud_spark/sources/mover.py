@@ -7,13 +7,15 @@ Differences from the reference, by design:
   ``maxRecordsPerFile`` / input splits;
 - zstd instead of gzip (faster decode, similar ratio);
 - dynamic partition overwrite so re-running one day doesn't truncate the
-  whole table (the reference overwrote the entire target).
+  whole table (the reference overwrote the entire target) — set on the
+  writer by ``io.write_partitioned``, never on the session.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from spark_hadoop_automation_in_cloud_spark.io import write_partitioned
 from spark_hadoop_automation_in_cloud_spark.sources.events import flatten_raw_events
 
 
@@ -23,13 +25,5 @@ def move_raw_to_staging(
     tgt_path: str,
     compression: str = "zstd",
 ) -> str:
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    raw = spark.read.parquet(src_path)
-    flat = flatten_raw_events(raw)
-    (
-        flat.write.mode("overwrite")
-        .partitionBy("event_type", "date")
-        .option("compression", compression)
-        .parquet(tgt_path)
-    )
-    return tgt_path
+    flat = flatten_raw_events(spark.read.parquet(src_path))
+    return write_partitioned(flat, tgt_path, compression=compression)

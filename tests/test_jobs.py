@@ -8,6 +8,7 @@ import importlib.util
 import os
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -19,6 +20,32 @@ def _load(job: str):
     sys.modules[job] = mod
     spec.loader.exec_module(mod)
     return mod
+
+
+@pytest.mark.parametrize(
+    "job, query, dm_name",
+    [
+        ("collect_demographics_job", "q17_user_demographics", "users-demographics-dm"),
+        ("collect_zone_activity_job", "q18_zone_activity", "zone-activity-dm"),
+        (
+            "collect_recommendations_job",
+            "q16_friend_recommendations",
+            "friend-recommendations-dm",
+        ),
+    ],
+)
+def test_datamart_job_writes_registered_query(spark, sf_dir, tmp_path, job, query, dm_name):
+    """Deployed = registered: over a window that covers every event, a
+    datamart job writes exactly its registry query's columns and rows."""
+    from spark_hadoop_automation_in_cloud_spark import queries
+
+    tgt = str(tmp_path / "dm")
+    assert _load(job).main(["2024-01-30", "30", sf_dir, tgt]) == 0
+    out = spark.read.parquet(f"{tgt}/{dm_name}/date=2024-01-30")
+    want = getattr(queries, query)(spark, sf_dir)
+    assert out.columns == want.columns
+    assert out.exceptAll(want).count() == 0
+    assert want.exceptAll(out).count() == 0
 
 
 def test_demographics_job_incremental_snapshots(spark, sf_dir, tmp_path):

@@ -82,12 +82,13 @@ def test_q24_cosine_broadcasts_query_side(spark, sf_dir):
 def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
     """Co-bucketed tables joined on the bucket key must not shuffle: the
     write-once bucket layout replaces the per-query exchange."""
-    from spark_hadoop_automation_in_cloud_spark.io import read_table, write_bucketed
+    from spark_hadoop_automation_in_cloud_spark.io import read_table
+    from spark_hadoop_automation_in_cloud_spark.operators import bucketing
 
     o = read_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    write_bucketed(o, "b_orders", ("o_custkey",), num_buckets=8, sort_cols=("o_custkey",))
-    write_bucketed(c, "b_customer", ("c_custkey",), num_buckets=8, sort_cols=("c_custkey",))
+    bucketing.write_bucketed(o, "b_orders", str(tmp_path / "b_orders"), "o_custkey", 8)
+    bucketing.write_bucketed(c, "b_customer", str(tmp_path / "b_customer"), "c_custkey", 8)
     try:
         bo, bc = spark.table("b_orders"), spark.table("b_customer")
         # force the sort-merge path (small test tables auto-broadcast

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from spark_hadoop_automation_in_cloud_spark.sources.events import RAW_SCHEMA, flatten_raw_events
@@ -63,6 +65,27 @@ def test_move_raw_to_staging_partitioned(spark, tmp_path):
     back = spark.read.parquet(tgt)
     assert back.count() == 2
     assert {"event_type", "date"} <= set(back.columns)  # partition cols recovered
+
+
+def test_move_raw_to_staging_leaves_session_conf(spark, tmp_path):
+    """The staging sink overwrites dynamically on its own writer: re-moving
+    one day replaces only that day's partition, and the session's
+    partitionOverwriteMode is what it was before the move."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "STATIC")
+    try:
+        raw = spark.createDataFrame(_raw_rows(), RAW_SCHEMA)
+        tgt = str(tmp_path / "staging")
+        raw.write.parquet(str(tmp_path / "raw"))
+        raw.where("event_type = 'message'").write.parquet(str(tmp_path / "raw_day"))
+        move_raw_to_staging(spark, str(tmp_path / "raw"), tgt)
+        move_raw_to_staging(spark, str(tmp_path / "raw_day"), tgt)
+        assert spark.conf.get(conf) == "STATIC"
+        assert os.path.isdir(f"{tgt}/event_type=subscription/date=2024-01-06")
+        assert spark.read.parquet(tgt).count() == 2
+    finally:
+        spark.conf.set(conf, before)
 
 
 def test_merge_schema_window_read(spark, tmp_path):
