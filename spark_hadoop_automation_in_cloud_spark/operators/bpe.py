@@ -35,9 +35,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_hadoop_automation_in_cloud_spark.session import owned
+
 #: vocab gates shared verbatim by the SQL twin
 MAX_WORD_LEN = 30
 WORD_RE = "^[ -~]+$"  # printable ASCII only (see module docstring)
+#: merge rounds between lineage cuts of the greedy loop
+_CHECKPOINT_EVERY = 16
 
 #: the SQL spelling of the vocab gate, defined ONCE so every twin (the
 #: training `w`, the per-group `gw`, the encode-side `encw`, the corpus
@@ -111,9 +115,7 @@ def _apply_merge(
 
 
 def _greedy_merge_loop(
-    seqs: DataFrame,
-    n_merges: int,
-    checkpoint_every: int = 16,
+    seqs: DataFrame, n_merges: int
 ) -> list[tuple[int, str, str, str, int]]:
     """The shared greedy trainer core over a ``(seq, freq)`` frame.
 
@@ -128,31 +130,22 @@ def _greedy_merge_loop(
     COMPUTE — the logical plan still deepens per round, so at hundreds
     of rounds Catalyst analysis/codegen cost grows quadratically and the
     generated fold expression outgrows codegen limits.  Every
-    ``checkpoint_every`` rounds the frame ``localCheckpoint``s (cutting
-    the plan back to a block scan, ≤ ``checkpoint_every`` folds deep);
-    the pinned blocks are released with the components-module
-    ownership-scoped discipline, including on error paths.
+    :data:`_CHECKPOINT_EVERY` rounds the frame ``localCheckpoint``s
+    (cutting the plan back to a block scan, ≤ that many folds deep) and
+    the previous cut is released.  Caches and pins are owned by one
+    ``session.owned`` scope, so none outlives the call, also on error.
     """
-    from spark_hadoop_automation_in_cloud_spark.operators.components import (
-        _pinned_rdd_ids,
-        _unpersist_rdds,
-    )
-
-    spark = seqs.sparkSession
     rules: list[tuple[int, str, str, str, int]] = []
-    prev = None
-    pinned: set[int] = set()
-    try:
+    with owned(seqs.sparkSession) as scope:
+        prev = cut = None
         for step in range(1, n_merges + 1):
-            if step % checkpoint_every == 0:
-                seqs = seqs.localCheckpoint()
-                _unpersist_rdds(spark, pinned)
-                pinned = _pinned_rdd_ids(seqs)
-                if prev is not None:
-                    prev.unpersist()
-                prev = None
+            if step % _CHECKPOINT_EVERY == 0:
+                seqs = scope.pin(seqs)
+                if cut is not None:
+                    scope.release(cut)
+                cut = seqs
             else:
-                seqs = seqs.persist()
+                seqs = scope.persist(seqs)
             top = (
                 _pair_counts(seqs)
                 .orderBy(F.col("pair_count").desc(), "left", "right")
@@ -160,24 +153,19 @@ def _greedy_merge_loop(
                 .collect()
             )
             if prev is not None:
-                prev.unpersist()
-            prev = seqs if step % checkpoint_every != 0 else None
+                scope.release(prev)
+            prev = None if seqs is cut else seqs
             if not top:
                 break
             l, r, cnt = top[0]["left"], top[0]["right"], int(top[0]["pair_count"])
             rules.append((step, l, r, l + r, cnt))
             seqs = _apply_merge(seqs, l, r)
-    finally:
-        if prev is not None:
-            prev.unpersist()
-        _unpersist_rdds(spark, pinned)
     return rules
 
 
 def bpe_merges_from_freqs(
     freqs: DataFrame,
     n_merges: int = 4,
-    checkpoint_every: int = 16,
 ) -> DataFrame:
     """Learn merge rules from a precomputed ``(word, freq)`` table —
     the seam that lets a caller pay the corpus-sized word-frequency
@@ -189,7 +177,7 @@ def bpe_merges_from_freqs(
     encode.  Same output contract as :func:`bpe_merges`."""
     seqs = freqs.select(_spaced(F.col("word")).alias("seq"), "freq")
     return freqs.sparkSession.createDataFrame(
-        _greedy_merge_loop(seqs, n_merges, checkpoint_every=checkpoint_every),
+        _greedy_merge_loop(seqs, n_merges),
         "step int, lhs string, rhs string, merged string, pair_count bigint",
     )
 
@@ -255,7 +243,6 @@ def bpe_merges_sampled(
     text_col: str,
     n_merges: int = 4,
     sample_mod: int = 16,
-    checkpoint_every: int = 16,
 ) -> DataFrame:
     """Learn merge rules on a hash-sampled vocabulary — the production
     shape for REALISTIC merge counts (10³–10⁵): :func:`bpe_merges` pays
@@ -281,7 +268,7 @@ def bpe_merges_sampled(
         _spaced(F.col("word")).alias("seq"), "freq"
     )
     return docs.sparkSession.createDataFrame(
-        _greedy_merge_loop(seqs, n_merges, checkpoint_every=checkpoint_every),
+        _greedy_merge_loop(seqs, n_merges),
         "step int, lhs string, rhs string, merged string, pair_count bigint",
     )
 

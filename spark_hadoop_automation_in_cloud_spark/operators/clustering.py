@@ -21,9 +21,9 @@ order.  Same input → same clustering, every run, any parallelism.
 Scale: per iteration one broadcast (k·dim doubles), one map-side-combined
 aggregation of k·dim partial sums.  At 100 TB with k=1024, dim=1024 the
 broadcast is 8 MB and the aggregate state is bounded by k·dim — both
-constant in corpus size.  The widened corpus is persisted
-(MEMORY_AND_DISK) for the duration of the centroid loop and unpersisted
-after — iterations read the cache, not the source, and no pin outlives
+constant in corpus size.  The widened corpus is persisted through
+``session.owned`` for the duration of the centroid loop and released
+after — iterations read the cache, not the source, and no cache outlives
 the call.
 """
 
@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from spark_hadoop_automation_in_cloud_spark.session import owned
 
 #: mean quantization: partial sums accumulate value*1e6 as DECIMAL(38,0);
 #: exact and order-independent, then one double division at the end.
@@ -81,15 +83,11 @@ def kmeans_assign(
     emb = emb.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
     # Persist the widened corpus for the iteration rescans — the standard
     # iterative-ML shape (MLlib does the same): every pass re-reads the
-    # input otherwise.  MEMORY_AND_DISK spills instead of OOMing when the
-    # corpus exceeds executor memory; unpersisted after the centroid loop
-    # so the operator leaves no cache pinned (the returned assignment plan
-    # re-derives from the source — one final scan, same as before).
-    from pyspark import StorageLevel
-
-    emb = pinned = emb.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-
+    # input otherwise.  Released after the centroid loop, so the operator
+    # leaves no cache behind (the returned assignment plan re-derives
+    # from the source — one final scan, same as before).
+    with owned(spark) as scope:
+        emb = scope.persist(emb)
         # k lowest-id seeds via orderBy+limit → TakeOrderedAndProject: a
         # distributed per-partition top-k merged on the driver.  (A global
         # row_number() window would move the WHOLE corpus to one partition —
@@ -218,11 +216,6 @@ def kmeans_assign(
                 new_centroids.setdefault(cid, vec)
             centroids = new_centroids
 
-    finally:
-        # unpersist even when a mid-loop job fails — the pin must
-        # not outlive the call (retries would stack cached copies);
-        # `pinned` is the persisted handle (emb may be its coalesce)
-        pinned.unpersist()
     cols = [id_col, "cluster_id", F.round("sq_dist", 6).alias("sq_dist")]
     if keep_vec:
         cols.append(vec_col)

@@ -25,141 +25,10 @@ recursive-CTE transitive closure + MIN).
 
 from __future__ import annotations
 
-import logging
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_log = logging.getLogger(__name__)
-
-#: pinned RDDs whose release raised (see :func:`_unpersist_rdds`)
-cleanup_failures = 0
-
-
-def _persistent_rdd_ids(spark) -> set[int]:
-    """Ids of ALL currently persisted RDDs in the session — observability
-    only (the leak regression test counts these); per-call cleanup uses
-    the ownership-scoped :func:`_pinned_rdd_ids` instead.  Best-effort:
-    empty under Spark Connect."""
-    try:
-        return {
-            int(i)
-            for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-        }
-    except Exception:
-        return set()
-
-
-def _pinned_rdd_ids(df: DataFrame) -> set[int]:
-    """Ids of the block-pinned RDDs reachable from ``df``'s physical RDD —
-    for a localCheckpoint'd frame, exactly the checkpoint block this frame
-    owns (the physical RDD is a thin wrapper; the storage-levelled
-    ancestor sits 1-2 dependency hops below it).  Walking the frame's OWN
-    dependency graph — instead of diffing the session-global persistent-
-    RDD table — means a concurrent caller's checkpoints can never be
-    attributed to this one and torn down mid-flight.  Best-effort:
-    returns empty under Spark Connect, where the JVM-side RDD graph is
-    not reachable — cleanup then simply doesn't happen."""
-    out: set[int] = set()
-    try:
-        def walk(r) -> None:
-            lvl = r.getStorageLevel()
-            if lvl.useMemory() or lvl.useDisk():
-                out.add(int(r.id()))
-            deps = r.dependencies()
-            for i in range(deps.size()):
-                walk(deps.apply(i).rdd())
-
-        walk(df._jdf.queryExecution().toRdd())
-    except Exception:
-        return set()
-    return out
-
-
-def _unpersist_rdds(spark, ids: set[int]) -> None:
-    """Drop the storage of the given persisted RDD ids (non-blocking).
-
-    Iterative operators cut lineage with ``localCheckpoint``, which PINS
-    each checkpointed frame in block storage with no DataFrame-level
-    handle to release it.  Left alone, every call leaks its intermediate
-    checkpoints (the edge frame alone is O(|edges|) memory), and repeated
-    calls degrade the whole JVM — measured on the 17.9M-edge PageRank
-    input: run-to-run wall oscillated 11s→52s as dead blocks forced
-    eviction and GC.  Operators release through
-    :func:`_owned_checkpoints`, which records each checkpoint's own
-    pinned ids via ``_pinned_rdd_ids``; a returned frame keeps its own
-    checkpoint outside that set (a localCheckpoint'd RDD must never be
-    unpersisted while still referenced — its lineage is truncated, so
-    lost blocks are unrecoverable).
-
-    A release that raises leaves its blocks pinned: each such id adds
-    one to :data:`cleanup_failures` and logs a warning, so a leak shows
-    up as a count instead of vanishing."""
-    global cleanup_failures
-    if not ids:
-        return
-    try:
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-    except Exception as exc:
-        cleanup_failures += len(ids)
-        _log.warning("could not release pinned RDDs %s: %s", sorted(ids), exc)
-        return
-    for i in ids:
-        try:
-            r = m.get(i)
-            if r is not None:
-                r.unpersist(False)
-        except Exception as exc:
-            cleanup_failures += 1
-            _log.warning("could not release pinned RDD %s: %s", i, exc)
-
-
-class _CheckpointScope:
-    """The checkpoints one operator call owns; see :func:`_owned_checkpoints`."""
-
-    def __init__(self) -> None:
-        self.pinned: set[int] = set()
-
-    def pin(self, df: DataFrame) -> DataFrame:
-        """``localCheckpoint`` ``df`` (eager) and own its blocks."""
-        out = df.localCheckpoint()
-        self.pinned |= _pinned_rdd_ids(out)
-        return out
-
-
-def _collect_local(df: DataFrame) -> DataFrame:
-    """``df``'s rows as a local frame (a ``LocalRelation``) for a
-    driver-bounded result: collected on the JVM side, so values never
-    round-trip through Python, and reading the frame schedules no job
-    over the plan it came from.  It owns no block storage, unlike a
-    checkpoint.  (A frame built by ``spark.createDataFrame`` from Python
-    rows is RDD-backed instead, and each read pays a job: measured
-    0.26-0.35 s per noop write of 50 rows against ~0.03 s for this, in a
-    local session on a 4-core host.)"""
-    spark = df.sparkSession
-    jdf = spark._jsparkSession.createDataFrame(
-        df._jdf.collectAsList(), df._jdf.schema()
-    )
-    return DataFrame(jdf, spark)
-
-
-@contextmanager
-def _owned_checkpoints(spark):
-    """Scope for an operator call's intermediate ``localCheckpoint`` blocks.
-
-    On exit, normal or by a raise, every block pinned through the scope is
-    released.  A frame the call returns must therefore not be pinned
-    through it: an eager operator either checkpoints its result itself
-    (a ``localCheckpoint`` taken outside the scope has its own blocks,
-    since the cut lineage reaches none of the scope's) or returns rows
-    collected while the pins were alive (:func:`_collect_local`)."""
-    scope = _CheckpointScope()
-    try:
-        yield scope
-    finally:
-        _unpersist_rdds(spark, scope.pinned)
-
+from spark_hadoop_automation_in_cloud_spark.session import collect_local, owned
 
 #: gates of the per-round node-state broadcast (see :func:`_node_broadcast`)
 _BROADCAST_MIN_EDGE_ROWS = 1_000_000
@@ -283,7 +152,7 @@ def connected_components(
     """
     # every intermediate checkpoint is owned by the scope; the result is
     # checkpointed outside it so that it outlives the call
-    with _owned_checkpoints(pairs.sparkSession) as pins:
+    with owned(pairs.sparkSession) as pins:
         edges = pins.pin(
             pairs.select(F.col(left_col).alias("a"), F.col(right_col).alias("b"))
             .unionByName(
@@ -438,7 +307,7 @@ def _power_iteration(
     Output: node, rank (double, 6dp).
     """
     d = float(damping)
-    with _owned_checkpoints(edges.sparkSession) as pins:
+    with owned(edges.sparkSession) as pins:
         e = edges.select(
             F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
         ).where(F.col("src").isNotNull() & F.col("dst").isNotNull())
@@ -604,7 +473,7 @@ def incremental_components(
     )
     la = labels.select(F.col(node_col).alias("__a"), F.col(comp_col).alias("__ra"))
     lb = labels.select(F.col(node_col).alias("__b"), F.col(comp_col).alias("__rb"))
-    with _owned_checkpoints(new_pairs.sparkSession) as pins:
+    with owned(new_pairs.sparkSession) as pins:
         # batch-sized; checkpointed EAGERLY so the endpoint-lookup joins
         # (the history pass) run exactly once, feeding both the reduced CC
         # and the new-node pick
@@ -618,8 +487,7 @@ def incremental_components(
                 F.col("__rb").isNull().alias("__b_new"),
             )
         )
-        reduced = connected_components(mapped, "ma", "mb", max_rounds)
-        pins.pinned |= _pinned_rdd_ids(reduced)
+        reduced = pins.adopt(connected_components(mapped, "ma", "mb", max_rounds))
         new_ids = (
             mapped.select(F.col("ma").alias("__nid")).where(F.col("__a_new"))
             .unionByName(
@@ -699,21 +567,21 @@ def triangle_count(
     exchanges never match), so a lazy plan derives the input graph three
     times.  The call pins the edge list once, collects the top-k rows
     while the pin is alive, releases it, and returns the rows as a local
-    frame (:func:`_collect_local`) — nothing stays pinned after the call,
-    and ``topk`` bounds what the driver holds.
+    frame (``session.collect_local``) — nothing stays pinned after the
+    call, and ``topk`` bounds what the driver holds.
     """
-    with _owned_checkpoints(edges.sparkSession) as pins:
+    with owned(edges.sparkSession) as pins:
         per_node, _ = _node_triangles_and_degrees(pins, edges, src_col, dst_col)
         top = (
             per_node.select(F.col("node").alias(src_col), "tri_count")
             .orderBy(F.col("tri_count").desc(), F.col(src_col).asc())
             .limit(topk)
         )
-        return _collect_local(top)
+        return collect_local(top)
 
 
 def _node_triangles_and_degrees(
-    pins: _CheckpointScope, edges: DataFrame, src_col: str, dst_col: str
+    pins, edges: DataFrame, src_col: str, dst_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """The shared enumeration core of :func:`triangle_count` and
     :func:`clustering_coefficient`: (per-node triangle counts, per-node
@@ -776,7 +644,7 @@ def clustering_coefficient(
     so the edge list is pinned once, released once the top-k rows are
     collected, and the rows return as a local frame.
     """
-    with _owned_checkpoints(edges.sparkSession) as pins:
+    with owned(edges.sparkSession) as pins:
         per_node, deg = _node_triangles_and_degrees(pins, edges, src_col, dst_col)
         joined = deg.where(F.col("d") >= min_degree).join(per_node, "node", "left")
         tri = F.coalesce(F.col("tri_count"), F.lit(0)).cast("bigint")
@@ -799,7 +667,7 @@ def clustering_coefficient(
             )
             .limit(topk)
         )
-        return _collect_local(top)
+        return collect_local(top)
 
 
 def _sql_triangle_core_ctes(edges_sql: str, src_col: str, dst_col: str) -> str:
@@ -920,7 +788,7 @@ def k_core(
     dense graphs have |V| far below 2·|E|, so the proxy would veto the
     broadcast exactly where it pays most.
     """
-    with _owned_checkpoints(edges.sparkSession) as pins:
+    with owned(edges.sparkSession) as pins:
         e = pins.pin(_undirected_edges(edges, src_col, dst_col))
         n_edges = e.count()
         bc = _node_broadcast(n_edges, lambda: _degrees(e).count())
@@ -1059,7 +927,7 @@ def label_propagation(
                 "bigint — a non-numeric id would silently become a NULL "
                 "label. Map string keys to dense bigint ids first."
             )
-    with _owned_checkpoints(edges.sparkSession) as pins:
+    with owned(edges.sparkSession) as pins:
         sym = _undirected_edges(edges, src_col, dst_col)
         e = pins.pin(
             sym.select(F.col("u").alias("src"), F.col("v").alias("dst"))
@@ -1225,7 +1093,7 @@ def modularity(
     (``spark.sql.ansi.enabled``) to turn the overflow into an error.
     """
     dec = "decimal(38,0)"
-    with _owned_checkpoints(edges.sparkSession) as pins:
+    with owned(edges.sparkSession) as pins:
         e = pins.pin(_undirected_edges(edges, src_col, dst_col))
         lab = labels.select(
             F.col(node_col).alias("node"), F.col(label_col).alias("community")

@@ -13,7 +13,7 @@ the corpus is scanned once per round with no shuffle beyond the 1-row
 gradient aggregate.  Nothing is ever collected except the ``d+2``
 gradient sums per round.  At 100 TB each round costs exactly one scan
 of the NARROW persisted feature frame — the raw-text feature derivation
-runs once, not per round (see :func:`logistic_fit`'s materialize seam);
+runs once, not per round (the caller persists it; see :func:`logistic_fit`);
 rounds are fixed (deterministic, comparable runs — the q69 convention).
 
 Cross-engine determinism (the PageRank/PPR trajectory discipline):
@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_hadoop_automation_in_cloud_spark.session import owned
+
 
 def _dot(w: list[float], feature_cols: list[str]) -> F.Column:
     """w0 + w1·f1 + … left-associated — the ONE dot-product spelling
@@ -47,42 +49,6 @@ def _dot(w: list[float], feature_cols: list[str]) -> F.Column:
     for j, c in enumerate(feature_cols, start=1):
         expr = expr + F.lit(w[j]) * F.col(c)
     return expr
-
-
-def logistic_fit(
-    features: DataFrame,
-    feature_cols: list[str],
-    label_col: str = "y",
-    n_iter: int = 10,
-    lr: float = 5.0,
-    per_iter_round_dp: int = 7,
-    materialize: bool = True,
-) -> list[float]:
-    """Fit weights ``[w0 (intercept), w1..wd]`` on a frame of double
-    features and a 0.0/1.0 double label.  Driver state = the weight
-    vector; one aggregate job per round (see module docstring).
-
-    MATERIALIZE-ONCE: the feature frame is usually derived from raw text
-    by regex-heavy expressions — re-deriving it every round would make
-    ``n_iter`` text scans out of what is mathematically ``n_iter`` scans
-    of d+1 doubles per row (~10⁻⁴ of the text bytes at 100 TB).  By
-    default the frame is persisted for the loop (memory-and-disk: spill,
-    don't recompute) and released before return — round 1 pays the one
-    text derivation, rounds 2..n read the narrow cached frame.  Callers
-    that already hold their own persist/checkpoint of ``features`` (or
-    want to keep reading it after the fit, q198) pass
-    ``materialize=False`` and own the lifecycle."""
-    if n_iter < 1:
-        raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    if materialize:
-        features = features.persist()
-    try:
-        return _gd_loop(
-            features, feature_cols, label_col, n_iter, lr, per_iter_round_dp
-        )
-    finally:
-        if materialize:
-            features.unpersist()
 
 
 def _sql_double(v: float) -> str:
@@ -105,14 +71,24 @@ def _bt(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _gd_loop(
+def logistic_fit(
     features: DataFrame,
     feature_cols: list[str],
-    label_col: str,
-    n_iter: int,
-    lr: float,
-    per_iter_round_dp: int,
+    label_col: str = "y",
+    n_iter: int = 10,
+    lr: float = 5.0,
+    per_iter_round_dp: int = 7,
 ) -> list[float]:
+    """Fit weights ``[w0 (intercept), w1..wd]`` on a frame of double
+    features and a 0.0/1.0 double label.  Driver state = the weight
+    vector; one aggregate job per round (see module docstring).
+
+    Each round scans ``features``.  When it is derived from raw text by
+    regex-heavy expressions, the caller persists it through
+    ``session.owned`` so the n rounds read the narrow cached frame
+    instead of re-deriving it (q198, :func:`logistic_train_report`)."""
+    if n_iter < 1:
+        raise ValueError(f"n_iter must be >= 1, got {n_iter}")
     # Each round's sigmoid/gradient/update is built as SQL STRINGS parsed
     # JVM-side via F.expr — the expression TREE is the same one the old
     # Column-composition form built (same left-associated dot, same
@@ -166,14 +142,12 @@ def logistic_train_report(
     """Fit + report: one row per weight (``intercept`` first, then the
     feature columns by name) with the shared training accuracy —
     ``dot ≥ 0`` vs the label, exact counts, ONE IEEE division."""
-    # one persist scope covers the fit's n_iter rounds AND the accuracy
+    spark = features.sparkSession
+    # one persisted frame serves the fit's n_iter rounds AND the accuracy
     # pass — the feature frame derives from text exactly once
-    features = features.persist()
-    try:
-        w = logistic_fit(
-            features, feature_cols, label_col, n_iter=n_iter, lr=lr,
-            materialize=False,
-        )
+    with owned(spark) as scope:
+        features = scope.persist(features)
+        w = logistic_fit(features, feature_cols, label_col, n_iter=n_iter, lr=lr)
         y = F.col(label_col)
         hit = F.when((_dot(w, feature_cols) >= 0) == (y == 1.0), 1).otherwise(0)
         acc = (
@@ -183,9 +157,6 @@ def logistic_train_report(
                 ).alias("a")
             ).first()["a"]
         )
-    finally:
-        features.unpersist()
-    spark = features.sparkSession
     rows = [("intercept", w[0], float(acc))] + [
         (c, w[j], float(acc)) for j, c in enumerate(feature_cols, start=1)
     ]

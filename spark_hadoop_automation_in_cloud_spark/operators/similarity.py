@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from spark_hadoop_automation_in_cloud_spark.functions.vectors import cosine
+from spark_hadoop_automation_in_cloud_spark.session import collect_local, owned
 
 
 def cosine_topk(
@@ -934,10 +935,11 @@ def hybrid_prf_rrf_topk(
     embeddings ride broadcasts; the dense side is one unshuffled corpus
     scan (broadcast NLJ, q24's shape); the fusion joins two tiny frames.
 
-    The driver materialization is sized by ``n_queries·k_each``: callers
-    with an UNBOUNDED query set (a streaming query log) must batch the
-    queries, or swap the collect for a ``.persist()`` — executor-side
-    reuse at the cost of owning the cache lifecycle inside the operator.
+    The driver materialization (``session.collect_local``) is sized by
+    ``n_queries·k_each``: callers with an UNBOUNDED query set (a
+    streaming query log) must batch the queries, or swap it for a
+    ``session.owned`` persist — executor-side reuse, released when the
+    scope exits.
     """
     # local import: fusion composes the lexical ranker from textops; the
     # dependency is one-way (textops never imports similarity)
@@ -945,11 +947,10 @@ def hybrid_prf_rrf_topk(
 
     if topk < 1 or k_each < 1:
         raise ValueError(f"topk/k_each must be >= 1, got {topk}/{k_each}")
-    spark = docs.sparkSession
     lex_plan = bm25_scores(docs, doc_id_col, text_col, queries, topk=k_each).select(
         "query_id", "doc_id", F.col("rank").alias("bm25_rank")
     )
-    lex = spark.createDataFrame(lex_plan.collect(), lex_plan.schema)
+    lex = collect_local(lex_plan)
     seeds = lex.where(F.col("bm25_rank") == 1).select(
         "query_id", F.col("doc_id").alias("__seed_id")
     )
@@ -1117,19 +1118,19 @@ def train_pq_codebooks(
     row-local argmins inline (centroids ship as plan literals, the q96
     inline path) and ONE dimension-exploded map-side-combined aggregation
     returns all subspaces' means together — nothing per-row reaches the
-    driver.  The widened corpus persists for the loop (MEMORY_AND_DISK)
-    and unpersists after, the clustering.py discipline.
+    driver.  The widened corpus is persisted through ``session.owned`` for
+    the loop and released after, the clustering.py discipline.
     """
     if dim % n_sub != 0:
         raise ValueError(f"dim {dim} not divisible by n_sub {n_sub}")
     width = dim // n_sub
-    from pyspark import StorageLevel
-
-    widened = corpus.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with owned(corpus.sparkSession) as scope:
+        widened = scope.persist(
+            corpus.select(
+                F.col(id_col).alias("__id"),
+                F.col(vec_col).cast("array<double>").alias("__v"),
+            )
+        )
         seed_rows = widened.orderBy("__id").limit(k).collect()
         if not seed_rows:
             raise ValueError("train_pq_codebooks: empty input")
@@ -1200,8 +1201,6 @@ def train_pq_codebooks(
                 for s in range(n_sub)
             ]
         return books
-    finally:
-        widened.unpersist()
 
 
 def pq_encode(
@@ -1683,98 +1682,93 @@ def mmr_rerank(
     # every round's anti-join, AND both sides of the pair build — without
     # the cache Spark re-executes the corpus-scale cosine_topk subtree
     # once per consumer (~k_select+3 corpus scans inside one collect)
-    cand = (
-        cosine_topk(corpus, queries, k_candidates, id_col, vec_col)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("cosine_sim") * 1_000_000)
-            .cast("bigint")
-            .alias("__sg"),
-        )
-    ).persist()
-    vecs = corpus.select(F.col(id_col).alias("__pid"), F.col(vec_col).alias("__pv"))
-    ci = cand.select("query_id", F.col("neighbor_id").alias("i")).join(
-        vecs.select(F.col("__pid").alias("i"), F.col("__pv").alias("__vi")), "i"
-    )
-    cj = cand.select("query_id", F.col("neighbor_id").alias("j")).join(
-        vecs.select(F.col("__pid").alias("j"), F.col("__pv").alias("__vj")), "j"
-    )
-    pairs = (
-        ci.join(cj, "query_id")
-        .where(F.col("i") != F.col("j"))
-        .select(
-            "query_id",
-            "i",
-            "j",
-            F.round(cosine(F.col("__vi"), F.col("__vj")) * 1_000_000)
-            .cast("bigint")
-            .alias("__pg"),
-        )
-    ).persist()
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("__sg").desc(), F.col("neighbor_id").asc()
-    )
-    sel = (
-        cand.withColumn("__rn", F.row_number().over(w1))
-        .where(F.col("__rn") == 1)
-        .select(
-            "query_id",
-            F.lit(1).alias("position"),
-            "neighbor_id",
-            (F.col("__sg") * lam_pct).cast("bigint").alias("__score_num"),
-        )
-    )
-    for t in range(2, k_select + 1):
-        chosen = sel.select("query_id", "neighbor_id")
-        div = (
-            pairs.join(
-                chosen.select("query_id", F.col("neighbor_id").alias("j")),
-                ["query_id", "j"],
+    with owned(corpus.sparkSession) as scope:
+        cand = scope.persist(
+            cosine_topk(corpus, queries, k_candidates, id_col, vec_col).select(
+                "query_id",
+                "neighbor_id",
+                F.round(F.col("cosine_sim") * 1_000_000)
+                .cast("bigint")
+                .alias("__sg"),
             )
-            .groupBy("query_id", "i")
-            .agg(F.max("__pg").alias("__div_g"))
         )
-        remaining = cand.join(chosen, ["query_id", "neighbor_id"], "left_anti")
-        scored = remaining.join(
-            div.select("query_id", F.col("i").alias("neighbor_id"), "__div_g"),
-            ["query_id", "neighbor_id"],
-        ).select(
-            "query_id",
-            "neighbor_id",
-            (F.col("__sg") * lam_pct - F.col("__div_g") * (100 - lam_pct))
-            .cast("bigint")
-            .alias("__score_num"),
+        vecs = corpus.select(F.col(id_col).alias("__pid"), F.col(vec_col).alias("__pv"))
+        ci = cand.select("query_id", F.col("neighbor_id").alias("i")).join(
+            vecs.select(F.col("__pid").alias("i"), F.col("__pv").alias("__vi")), "i"
         )
-        wt = Window.partitionBy("query_id").orderBy(
-            F.col("__score_num").desc(), F.col("neighbor_id").asc()
+        cj = cand.select("query_id", F.col("neighbor_id").alias("j")).join(
+            vecs.select(F.col("__pid").alias("j"), F.col("__pv").alias("__vj")), "j"
         )
-        pick = (
-            scored.withColumn("__rn", F.row_number().over(wt))
+        pairs = scope.persist(
+            ci.join(cj, "query_id")
+            .where(F.col("i") != F.col("j"))
+            .select(
+                "query_id",
+                "i",
+                "j",
+                F.round(cosine(F.col("__vi"), F.col("__vj")) * 1_000_000)
+                .cast("bigint")
+                .alias("__pg"),
+            )
+        )
+        w1 = Window.partitionBy("query_id").orderBy(
+            F.col("__sg").desc(), F.col("neighbor_id").asc()
+        )
+        sel = (
+            cand.withColumn("__rn", F.row_number().over(w1))
             .where(F.col("__rn") == 1)
             .select(
                 "query_id",
-                F.lit(t).alias("position"),
+                F.lit(1).alias("position"),
                 "neighbor_id",
-                "__score_num",
+                (F.col("__sg") * lam_pct).cast("bigint").alias("__score_num"),
             )
         )
-        sel = sel.unionByName(pick)
-    out = sel.select(
-        "query_id",
-        "position",
-        "neighbor_id",
-        (F.col("__score_num").cast("double") / 100_000_000.0).alias("mmr_score"),
-    )
-    # bounded (queries x k_select); materialize so the unrolled-round plan
-    # is executed once and both caches release — on EVERY path (a failed
-    # collect must not pin the candidate/pair frames for the session)
-    try:
-        res = out.sparkSession.createDataFrame(out.collect(), out.schema)
-    finally:
-        pairs.unpersist()
-        cand.unpersist()
-    return res
+        for t in range(2, k_select + 1):
+            chosen = sel.select("query_id", "neighbor_id")
+            div = (
+                pairs.join(
+                    chosen.select("query_id", F.col("neighbor_id").alias("j")),
+                    ["query_id", "j"],
+                )
+                .groupBy("query_id", "i")
+                .agg(F.max("__pg").alias("__div_g"))
+            )
+            remaining = cand.join(chosen, ["query_id", "neighbor_id"], "left_anti")
+            scored = remaining.join(
+                div.select("query_id", F.col("i").alias("neighbor_id"), "__div_g"),
+                ["query_id", "neighbor_id"],
+            ).select(
+                "query_id",
+                "neighbor_id",
+                (F.col("__sg") * lam_pct - F.col("__div_g") * (100 - lam_pct))
+                .cast("bigint")
+                .alias("__score_num"),
+            )
+            wt = Window.partitionBy("query_id").orderBy(
+                F.col("__score_num").desc(), F.col("neighbor_id").asc()
+            )
+            pick = (
+                scored.withColumn("__rn", F.row_number().over(wt))
+                .where(F.col("__rn") == 1)
+                .select(
+                    "query_id",
+                    F.lit(t).alias("position"),
+                    "neighbor_id",
+                    "__score_num",
+                )
+            )
+            sel = sel.unionByName(pick)
+        out = sel.select(
+            "query_id",
+            "position",
+            "neighbor_id",
+            (F.col("__score_num").cast("double") / 100_000_000.0).alias("mmr_score"),
+        )
+        # bounded (queries x k_select); materialize so the unrolled-round
+        # plan is executed once and both caches release — on EVERY path (a
+        # failed collect must not pin the candidate/pair frames)
+        return collect_local(out)
 
 
 def sql_mmr_rerank(

@@ -30,6 +30,7 @@ from spark_hadoop_automation_in_cloud_spark.operators import changes as chg
 from spark_hadoop_automation_in_cloud_spark.operators import topk as topk_ops
 from spark_hadoop_automation_in_cloud_spark.operators.nearest import nearest_neighbor_agg
 from spark_hadoop_automation_in_cloud_spark.operators.rollup import weekly_with_month_window
+from spark_hadoop_automation_in_cloud_spark.session import collect_local, owned
 
 
 @dataclass(frozen=True)
@@ -2549,10 +2550,7 @@ def q68_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return trimmed_mean(o, "o_orderpriority", "o_totalprice", trim_pct=10)
 
 
-from spark_hadoop_automation_in_cloud_spark.operators.components import (  # noqa: E402
-    _owned_checkpoints,
-    pagerank,
-)
+from spark_hadoop_automation_in_cloud_spark.operators.components import pagerank  # noqa: E402
 
 
 def _pagerank_oracle_sql(n_iter: int = 10, damping: float = 0.85) -> str:
@@ -2666,7 +2664,7 @@ def _contact_graph(spark: SparkSession, sf_dir: str, pins):
 def q69_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pagerank is eager, so the prologue's pin is released once its
     # output is materialized
-    with _owned_checkpoints(spark) as pins:
+    with owned(spark) as pins:
         _, edges = _contact_graph(spark, sf_dir, pins)
         return pagerank(edges, n_iter=10, per_iter_round_dp=9, assume_distinct_edges=True)
 
@@ -3635,19 +3633,23 @@ def q88_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the plan is one localCheckpoint of the metric frame + one
     # materialization per dimension (4 total); global_ntile reuses its
     # partition counts as the row total, so no separate count() action.
-    m = m.localCheckpoint()
-    r = global_ntile(
-        m, [F.col("recency_days").asc(), F.col("o_custkey").asc()], 4,
-        out_col="r_quartile",
-    )
-    r = global_ntile(
-        r, [F.col("frequency").desc(), F.col("o_custkey").asc()], 4,
-        out_col="f_quartile",
-    )
-    r = global_ntile(
-        r, [F.col("monetary").desc(), F.col("o_custkey").asc()], 4,
-        out_col="m_quartile",
-    )
+    # The ntiles are eager and their range-tag checkpoints cut the
+    # lineage, so the metric pin is released before the call returns.
+    with owned(spark) as scope:
+        r = global_ntile(
+            scope.pin(m),
+            [F.col("recency_days").asc(), F.col("o_custkey").asc()],
+            4,
+            out_col="r_quartile",
+        )
+        r = global_ntile(
+            r, [F.col("frequency").desc(), F.col("o_custkey").asc()], 4,
+            out_col="f_quartile",
+        )
+        r = global_ntile(
+            r, [F.col("monetary").desc(), F.col("o_custkey").asc()], 4,
+            out_col="m_quartile",
+        )
     return r.select(
         "o_custkey",
         "recency_days",
@@ -4841,7 +4843,7 @@ def q111_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFr
         # materialize before the index dir goes away: the returned frame
         # must not lazily depend on TMPDIR state, so the whole tempdir is
         # reclaimed here instead of leaking one tree per invocation
-        return spark.createDataFrame(out.collect(), out.schema)
+        return collect_local(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -5168,7 +5170,7 @@ def q119_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         lists = spark.read.parquet(f"{root}/lists").where(F.col("cell_id").isin(cells))
         out = ivf_score(probes, lists, k=5)
         # materialize before the index dirs go away (q111's discipline)
-        return spark.createDataFrame(out.collect(), out.schema)
+        return collect_local(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -6114,7 +6116,7 @@ def q142_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("est_n").cast("bigint").alias("est_n"),
         )
         # materialize before the index dir goes away (q111's idiom)
-        return spark.createDataFrame(out.collect(), out.schema)
+        return collect_local(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -6683,7 +6685,7 @@ def q152_streaming_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         ) + F.lit(0.0)
         out = la._center(merged).select("i", "j", cov.alias("cov"))
         # materialize before the index dir goes away (q111's idiom)
-        return spark.createDataFrame(out.collect(), out.schema)
+        return collect_local(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -6738,7 +6740,7 @@ def q153_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize before the table files go away (q111's idiom);
         # bounded: |sources| x |langs| rows
-        return spark.createDataFrame(out.collect(), out.schema)
+        return collect_local(out)
     finally:
         bk.drop_table(spark, "q153_docs")
         bk.drop_table(spark, "q153_emb")
@@ -6970,7 +6972,7 @@ def q160_streaming_ann_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
         out = pq_adc_rank_within_cells(coded, books, probes, queries, k=10)
         # materialize before the index dir goes away (q111's idiom);
         # bounded: n_queries x k rows
-        return spark.createDataFrame(out.collect(), out.schema)
+        return collect_local(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -7484,7 +7486,7 @@ def q174_streaming_volume_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
         out = zscore_from_daily(daily, ["event_type"])
         # materialize before the index dir goes away (q111's idiom);
         # bounded: |types x days| rows
-        return spark.createDataFrame(out.collect(), out.schema)
+        return collect_local(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -7781,7 +7783,7 @@ def q179_json_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).cast("bigint").alias("n_rows")
             ).select(F.lit("__quarantined__").alias("source"), "n_rows")
         ).orderBy("source")
-        return spark.createDataFrame(out.collect(), out.schema)
+        return collect_local(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -8049,7 +8051,7 @@ SELECT node, round(rank, 6) + 0.0 AS rank FROM {prev}
 def q185_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q69's prologue pin, released once the eager operator's output is
     # materialized
-    with _owned_checkpoints(spark) as pins:
+    with owned(spark) as pins:
         purchases, edges = _contact_graph(spark, sf_dir, pins)
         seeds = purchases.select(F.col("user_id").alias("node")).where(F.col("node") < 20)
         return personalized_pagerank(edges, seeds, n_iter=10, assume_distinct_edges=True)
@@ -8159,23 +8161,18 @@ from spark_hadoop_automation_in_cloud_spark.operators.components import (  # noq
     "broadcast, per-community aggregates.",
 )
 def q189_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_hadoop_automation_in_cloud_spark.operators.components import (
-        _pinned_rdd_ids,
-    )
-
     li = read_table(spark, sf_dir, "lineitem")
     # the edge pin and LPA's label frame are released on exit, also when
     # an operator raises; modularity's checkpointed result is the ONE
     # pinned frame that survives the call
-    with _owned_checkpoints(spark) as pins:
+    with owned(spark) as pins:
         # checkpoint the basket self-join ONCE: lazily it would re-run
         # inside BOTH label_propagation and modularity (the family's
         # dominant cost — shuffle_slope NOTES)
         edges = pins.pin(_copurchase_edges(li))
-        labels = label_propagation(edges, "p1", "p2", n_rounds=5).select(
+        labels = pins.adopt(label_propagation(edges, "p1", "p2", n_rounds=5)).select(
             "node", "community"
         )
-        pins.pinned |= _pinned_rdd_ids(labels)
         return modularity(edges, labels, "p1", "p2")
 
 
@@ -8791,6 +8788,7 @@ def q197_quality_filter_distillation(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 from spark_hadoop_automation_in_cloud_spark.operators.logistic import (  # noqa: E402
+    _dot,
     logistic_fit,
     sql_dot,
     sql_gd_ctes,
@@ -8834,21 +8832,15 @@ def q198_distilled_filter_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents", parallelize=True)
     # materialize-once: the fit's 10 rounds AND the scoring pass read the
     # persisted 6-column frame — ONE derivation of the regex-heavy
-    # features from raw text (logistic_fit skips its own persist because
-    # this caller already holds one)
-    feat = _quality_feature_frame(d, ["source"]).persist()
-    try:
-        w = logistic_fit(
-            feat, _Q197_FEATS, n_iter=10, lr=5.0, materialize=False
-        )
-        dot = F.lit(w[0])
-        for j, c in enumerate(_Q197_FEATS, start=1):
-            dot = dot + F.lit(w[j]) * F.col(c)
-        keep = F.when(dot >= 0, 1).otherwise(0)
+    # features from raw text
+    with owned(spark) as scope:
+        feat = scope.persist(_quality_feature_frame(d, ["source"]))
+        w = logistic_fit(feat, _Q197_FEATS, n_iter=10, lr=5.0)
+        keep = F.when(_dot(w, _Q197_FEATS) >= 0, 1).otherwise(0)
         # |sources| cells — bounded model-state output, so materialize it
-        # INSIDE the cache scope (the q96 convention): the whole call is
-        # one text derivation + 11 narrow cached scans, and no pinned
-        # blocks outlive the call
+        # INSIDE the scope (the q96 convention): the whole call is one
+        # text derivation + 11 narrow cached scans, and no cache outlives
+        # the call
         rows = (
             feat.groupBy("source")
             .agg(
@@ -8862,8 +8854,6 @@ def q198_distilled_filter_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("source")
             .collect()
         )
-    finally:
-        feat.unpersist()
     return spark.createDataFrame(
         rows, "source string, n_docs bigint, n_keep bigint, keep_rate double"
     ).orderBy("source")
@@ -9043,6 +9033,40 @@ ORDER BY source
 )
 
 
+def _selection_and_bins(scope, kept: DataFrame, budg: DataFrame):
+    """q201/q205's last two funnel stages over the gate-kept docs: the
+    budget selection (persisted through ``scope``), then per source the
+    selected (doc count, token sum) and the packing-bin count, both read
+    by ONE collect (a full-outer join of the two per-source aggregates)."""
+    sel = scope.persist(
+        token_budget_selection(
+            kept.join(F.broadcast(budg), "source"),
+            "source",
+            "doc_id",
+            "score",
+            "n_tokens",
+            budget=F.col("source_budget"),
+        )
+    )
+    sel_join = (
+        sel.groupBy("source")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_tokens").alias("t"))
+        .join(
+            pack_token_counts(sel, "source", "doc_id", "n_tokens", capacity=256)
+            .groupBy("source")
+            .agg(F.countDistinct("bin_id").alias("b")),
+            "source",
+            "full",
+        )
+        .collect()
+    )
+    sel_stats = {
+        r["source"]: (int(r["n"]), int(r["t"])) for r in sel_join if r["n"] is not None
+    }
+    bins = {r["source"]: int(r["b"]) for r in sel_join if r["b"] is not None}
+    return sel_stats, bins
+
+
 @register(
     "q201_curated_mix_funnel",
     _Q201_SQL,
@@ -9069,16 +9093,12 @@ def q201_curated_mix_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents", parallelize=True)
     _, enc0 = _bpe_rules_and_encode(d)
     enc = enc0.select("doc_id", "n_tokens")
-    feat = _quality_feature_frame(d, ["doc_id", "source"]).join(enc, "doc_id")
-    feat = feat.persist()
-    try:
-        w = logistic_fit(
-            feat, _Q197_FEATS, n_iter=10, lr=5.0, materialize=False
+    with owned(spark) as scope:
+        feat = scope.persist(
+            _quality_feature_frame(d, ["doc_id", "source"]).join(enc, "doc_id")
         )
-        dot = F.lit(w[0])
-        for j, c in enumerate(_Q197_FEATS, start=1):
-            dot = dot + F.lit(w[j]) * F.col(c)
-        scored = feat.withColumn("score", dot)
+        w = logistic_fit(feat, _Q197_FEATS, n_iter=10, lr=5.0)
+        scored = feat.withColumn("score", _dot(w, _Q197_FEATS))
         kept = scored.where(F.col("score") >= 0)
         # r11: base counts and keep counts ride ONE aggregate pass over the
         # scored frame (they were two scan+collect actions; the conditional
@@ -9105,48 +9125,7 @@ def q201_curated_mix_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(s, b) for s, b in budgets.items()],
             "source string, source_budget bigint",
         )
-        sel = token_budget_selection(
-            kept.join(F.broadcast(budg), "source"),
-            "source",
-            "doc_id",
-            "score",
-            "n_tokens",
-            budget=F.col("source_budget"),
-        ).persist()
-        try:
-            # r11: the selection stats and the packing-bin counts ride ONE
-            # collect (a full-outer join of the two per-source aggregates
-            # over the persisted `sel` — they were two separate actions);
-            # values are the per-frame aggregates unchanged
-            sel_join = (
-                sel.groupBy("source")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("n_tokens").alias("t"),
-                )
-                .join(
-                    pack_token_counts(
-                        sel, "source", "doc_id", "n_tokens", capacity=256
-                    )
-                    .groupBy("source")
-                    .agg(F.countDistinct("bin_id").alias("b")),
-                    "source",
-                    "full",
-                )
-                .collect()
-            )
-            sel_stats = {
-                r["source"]: (int(r["n"]), int(r["t"]))
-                for r in sel_join
-                if r["n"] is not None
-            }
-            bins = {
-                r["source"]: int(r["b"]) for r in sel_join if r["b"] is not None
-            }
-        finally:
-            sel.unpersist()
-    finally:
-        feat.unpersist()
+        sel_stats, bins = _selection_and_bins(scope, kept, budg)
     rows = [
         (
             s,
@@ -9211,15 +9190,10 @@ lcell AS MATERIALIZED (
 )
 def q202_doremi_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents", parallelize=True)
-    feat = _quality_feature_frame(d, ["source"]).persist()
-    try:
-        w = logistic_fit(
-            feat, _Q197_FEATS, n_iter=10, lr=5.0, materialize=False
-        )
-        dot = F.lit(w[0])
-        for j, c in enumerate(_Q197_FEATS, start=1):
-            dot = dot + F.lit(w[j]) * F.col(c)
-        loss = F.greatest(F.lit(0.0), -dot)
+    with owned(spark) as scope:
+        feat = scope.persist(_quality_feature_frame(d, ["source"]))
+        w = logistic_fit(feat, _Q197_FEATS, n_iter=10, lr=5.0)
+        loss = F.greatest(F.lit(0.0), -_dot(w, _Q197_FEATS))
         cells = (
             feat.groupBy(F.col("source").alias("domain"))
             .agg(
@@ -9229,12 +9203,10 @@ def q202_doremi_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("mean_loss"),
             )
             # |domains| cells — bounded model state; materialize inside
-            # the persist scope (the q96 convention), then walk the
-            # weight trajectory on the tiny local frame
+            # the scope (the q96 convention), then walk the weight
+            # trajectory on the tiny local frame
             .collect()
         )
-    finally:
-        feat.unpersist()
     cells_df = spark.createDataFrame(
         cells, "domain string, n_docs bigint, mean_loss double"
     )
@@ -9532,16 +9504,12 @@ def q205_learned_mix_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents", parallelize=True)
     _, enc0 = _bpe_rules_and_encode(d)
     enc = enc0.select("doc_id", "n_tokens")
-    feat = _quality_feature_frame(d, ["doc_id", "source"]).join(enc, "doc_id")
-    feat = feat.persist()
-    try:
-        w = logistic_fit(
-            feat, _Q197_FEATS, n_iter=10, lr=5.0, materialize=False
+    with owned(spark) as scope:
+        feat = scope.persist(
+            _quality_feature_frame(d, ["doc_id", "source"]).join(enc, "doc_id")
         )
-        dot = F.lit(w[0])
-        for j, c in enumerate(_Q197_FEATS, start=1):
-            dot = dot + F.lit(w[j]) * F.col(c)
-        scored = feat.withColumn("score", dot)
+        w = logistic_fit(feat, _Q197_FEATS, n_iter=10, lr=5.0)
+        scored = feat.withColumn("score", _dot(w, _Q197_FEATS))
         cells = (
             scored.groupBy(F.col("source").alias("domain"))
             .agg(
@@ -9569,48 +9537,7 @@ def q205_learned_mix_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source string, source_budget bigint",
         )
         kept = scored.where(F.col("score") >= 0)
-        sel = token_budget_selection(
-            kept.join(F.broadcast(budg), "source"),
-            "source",
-            "doc_id",
-            "score",
-            "n_tokens",
-            budget=F.col("source_budget"),
-        ).persist()
-        try:
-            # r11: the selection stats and the packing-bin counts ride ONE
-            # collect (a full-outer join of the two per-source aggregates
-            # over the persisted `sel` — they were two separate actions);
-            # values are the per-frame aggregates unchanged
-            sel_join = (
-                sel.groupBy("source")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("n_tokens").alias("t"),
-                )
-                .join(
-                    pack_token_counts(
-                        sel, "source", "doc_id", "n_tokens", capacity=256
-                    )
-                    .groupBy("source")
-                    .agg(F.countDistinct("bin_id").alias("b")),
-                    "source",
-                    "full",
-                )
-                .collect()
-            )
-            sel_stats = {
-                r["source"]: (int(r["n"]), int(r["t"]))
-                for r in sel_join
-                if r["n"] is not None
-            }
-            bins = {
-                r["source"]: int(r["b"]) for r in sel_join if r["b"] is not None
-            }
-        finally:
-            sel.unpersist()
-    finally:
-        feat.unpersist()
+        sel_stats, bins = _selection_and_bins(scope, kept, budg)
     rows = [
         (
             r["domain"],

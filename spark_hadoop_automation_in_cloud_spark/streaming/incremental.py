@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_hadoop_automation_in_cloud_spark.operators.topk import topk_per_group
+from spark_hadoop_automation_in_cloud_spark.session import owned
 
 #: merge backend contract: (deduped_batch, path, key_cols, order_cols) ->
 #: None.  The batch arriving here is already last-writer-wins deduped per
@@ -527,8 +528,8 @@ def maintain_neardup_clusters(
     Returns the post-round label table (read back from disk).
     """
     from spark_hadoop_automation_in_cloud_spark.operators.components import (
+        connected_components,
         incremental_components,
-        neardup_clusters,
     )
     from spark_hadoop_automation_in_cloud_spark.operators.dedup import (
         incremental_lsh_pairs,
@@ -569,54 +570,56 @@ def maintain_neardup_clusters(
     ).hexdigest()[:16]
     token_dir = os.path.join(index_root, f"ingest=t{token}")
 
-    # one signature row per doc_id (minhash_signatures groups by id), so
-    # duplicate batch rows cannot duplicate index or label rows
-    sig = minhash_signatures(shingle_rows(batch, "doc_id", "text", n=2)).cache()
-    batch_ids = batch.select(F.col("doc_id").alias("node")).distinct()
+    with owned(spark) as scope:
+        # one signature row per doc_id (minhash_signatures groups by id), so
+        # duplicate batch rows cannot duplicate index or label rows
+        sig = scope.persist(minhash_signatures(shingle_rows(batch, "doc_id", "text", n=2)))
+        batch_ids = batch.select(F.col("doc_id").alias("node")).distinct()
 
-    if os.path.isdir(labels_path):
-        labels_old = spark.read.parquet(labels_path)
-        index = (
-            spark.read.option("basePath", index_root)
-            .parquet(index_root)
-            .where(F.col("ingest") != f"t{token}")
-            .drop("ingest")
-        )
-        pairs = incremental_lsh_pairs(sig, index, min_est_jaccard)
-        merged = incremental_components(
-            labels_old, pairs, "left_doc_id", "right_doc_id",
-            node_col="node", comp_col="cluster_id",
-        )
-        # singletons WITHOUT touching merged (which embeds the history
-        # remap — evaluating it twice would re-scan the label table): a
-        # batch id is a singleton iff no pair touches it and no earlier
-        # round labeled it
-        pair_nodes = (
-            pairs.select(F.col("left_doc_id").alias("node"))
-            .unionByName(pairs.select(F.col("right_doc_id").alias("node")))
-            .distinct()
-        )
-        singles = (
-            batch_ids.join(pair_nodes, "node", "left_anti")
-            .join(labels_old.select("node"), "node", "left_anti")
-            .select("node", F.col("node").alias("cluster_id"))
-        )
-        labels_new = merged.unionByName(singles)
-    else:
-        pairs = lsh_candidate_pairs(sig).where(
-            F.col("est_jaccard") >= min_est_jaccard
-        )
-        labels_new = neardup_clusters(
-            pairs, batch_ids.withColumnRenamed("node", "doc_id"), "doc_id",
-            left_col="left_doc_id", right_col="right_doc_id",
-        ).select(F.col("doc_id").alias("node"), "cluster_id")
+        if os.path.isdir(labels_path):
+            labels_old = spark.read.parquet(labels_path)
+            index = (
+                spark.read.option("basePath", index_root)
+                .parquet(index_root)
+                .where(F.col("ingest") != f"t{token}")
+                .drop("ingest")
+            )
+            pairs = incremental_lsh_pairs(sig, index, min_est_jaccard)
+            merged = incremental_components(
+                labels_old, pairs, "left_doc_id", "right_doc_id",
+                node_col="node", comp_col="cluster_id",
+            )
+            # singletons WITHOUT touching merged (which embeds the history
+            # remap — evaluating it twice would re-scan the label table): a
+            # batch id is a singleton iff no pair touches it and no earlier
+            # round labeled it
+            pair_nodes = (
+                pairs.select(F.col("left_doc_id").alias("node"))
+                .unionByName(pairs.select(F.col("right_doc_id").alias("node")))
+                .distinct()
+            )
+            singles = (
+                batch_ids.join(pair_nodes, "node", "left_anti")
+                .join(labels_old.select("node"), "node", "left_anti")
+                .select("node", F.col("node").alias("cluster_id"))
+            )
+            labels_new = merged.unionByName(singles)
+        else:
+            pairs = lsh_candidate_pairs(sig).where(
+                F.col("est_jaccard") >= min_est_jaccard
+            )
+            # neardup_clusters' labeling, with the component checkpoint owned
+            # by the scope (the labels are read back from disk)
+            comp = scope.adopt(connected_components(pairs, "left_doc_id", "right_doc_id"))
+            labels_new = batch_ids.join(comp, "node", "left").select(
+                "node", F.coalesce("component_id", "node").alias("cluster_id")
+            )
 
-    # write order: index increment first (overwrites its own token
-    # partition — replay-safe), then the label swap
-    minhash_band_index(sig).write.mode("overwrite").parquet(token_dir)
-    labels_new.write.mode("overwrite").parquet(tmp)
-    _commit_swap(labels_path, tmp, bak)
-    sig.unpersist()
+        # write order: index increment first (overwrites its own token
+        # partition — replay-safe), then the label swap
+        minhash_band_index(sig).write.mode("overwrite").parquet(token_dir)
+        labels_new.write.mode("overwrite").parquet(tmp)
+        _commit_swap(labels_path, tmp, bak)
     return spark.read.parquet(labels_path)
 
 

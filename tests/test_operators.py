@@ -1091,14 +1091,13 @@ def test_sketch_parquet_roundtrip_merge_estimate(spark, tmp_path):
     assert got_cm == mem_cm
 
 
-def test_iterative_operators_release_checkpoint_storage(spark):
+def test_iterative_operators_release_checkpoint_storage(spark, monkeypatch):
     """The graph operators must not leak localCheckpoint blocks:
     repeated calls previously pinned every intermediate frame (the edge
     checkpoint is O(|edges|)), degrading the JVM until evictions thrashed.
     Each call may keep exactly ONE new persisted RDD — the returned
     frame — and results must stay usable after cleanup."""
     from spark_hadoop_automation_in_cloud_spark.operators.components import (
-        _persistent_rdd_ids,
         clustering_coefficient,
         connected_components,
         k_core,
@@ -1108,6 +1107,7 @@ def test_iterative_operators_release_checkpoint_storage(spark):
         personalized_pagerank,
         triangle_count,
     )
+    from spark_hadoop_automation_in_cloud_spark.session import _persistent_rdd_ids
 
     edges = spark.createDataFrame(
         [(i, (i * 7) % 50) for i in range(200) if i != (i * 7) % 50],
@@ -1170,6 +1170,42 @@ def test_iterative_operators_release_checkpoint_storage(spark):
         first = results[0].collect()
         assert len(first) == 5, op.__name__
         assert all(r.collect() == first for r in results), op.__name__
+
+    # the persisting operators hold their caches (and bpe its periodic
+    # cut, forced every 2 rounds here) in an owned scope: a call leaves
+    # no persisted RDD behind
+    from spark_hadoop_automation_in_cloud_spark.operators import bpe
+    from spark_hadoop_automation_in_cloud_spark.operators.clustering import kmeans_assign
+    from spark_hadoop_automation_in_cloud_spark.operators.logistic import (
+        logistic_train_report,
+    )
+    from spark_hadoop_automation_in_cloud_spark.operators.similarity import (
+        mmr_rerank,
+        train_pq_codebooks,
+    )
+
+    monkeypatch.setattr(bpe, "_CHECKPOINT_EVERY", 2)
+    emb = spark.createDataFrame(
+        [(i, [float((i * j) % 7 - 3) for j in range(8)]) for i in range(40)],
+        "vec_id bigint, embedding array<float>",
+    )
+    feats = spark.createDataFrame(
+        [(float(i % 2), (i % 2) - 0.5 + 0.01 * i) for i in range(20)], "y double, x double"
+    )
+    docs = spark.createDataFrame([("abab abab aaa cdcd cdcd dd",)], "text string")
+    for name, call in (
+        ("kmeans_assign", lambda: kmeans_assign(emb, k=3, max_iter=2).collect()),
+        ("train_pq_codebooks", lambda: train_pq_codebooks(emb, dim=8, n_sub=2, k=4, iters=2)),
+        ("mmr_rerank", lambda: mmr_rerank(emb, emb.where("vec_id < 2"), 6, 3).collect()),
+        ("logistic_train_report", lambda: logistic_train_report(feats, ["x"], n_iter=3).collect()),
+        (
+            "bpe_merges_sampled",
+            lambda: bpe.bpe_merges_sampled(docs, "text", 5, sample_mod=1).collect(),
+        ),
+    ):
+        base = _persistent_rdd_ids(spark)
+        assert call(), name
+        assert _persistent_rdd_ids(spark) - base == set(), name
 
 
 def test_bloom_prune_no_false_negatives_and_fpp(spark, sf_dir):
@@ -2142,10 +2178,10 @@ def test_incremental_components_releases_checkpoint_storage(spark):
     returned lineage needs) — the mapped-endpoints frame and the inner
     CC's own result block must both be released."""
     from spark_hadoop_automation_in_cloud_spark.operators.components import (
-        _persistent_rdd_ids,
         connected_components,
         incremental_components,
     )
+    from spark_hadoop_automation_in_cloud_spark.session import _persistent_rdd_ids
 
     hist = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 80, 2)], "l int, r int"
@@ -2900,10 +2936,11 @@ def test_bpe_sampled_rules_match_full_when_sample_is_whole_vocab(spark):
         sampled_word_freqs(docs, "text", 0)
 
 
-def test_bpe_greedy_loop_checkpoint_rounds_match_persist_rounds(spark):
-    """The lineage-control path (checkpoint_every smaller than n_merges)
-    learns byte-identical rules to the pure-persist path — checkpoints
-    must never perturb the trajectory."""
+def test_bpe_greedy_loop_checkpoint_rounds_match_persist_rounds(spark, monkeypatch):
+    """The lineage-control path (``_CHECKPOINT_EVERY`` smaller than
+    n_merges) learns byte-identical rules to the pure-persist path —
+    checkpoints must never perturb the trajectory."""
+    from spark_hadoop_automation_in_cloud_spark.operators import bpe
     from spark_hadoop_automation_in_cloud_spark.operators.bpe import (
         bpe_merges_sampled,
     )
@@ -2911,17 +2948,15 @@ def test_bpe_greedy_loop_checkpoint_rounds_match_persist_rounds(spark):
     docs = spark.createDataFrame(
         [("abab abab abab aaa aaa cdcd cdcd dd",)], "text string"
     )
+    monkeypatch.setattr(bpe, "_CHECKPOINT_EVERY", 2)
     a = [
         tuple(r)
-        for r in bpe_merges_sampled(
-            docs, "text", n_merges=5, sample_mod=1, checkpoint_every=2
-        ).collect()
+        for r in bpe_merges_sampled(docs, "text", n_merges=5, sample_mod=1).collect()
     ]
+    monkeypatch.setattr(bpe, "_CHECKPOINT_EVERY", 100)
     b = [
         tuple(r)
-        for r in bpe_merges_sampled(
-            docs, "text", n_merges=5, sample_mod=1, checkpoint_every=100
-        ).collect()
+        for r in bpe_merges_sampled(docs, "text", n_merges=5, sample_mod=1).collect()
     ]
     assert a == b and len(a) >= 4
 
@@ -3023,6 +3058,7 @@ def test_logistic_fit_separable_and_report_shape(spark):
         logistic_fit,
         logistic_train_report,
     )
+    from spark_hadoop_automation_in_cloud_spark.session import owned
 
     rows = [(1.0, 1.0 + 0.1 * i) for i in range(10)] + [
         (0.0, -1.0 - 0.1 * i) for i in range(10)
@@ -3038,12 +3074,13 @@ def test_logistic_fit_separable_and_report_shape(spark):
     assert rep["x"][0] == w[1] and rep["x"][1] == 1.0 == rep["intercept"][1]
     with _pytest.raises(ValueError, match="n_iter"):
         logistic_fit(df, ["x"], "y", n_iter=0)
-    # the materialize-once persist seam must not perturb the trajectory
-    # (it only changes WHERE rounds 2..n read the features from): the
-    # no-persist path fits identical weights, and the default path
-    # releases its cache registration before returning (count compared
-    # to pre-call — the session is shared across tests)
-    assert logistic_fit(df, ["x"], "y", n_iter=10, lr=5.0, materialize=False) == w
+    # a caller-held persist must not perturb the trajectory (it only
+    # changes WHERE rounds 2..n read the features from): a fit over the
+    # frame held in an owned scope equals the fit over the raw frame, and
+    # a fit leaves no persisted RDD behind (count compared to pre-call —
+    # the session is shared across tests)
+    with owned(spark) as scope:
+        assert logistic_fit(scope.persist(df), ["x"], "y", n_iter=10, lr=5.0) == w
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
     assert logistic_fit(df, ["x"], "y", n_iter=10, lr=5.0) == w
@@ -3645,7 +3682,7 @@ def test_exact_substring_dedup_overlap_removal_wins(spark):
     }
 
 
-def test_iterative_operators_release_checkpoints_on_error(spark):
+def test_iterative_operators_release_checkpoints_on_error(spark, monkeypatch, tmp_path):
     """The r11 guard: a convergence RuntimeError must not strand the
     call's localCheckpoint blocks.  k_core with an impossible round
     budget raises — and the session's persisted-RDD table must return
@@ -3654,11 +3691,11 @@ def test_iterative_operators_release_checkpoints_on_error(spark):
     import pytest as _pytest
 
     from spark_hadoop_automation_in_cloud_spark.operators.components import (
-        _persistent_rdd_ids,
         connected_components,
         k_core,
         personalized_pagerank,
     )
+    from spark_hadoop_automation_in_cloud_spark.session import _persistent_rdd_ids
 
     k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
     chain = [(3, 10), (10, 11), (11, 12)]
@@ -3688,6 +3725,26 @@ def test_iterative_operators_release_checkpoints_on_error(spark):
         personalized_pagerank(df, orphan, "u", "v")
     assert _persistent_rdd_ids(spark) - base == set()
 
+    # a crash before the label swap releases the cached signatures and
+    # the component checkpoint, in the RDD table and the CacheManager
+    from spark_hadoop_automation_in_cloud_spark.streaming import incremental
+
+    def crash(*_):
+        raise RuntimeError("crash before swap")
+
+    monkeypatch.setattr(incremental, "_commit_swap", crash)
+    docs = spark.createDataFrame(
+        [(i, f"the quick brown fox jumps {i % 5}") for i in range(30)],
+        "doc_id bigint, text string",
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    cache_empty = cache.isEmpty()
+    base = _persistent_rdd_ids(spark)
+    with _pytest.raises(RuntimeError, match="crash before swap"):
+        incremental.maintain_neardup_clusters(spark, docs, str(tmp_path), 0.5)
+    assert _persistent_rdd_ids(spark) - base == set()
+    assert cache.isEmpty() == cache_empty
+
 
 def test_chain_gate_arms_bit_equal(spark, monkeypatch):
     """Both arms of the lineage-cut chain gate (:func:`_cut_every`) give
@@ -3695,6 +3752,7 @@ def test_chain_gate_arms_bit_equal(spark, monkeypatch):
     these small graphs, and ``_CHAIN_MAX_EDGE_ROWS = 0`` forces a cut
     every round.  Covers pagerank with and without dangling nodes,
     personalized_pagerank and label_propagation."""
+    from spark_hadoop_automation_in_cloud_spark import session
     from spark_hadoop_automation_in_cloud_spark.operators import components
 
     sym = spark.createDataFrame(
@@ -3716,13 +3774,13 @@ def test_chain_gate_arms_bit_equal(spark, monkeypatch):
         ),
     }
     pins = []
-    real_pin = components._CheckpointScope.pin
+    real_pin = session._Owned.pin
 
     def counting_pin(self, df):
         pins.append(1)
         return real_pin(self, df)
 
-    monkeypatch.setattr(components._CheckpointScope, "pin", counting_pin)
+    monkeypatch.setattr(session._Owned, "pin", counting_pin)
 
     def run(name):
         pins.clear()
@@ -3744,9 +3802,7 @@ def test_q185_releases_its_prologue_checkpoint(spark, sf_dir):
     """Two held q185 results leave at most their two result checkpoints
     pinned: the prologue's purchases pin is released once the eager
     operator's output is materialized."""
-    from spark_hadoop_automation_in_cloud_spark.operators.components import (
-        _persistent_rdd_ids,
-    )
+    from spark_hadoop_automation_in_cloud_spark.session import _persistent_rdd_ids
     from spark_hadoop_automation_in_cloud_spark.queries import (
         q185_personalized_pagerank,
     )
@@ -3763,15 +3819,15 @@ def test_owned_checkpoints_scope_releases_everything_it_pinned(spark):
     the scope's pins (pagerank's contract) keeps its blocks."""
     import pytest as _pytest
 
-    from spark_hadoop_automation_in_cloud_spark.operators.components import (
-        _owned_checkpoints,
+    from spark_hadoop_automation_in_cloud_spark.session import (
         _persistent_rdd_ids,
         _pinned_rdd_ids,
+        owned,
     )
 
     df = spark.range(40)
     base = _persistent_rdd_ids(spark)
-    with _owned_checkpoints(spark) as pins:
+    with owned(spark) as pins:
         mid = pins.pin(df.where("id % 2 = 0"))
         out = mid.where("id > 10").localCheckpoint()
     own = _pinned_rdd_ids(out)
@@ -3779,7 +3835,7 @@ def test_owned_checkpoints_scope_releases_everything_it_pinned(spark):
     assert own and _persistent_rdd_ids(spark) - base == own
     assert out.count() == 14
     with _pytest.raises(ValueError):
-        with _owned_checkpoints(spark) as pins:
+        with owned(spark) as pins:
             pins.pin(df)
             pins.pin(df.where("id > 3"))
             raise ValueError("boom")
@@ -3793,7 +3849,7 @@ def test_unpersist_failures_are_counted_and_logged(caplog):
     every id when the persisted-RDD table itself is unreachable."""
     from types import SimpleNamespace
 
-    from spark_hadoop_automation_in_cloud_spark.operators import components
+    from spark_hadoop_automation_in_cloud_spark import session as ses
 
     class _Rdd:
         def unpersist(self, blocking):
@@ -3809,18 +3865,36 @@ def test_unpersist_failures_are_counted_and_logged(caplog):
     def unreachable():
         raise RuntimeError("no JVM")
 
-    before = components.cleanup_failures
-    with caplog.at_level("WARNING", logger=components.__name__):
-        components._unpersist_rdds(
+    before = ses.cleanup_failures
+    with caplog.at_level("WARNING", logger=ses.__name__):
+        ses._unpersist_rdds(
             session(lambda: SimpleNamespace(get=lambda i: _Rdd())), {1, 2}
         )
-        assert components.cleanup_failures == before + 2
-        components._unpersist_rdds(session(unreachable), {3, 4, 5})
-        assert components.cleanup_failures == before + 5
+        assert ses.cleanup_failures == before + 2
+        ses._unpersist_rdds(session(unreachable), {3, 4, 5})
+        assert ses.cleanup_failures == before + 5
     assert len(caplog.records) == 3
     # nothing to release is not a failure
-    components._unpersist_rdds(session(unreachable), set())
-    assert components.cleanup_failures == before + 5
+    ses._unpersist_rdds(session(unreachable), set())
+    assert ses.cleanup_failures == before + 5
+
+    # the scope's body raises AND its releases fail: the body's exception
+    # surfaces, and each failed release is counted
+    class _Frame:
+        def persist(self):
+            return self
+
+        def unpersist(self):
+            raise RuntimeError("cache manager gone")
+
+    import pytest as _pytest
+
+    with _pytest.raises(ValueError, match="body"):
+        with ses.owned(session(unreachable)) as scope:
+            scope.persist(_Frame())
+            scope.pinned |= {6}
+            raise ValueError("body")
+    assert ses.cleanup_failures == before + 7
 
 
 def test_q203_fertility_hand_trace(spark):

@@ -151,18 +151,20 @@ def test_q51_profile_single_scan(spark, sf_dir):
 
 
 def test_cached_scope_reads_inmemoryrelation(spark, sf_dir):
-    """A frame consumed twice inside a cached() scope must be served from
-    the cache (InMemoryRelation in both consumers' plans), and the scope
-    must release it on exit (reference persisted and never unpersisted)."""
+    """A frame consumed twice after an owned() scope persisted it must be
+    served from the cache (InMemoryRelation in both consumers' plans), and
+    the scope must release it on exit (reference persisted and never
+    unpersisted)."""
     from spark_hadoop_automation_in_cloud_spark.io import read_table
-    from spark_hadoop_automation_in_cloud_spark.session import cached
+    from spark_hadoop_automation_in_cloud_spark.session import owned
 
     base = (
         read_table(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    with cached(base) as hot:
+    with owned(spark) as scope:
+        hot = scope.persist(base)
         hot.count()  # materialize the cache
         consumer_a = hot.where(F.col("n") > 0)
         consumer_b = hot.select(F.sum("n").alias("total"))

@@ -32,13 +32,13 @@ from pyspark.sql import functions as F
 
 from spark_hadoop_automation_in_cloud_spark.io import read_table
 from spark_hadoop_automation_in_cloud_spark.operators.clustering import kmeans_assign
-from spark_hadoop_automation_in_cloud_spark.operators.components import (
+from spark_hadoop_automation_in_cloud_spark.operators.components import pagerank
+from spark_hadoop_automation_in_cloud_spark.session import (
     _persistent_rdd_ids,
     _pinned_rdd_ids,
     _unpersist_rdds,
-    pagerank,
+    get_test_session,
 )
-from spark_hadoop_automation_in_cloud_spark.session import get_test_session
 
 
 # At SPARK_GRAFT_SCALE=100 the pagerank block alone pins ~180M
