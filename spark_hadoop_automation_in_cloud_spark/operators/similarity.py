@@ -1651,15 +1651,17 @@ def mmr_rerank(
 
     Distributed shape: the ONLY corpus-scale work is the candidate
     generation (:func:`cosine_topk` — broadcast queries × unshuffled
-    corpus scan); everything after is bounded by construction at
-    queries × k_candidates² rows (the candidate-pair similarity frame)
-    and runs ``k_select`` unrolled rounds of join + aggregate + window
-    argmax on those tiny frames — no driver collect, no Python in the
-    loop, and at 100 TB the rounds' cost is independent of corpus size.
-    Greedy round t: drop already-selected candidates (anti-join), take
-    each survivor's max similarity to the selected set (join + max),
-    score, per-query row_number argmax with (score DESC, id ASC)
-    tie-break.
+    corpus scan).  The greedy then runs as ONE grouped-map pass keyed by
+    query (``cogroup(...).applyInPandas`` over the candidate frame and
+    the candidate-pair similarity frame): per query, a sequential loop
+    in exact Python ints over state bounded at ``k_candidates`` sims
+    plus ``k_candidates²`` pair sims, so the plan and the job count do
+    not grow with ``k_select``.  Per-group data must fit one executor
+    (same contract as :func:`pandas_aggs.trimmed_mean`).  Step t drops
+    the selected candidates, takes each survivor's max similarity to the
+    selected set, scores it, and picks the argmax with (score DESC, id
+    ASC) tie-break; a query with fewer than ``k_select`` candidates stops
+    when they run out.
 
     Determinism: all similarities snap to the 1e-6 integer grid BEFORE
     the greedy and every score is the EXACT bigint numerator
@@ -1678,11 +1680,51 @@ def mmr_rerank(
     lam_pct = round(lam * 100)
     if abs(lam - lam_pct / 100) > 1e-12:
         raise ValueError(f"lam must be a multiple of 0.01, got {lam}")
-    # persisted: the candidate frame (queries x k, tiny) feeds sel1,
-    # every round's anti-join, AND both sides of the pair build — without
-    # the cache Spark re-executes the corpus-scale cosine_topk subtree
-    # once per consumer (~k_select+3 corpus scans inside one collect)
+
+    # the kernel imports nothing from this package: it runs on a Python
+    # worker that need not have the package on its path
+    def greedy(key, cand, pairs):
+        import pandas as pd
+
+        def ints(col):  # a nullable bigint arrives as float64
+            return [None if pd.isna(v) else int(v) for v in col]
+
+        sims: dict = {}  # (i, j) -> its non-null pair sims; a key = a pair row
+        for i, j, g in zip(ints(pairs["i"]), ints(pairs["j"]), ints(pairs["__pg"])):
+            sims.setdefault((i, j), []).extend([] if g is None else [g])
+        rows = list(zip(ints(cand["neighbor_id"]), ints(cand["__sg"])))
+        chosen: list = []
+        scores: list = []
+        for _ in range(k_select):
+            best = None
+            for i, sg in rows:
+                # a survivor needs a pair row to the selected set, as in
+                # the oracle's inner join
+                if i in chosen or (chosen and not any((i, j) in sims for j in chosen)):
+                    continue
+                div = max((g for j in chosen for g in sims.get((i, j), ())), default=None)
+                score = None if sg is None or (chosen and div is None) else (
+                    sg * lam_pct - (div or 0) * (100 - lam_pct)
+                )
+                rank = (score is not None, score or 0, -i)  # score DESC NULLS LAST, id ASC
+                if best is None or rank > best[0]:
+                    best = (rank, i, score)
+            if best is None:
+                break
+            chosen.append(best[1])
+            scores.append(best[2])
+        return pd.DataFrame(
+            {
+                "query_id": pd.Series([key[0]] * len(chosen), dtype="int64"),
+                "position": pd.Series(range(1, len(chosen) + 1), dtype="int32"),
+                "neighbor_id": pd.Series(chosen, dtype="int64"),
+                "__score_num": pd.Series(scores, dtype="Int64"),
+            }
+        )
+
     with owned(corpus.sparkSession) as scope:
+        # persisted: the candidate frame feeds ci, cj and the cogroup —
+        # uncached, each consumer re-runs the corpus-scale cosine_topk
         cand = scope.persist(
             cosine_topk(corpus, queries, k_candidates, id_col, vec_col).select(
                 "query_id",
@@ -1699,7 +1741,7 @@ def mmr_rerank(
         cj = cand.select("query_id", F.col("neighbor_id").alias("j")).join(
             vecs.select(F.col("__pid").alias("j"), F.col("__pv").alias("__vj")), "j"
         )
-        pairs = scope.persist(
+        pairs = (
             ci.join(cj, "query_id")
             .where(F.col("i") != F.col("j"))
             .select(
@@ -1711,63 +1753,25 @@ def mmr_rerank(
                 .alias("__pg"),
             )
         )
-        w1 = Window.partitionBy("query_id").orderBy(
-            F.col("__sg").desc(), F.col("neighbor_id").asc()
-        )
-        sel = (
-            cand.withColumn("__rn", F.row_number().over(w1))
-            .where(F.col("__rn") == 1)
-            .select(
-                "query_id",
-                F.lit(1).alias("position"),
-                "neighbor_id",
-                (F.col("__sg") * lam_pct).cast("bigint").alias("__score_num"),
+        # re-aliased key: cogrouping two frames derived from the same
+        # cand is otherwise an ambiguous self-join
+        picks = (
+            cand.select(F.col("query_id").alias("__q"), "neighbor_id", "__sg")
+            .groupBy("__q")
+            .cogroup(pairs.groupBy("query_id"))
+            .applyInPandas(
+                greedy,
+                schema="query_id bigint, position int, neighbor_id bigint, __score_num bigint",
             )
         )
-        for t in range(2, k_select + 1):
-            chosen = sel.select("query_id", "neighbor_id")
-            div = (
-                pairs.join(
-                    chosen.select("query_id", F.col("neighbor_id").alias("j")),
-                    ["query_id", "j"],
-                )
-                .groupBy("query_id", "i")
-                .agg(F.max("__pg").alias("__div_g"))
-            )
-            remaining = cand.join(chosen, ["query_id", "neighbor_id"], "left_anti")
-            scored = remaining.join(
-                div.select("query_id", F.col("i").alias("neighbor_id"), "__div_g"),
-                ["query_id", "neighbor_id"],
-            ).select(
-                "query_id",
-                "neighbor_id",
-                (F.col("__sg") * lam_pct - F.col("__div_g") * (100 - lam_pct))
-                .cast("bigint")
-                .alias("__score_num"),
-            )
-            wt = Window.partitionBy("query_id").orderBy(
-                F.col("__score_num").desc(), F.col("neighbor_id").asc()
-            )
-            pick = (
-                scored.withColumn("__rn", F.row_number().over(wt))
-                .where(F.col("__rn") == 1)
-                .select(
-                    "query_id",
-                    F.lit(t).alias("position"),
-                    "neighbor_id",
-                    "__score_num",
-                )
-            )
-            sel = sel.unionByName(pick)
-        out = sel.select(
+        out = picks.select(
             "query_id",
             "position",
             "neighbor_id",
             (F.col("__score_num").cast("double") / 100_000_000.0).alias("mmr_score"),
         )
-        # bounded (queries x k_select); materialize so the unrolled-round
-        # plan is executed once and both caches release — on EVERY path (a
-        # failed collect must not pin the candidate/pair frames)
+        # bounded (queries x k_select); collected inside the scope so the
+        # candidate cache releases on every path
         return collect_local(out)
 
 

@@ -54,57 +54,25 @@ def register(name: str, sql: str | None, doc: str = ""):
 
 # WINDOW NOTE FIRST — read this before touching _ROTATE_FIRST.
 #
-# ROUND NUMBERING: the driver's counter restarted after r05 (see
-# memory/driver-round-numbering).  CORRECTNESS_r10 landed 2026-08-18,
-# 50/50 tri-green, exactly on the previous allocation (26 changed +
-# q204 + the oldest 23).  This file now allocates the NEXT
-# verification, CORRECTNESS_r11.
+# ROUND NUMBERING: the driver's counter restarted after r05.
+# CORRECTNESS_r11 landed 50/50 tri-green on the previous allocation.
+# This file now allocates the NEXT verification, CORRECTNESS_r12.
 #
 # THE ALLOCATION IS GENERATED, NOT HAND-TRANSCRIBED (r08 verdict item
 # 1): the tuple below is the verbatim output of
 #
-#   python tools/stamps.py --emit q39_neardup_clusters,\
-#     q40_corpus_curation,q69_pagerank,q96_kmeans_clusters,\
-#     q107_semantic_cluster_dedup,q116_cluster_canonicals_by_quality,\
-#     q124_leakage_safe_split,q128_incremental_components,\
-#     q132_incremental_cluster_maintenance,q143_dedup_audit,\
-#     q185_personalized_pagerank,q187_exact_substring_dedup,\
-#     q188_copurchase_communities,q189_community_modularity,\
-#     q196_community_name_neardup,q197_quality_filter_distillation,\
-#     q198_distilled_filter_rates,q201_curated_mix_funnel,\
-#     q202_doremi_mixture_weights,q205_learned_mix_funnel
+#   python tools/stamps.py --emit q168_mmr_diverse_rerank
 #
 # where the --emit argument is the round's CHANGED-KERNEL list — the
-# one input not derivable from artifacts.  This is OPTIMIZATION round
-# 2 of 2 (see OPTIMIZATION_r11.md); its changed kernels:
-#   - q69/q185: the co-purchase prologue re-spreads the 1-partition
-#     checkpointed distinct before the pair fanout (2.51 s -> 0.87 s),
-#     and pagerank/PPR chain rounds lazily between lineage cuts
-#     (components._CUT_EVERY=2 on dangling-free broadcast paths up to
-#     _CHAIN_MAX_EDGE_ROWS; bit-equal, 51->46 / 53->48 scheduler jobs);
-#   - q188/q189/q196: LPA's per-round label-update join (a row-wise
-#     no-op on the internally symmetric edge list) is removed and
-#     rounds chain at cadence 2 (bit-equal, trajectory-test-pinned);
-#   - q39/q40/q116/q124/q128/q132/q143: connected_components' per-round
-#     changed-labels join became an exact monotone label-sum probe
-#     (same convergence decisions by monotonicity);
-#   - q96/q107: kmeans_assign floors per-task work (corpus coalesced to
-#     ceil(cells/min_cells_per_task), capped at the existing partition
-#     count — 3.48 -> 2.14 / 4.39 -> 2.91 s, row-identical);
-#   - q187: exact_substring_dedup applies removals ROW-LOCALLY after a
-#     per-doc removal-set aggregate (token-grain anti-join +
-#     collect_list re-assembly gone; shuffle records 2.3x down);
-#   - q197/q198/q201/q202/q205: exp_gradient_weights runs the WHOLE
-#     reweight trajectory as one chained-fold query (was one query per
-#     round; property-pinned vs the DuckDB chain), _gd_loop
-#     backtick-quotes interpolated names (plain identifiers parse
-#     identically), and q201/q205 fuse their readout collects.
-# The ledger remains OVERSUBSCRIBED (83 age>=2 rows spill), so the
-# window is 20 changed + the oldest 30 (r06 rows in registration
-# order); leftover r06/r07 rows MUST lead the next round — re-run
-# stamps.py --emit then.  All left-out rows are sf0.001-parity-green on
-# HEAD via tests/test_oracle_parity.py (every run) and sf0.01-green in
-# this round's full sweep.
+# one input not derivable from artifacts.  This round's one changed
+# kernel: q168's mmr_rerank runs its greedy as one grouped-map pass
+# keyed by query instead of k_select unrolled join rounds (output
+# exact-hex identical at sf0.001 and sf0.01).
+# The ledger remains OVERSUBSCRIBED (73 age>=2 rows spill), so the
+# window is 1 changed + the oldest 49; leftover r07/r08 rows MUST lead
+# the next round — re-run stamps.py --emit then.  All left-out rows
+# are sf0.001-parity-green on HEAD via tests/test_oracle_parity.py
+# (every run).
 #
 # The driver's CORRECTNESS run verifies a bounded window (50 entries)
 # taken in registration order, so queries() exposes the registry ROTATED
@@ -113,57 +81,57 @@ def register(name: str, sql: str | None, doc: str = ""):
 # regardless of position.
 _ROTATE_FIRST: tuple[str, ...] = (
     # --- changed kernel this round
-    "q39_neardup_clusters",  # r10
-    "q40_corpus_curation",  # r10
-    "q69_pagerank",  # r10
-    "q96_kmeans_clusters",  # r06
-    "q107_semantic_cluster_dedup",  # r09
-    "q116_cluster_canonicals_by_quality",  # r10
-    "q124_leakage_safe_split",  # r10
-    "q128_incremental_components",  # r10
-    "q132_incremental_cluster_maintenance",  # r10
-    "q143_dedup_audit",  # r10
-    "q185_personalized_pagerank",  # r10
-    "q187_exact_substring_dedup",  # r08
-    "q188_copurchase_communities",  # r10
-    "q189_community_modularity",  # r10
-    "q196_community_name_neardup",  # r10
-    "q197_quality_filter_distillation",  # r10
-    "q198_distilled_filter_rates",  # r10
-    "q201_curated_mix_funnel",  # r10
-    "q202_doremi_mixture_weights",  # r10
-    "q205_learned_mix_funnel",  # r10
+    "q168_mmr_diverse_rerank",  # r08
     # --- oldest stamped rows (stamp round asc, registration order)
-    "q71_map_explode",  # r06
-    "q72_conversion_funnel",  # r06
-    "q73_retention_cohorts",  # r06
-    "q74_scd2_intervals",  # r06
-    "q79_growth_accounting",  # r06
-    "q80_next_event_features",  # r06
-    "q89_session_intervals",  # r06
-    "q95_containment_dups",  # r06
-    "q108_incremental_dedup",  # r06
-    "q111_streaming_incremental_dedup",  # r06
-    "q112_token_budget_selection",  # r06
-    "q113_incremental_minhash_dedup",  # r06
-    "q115_frame_sampling",  # r06
-    "q117_upsert_replay",  # r06
-    "q118_repeated_span_coverage",  # r06
-    "q119_ann_ivf_persisted",  # r06
-    "q120_quality_threshold_for_budget",  # r06
-    "q121_event_mix_drift",  # r06
-    "q122_projected_rerank_topk",  # r06
-    "q123_stratified_sample",  # r06
-    "q125_mixture_budget_selection",  # r06
-    "q126_heavy_hitter_parts",  # r06
-    "q127_curation_funnel",  # r06
-    "q129_weighted_sample",  # r06
-    "q130_per_source_quality_cut",  # r06
-    "q131_source_overlap_matrix",  # r06
-    "q12_active_user_segments",  # r07
-    "q13_order_priority_sets",  # r07
-    "q15_top_parts_global",  # r07
-    "q18_zone_activity",  # r07
+    "q21_minhash_lsh_pairs",  # r07
+    "q23_simhash",  # r07
+    "q24_cosine_topk",  # r07
+    "q28_token_stats",  # r07
+    "q32_streaming_weekly_rollup",  # r07
+    "q37_value_quantiles",  # r07
+    "q42_hash_split",  # r07
+    "q46_pivot",  # r07
+    "q47_unpivot",  # r07
+    "q48_ranking_functions",  # r07
+    "q49_cube",  # r07
+    "q54_repetition_ratio",  # r07
+    "q55_stratified_sample",  # r07
+    "q56_full_outer_reconciliation",  # r07
+    "q58_training_sequences",  # r07
+    "q60_decontamination",  # r07
+    "q61_pii_scrub",  # r07
+    "q62_embedding_quantize",  # r07
+    "q63_tfidf_top_terms",  # r07
+    "q64_document_chunking",  # r07
+    "q68_trimmed_mean",  # r07
+    "q75_weighted_sample",  # r07
+    "q76_mad_outliers",  # r07
+    "q78_pareto_abc",  # r07
+    "q81_transition_matrix",  # r07
+    "q133_bm25_retrieval",  # r07
+    "q134_hybrid_rrf_retrieval",  # r07
+    "q135_embedding_covariance",  # r07
+    "q136_pc_projection",  # r07
+    "q137_vocab_coverage",  # r07
+    "q138_source_centroid_cosine",  # r07
+    "q139_revenue_trend_ols",  # r07
+    "q140_source_calibrated_quality",  # r07
+    "q141_bigram_lm_quality",  # r07
+    "q142_streaming_countmin",  # r07
+    "q144_model_rerank",  # r07
+    "q145_sketch_quality_deciles",  # r07
+    "q146_value_psi_weekend",  # r07
+    "q147_join_size_estimate",  # r07
+    "q148_langid_confusion",  # r07
+    "q149_ann_recall_eval",  # r07
+    "q150_shard_rebalance_plan",  # r07
+    "q151_freshness_report",  # r07
+    "q152_streaming_covariance",  # r07
+    "q01_pricing_summary",  # r08
+    "q82_linear_regression",  # r08
+    "q84_event_entropy",  # r08
+    "q85_basket_pairs",  # r08
+    "q86_price_skyline",  # r08
 )
 
 
@@ -7242,15 +7210,15 @@ from spark_hadoop_automation_in_cloud_spark.operators.similarity import (  # noq
     "(1-lam)*max_selected sim(d,s) — the diversity pass that keeps "
     "five near-duplicates from filling a context window. The only "
     "corpus-scale work is q24's candidate scan (broadcast queries x "
-    "unshuffled corpus); the greedy runs 5 unrolled DataFrame rounds "
-    "(anti-join, max-to-selected, window argmax) on frames bounded at "
-    "queries x 20^2 — no driver loop state, cost independent of corpus "
-    "size. All sims snap to the 1e-6 integer grid BEFORE the greedy "
-    "and every score is the exact bigint numerator 70*sim_g - "
-    "30*div_g — no float ever enters an argmax or the output (a "
-    "round(float,6) form hit a perfect HALF_UP-vs-multiply-first tie "
-    "on a real sf0.01 row); the oracle unrolls the same 5 rounds as "
-    "CTEs on the same integers.",
+    "unshuffled corpus); the greedy is ONE grouped-map pass keyed by "
+    "query (cogroup of candidates and pair sims, applyInPandas) over "
+    "state bounded at 20 + 20^2 sims — plan and jobs independent of "
+    "k_select and corpus size. All sims snap to the 1e-6 integer grid "
+    "BEFORE the greedy and every score is the exact bigint numerator "
+    "70*sim_g - 30*div_g — no float ever enters an argmax or the "
+    "output (a round(float,6) form hit a perfect HALF_UP-vs-multiply-"
+    "first tie on a real sf0.01 row); the oracle unrolls the same 5 "
+    "greedy steps as CTEs on the same integers.",
 )
 def q168_mmr_diverse_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings", parallelize=True)

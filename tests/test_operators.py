@@ -3175,7 +3175,8 @@ def test_k_anonymity_histogram(spark):
 
 def test_mmr_rerank_diversifies(spark):
     """With lam=0.5, after the top pick its near-duplicate must lose to
-    the off-axis candidate despite higher query similarity."""
+    the off-axis candidate despite higher query similarity; k_select
+    past the candidate count returns the same rows."""
     from spark_hadoop_automation_in_cloud_spark.operators.similarity import mmr_rerank
 
     rows = [
@@ -3192,6 +3193,11 @@ def test_mmr_rerank_diversifies(spark):
     assert order == [1, 3, 2]
     # greedy scores are monotone non-increasing only within... positions exist
     assert {r["position"] for r in out} == {1, 2, 3}
+    # asking for more picks than candidates stops when they run out
+    more = mmr_rerank(
+        df, df.where(F.col("vec_id") == 0), k_candidates=3, k_select=5, lam=0.5
+    ).collect()
+    assert sorted(more) == sorted(out)
 
 
 def test_segmentation_stats_hand_compression(spark):

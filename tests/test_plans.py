@@ -665,3 +665,40 @@ def test_triangle_count_normalizes_edges_once(spark):
     assert got == {1: 3, 2: 3, 3: 3, 4: 4, 10: 1, 11: 1}
     norm = re.findall(r"least\(p1#\d+L, p2#\d+L\) AS u#", plans)
     assert len(norm) == 1, plans[:3000]
+
+
+def test_mmr_rerank_plan_does_not_grow_with_k_select(spark):
+    """``mmr_rerank``'s greedy is one grouped-map pass keyed by query, so
+    its executed plans hold the same joins and exchanges at any
+    ``k_select``.  When each greedy step was an unrolled round (a join
+    to the growing selected union, a left-anti and a window argmax), the
+    plan at step t held about 3^(t-1) copies of step 1."""
+    import re
+
+    from spark_hadoop_automation_in_cloud_spark.operators.similarity import mmr_rerank
+
+    corpus = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5) - 2.0, 1.0]) for i in range(8)],
+        "vec_id bigint, embedding array<float>",
+    )
+    queries = corpus.where(F.col("vec_id") < 2)
+    shape = {}
+    # AQE off: one plan per execution (no final/initial pair to count twice)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for k_select in (2, 4):
+            plans = _executed_plan_descriptions(
+                spark, lambda: mmr_rerank(corpus, queries, 5, k_select)
+            )
+            # no window over the selected state (a per-step argmax)
+            assert not re.search(r"windowspecdefinition\([^\n]*__(sg|score_num)", plans), plans
+            shape[k_select] = (
+                len(re.findall(r"\b\w*Join\b", plans)),
+                len(re.findall(r"\bExchange\b", plans)),
+                len(set(re.findall(r"FlatMapCoGroupsInPandas \((\d+)\)", plans))),
+            )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert shape[2] == shape[4], shape
+    assert shape[2][2] == 1, shape

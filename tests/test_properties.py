@@ -982,9 +982,10 @@ def test_bpe_cross_engine_parity_any_corpus(spark, texts, n_merges):
     )
 )
 def test_mmr_equals_python_greedy(spark, vecs):
-    """The unrolled-round MMR selection equals a pure-Python greedy on
+    """The grouped-map MMR selection equals a pure-Python greedy on
     random integer vectors (sims rounded to 6dp first, as the operator
-    pins)."""
+    pins), for two queries per example so the per-query keying is
+    checked too."""
     import math
 
     from spark_hadoop_automation_in_cloud_spark.operators.similarity import mmr_rerank
@@ -993,9 +994,9 @@ def test_mmr_equals_python_greedy(spark, vecs):
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     got = sorted(
-        (r["position"], r["neighbor_id"])
+        (r["query_id"], r["position"], r["neighbor_id"])
         for r in mmr_rerank(
-            df, df.where(F.col("vec_id") == 0), k_candidates=kc, k_select=ks, lam=lam
+            df, df.where(F.col("vec_id") <= 1), k_candidates=kc, k_select=ks, lam=lam
         ).collect()
     )
 
@@ -1006,30 +1007,37 @@ def test_mmr_equals_python_greedy(spark, vecs):
             6,
         )
 
-    q = rows[0][1]
-    cands = sorted(
-        ((cos(q, v), -i) for i, v in rows[1:]),
-        key=lambda t: (-t[0], -t[1]),
-    )[:kc]
-    cand_ids = [-i for _, i in cands]
-    simq = {i: cos(q, rows[i][1]) for i in cand_ids}
-    sel: list[int] = []
-    for _ in range(ks):
-        rest = [i for i in cand_ids if i not in sel]
-        if not sel:
-            pick = max(rest, key=lambda i: (simq[i], -i))
-        else:
-            pick = max(
-                rest,
-                key=lambda i: (
-                    lam * simq[i]
-                    - (1 - lam) * max(cos(rows[i][1], rows[s][1]) for s in sel),
-                    -i,
-                ),
-            )
-        sel.append(pick)
-    want = sorted((p + 1, i) for p, i in enumerate(sel))
-    assert got == want
+    def grid(sim):
+        return round(sim * 1_000_000)
+
+    want = []
+    for qid in (0, 1):
+        q = rows[qid][1]
+        cands = sorted(
+            ((cos(q, v), -i) for i, v in rows if i != qid),
+            key=lambda t: (-t[0], -t[1]),
+        )[:kc]
+        cand_ids = [-i for _, i in cands]
+        simq = {i: cos(q, rows[i][1]) for i in cand_ids}
+        sel: list[int] = []
+        for _ in range(ks):
+            rest = [i for i in cand_ids if i not in sel]
+            if not sel:
+                pick = max(rest, key=lambda i: (simq[i], -i))
+            else:
+                # scored on the operator's exact 1e-8 grid, so a float
+                # tie cannot flip the reference's argmax
+                pick = max(
+                    rest,
+                    key=lambda i: (
+                        70 * grid(simq[i])
+                        - 30 * max(grid(cos(rows[i][1], rows[s][1])) for s in sel),
+                        -i,
+                    ),
+                )
+            sel.append(pick)
+        want += [(qid, p + 1, i) for p, i in enumerate(sel)]
+    assert got == sorted(want)
 
 
 @settings(
