@@ -39,10 +39,12 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from spark_hadoop_automation_in_cloud_spark.args import StreamArgs
 from spark_hadoop_automation_in_cloud_spark.session import session_scope
 from spark_hadoop_automation_in_cloud_spark.streaming.incremental import (
     compact_dedup_index,
-    run_streaming_incremental_dedup,
+    dedup_batch_against_index,
+    drain,
 )
 
 USAGE = (
@@ -55,37 +57,28 @@ DOC_SCHEMA = "doc_id long, text string"
 
 def main(argv: list[str]) -> int:
     compact = "--compact" in argv
-    argv = [a for a in argv if a != "--compact"]
-    if not 3 <= len(argv) <= 4:
+    try:
+        args = StreamArgs.from_argv([x for x in argv if x != "--compact"])
+    except ValueError:
         print(USAGE, file=sys.stderr)
         return 2
-    src, index_dir, ckpt = argv[:3]
-    max_files = None
-    if len(argv) == 4:
-        try:
-            max_files = int(argv[3])
-        except ValueError:
-            print(USAGE, file=sys.stderr)
-            return 2
-        if max_files < 1:  # 0 would silently mean "unbounded" — reject
-            print(USAGE, file=sys.stderr)
-            return 2
     with session_scope() as spark:
-        reader = spark.readStream.schema(DOC_SCHEMA)
-        if max_files is not None:
-            reader = reader.option("maxFilesPerTrigger", str(max_files))
-        stream = reader.parquet(src)
-        run_streaming_incremental_dedup(stream, index_dir, ckpt, "doc_id", "text")
-        if compact and os.path.isdir(index_dir):
+        reader = spark.readStream.schema(DOC_SCHEMA).options(**args.reader_options)
+        drain(
+            reader.parquet(args.src),
+            args.checkpoint,
+            lambda b, e: dedup_batch_against_index(b, args.out, "doc_id", "text", e),
+        )
+        if compact and os.path.isdir(args.out):
             epochs = [
                 int(d.split("=", 1)[1])
-                for d in os.listdir(index_dir)
+                for d in os.listdir(args.out)
                 if d.startswith("batch_id=")
             ]
             if epochs:
                 # every epoch on disk is committed once the availableNow
                 # drain has terminated, so the whole index may collapse
-                compact_dedup_index(spark, index_dir, upto_epoch=max(epochs) + 1)
+                compact_dedup_index(spark, args.out, upto_epoch=max(epochs) + 1)
     return 0
 
 

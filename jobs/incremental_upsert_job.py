@@ -35,10 +35,12 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from spark_hadoop_automation_in_cloud_spark.args import StreamArgs
 from spark_hadoop_automation_in_cloud_spark.functions.timeutils import epoch_us
 from spark_hadoop_automation_in_cloud_spark.session import session_scope
 from spark_hadoop_automation_in_cloud_spark.streaming.incremental import (
-    run_incremental_upsert,
+    drain,
+    upsert_batch,
 )
 from spark_hadoop_automation_in_cloud_spark.streaming.rollup_stream import stream_events
 
@@ -62,20 +64,11 @@ def main(argv: list[str]) -> int:
             return 2
         else:
             pos.append(a)
-    if not 3 <= len(pos) <= 4:
+    try:
+        args = StreamArgs.from_argv(pos)
+    except ValueError:
         print(USAGE, file=sys.stderr)
         return 2
-    src, tgt, ckpt = pos[:3]
-    max_files = None
-    if len(pos) == 4:
-        try:
-            max_files = int(pos[3])
-        except ValueError:
-            print(USAGE, file=sys.stderr)
-            return 2
-        if max_files < 1:  # 0 would silently mean "unbounded" — reject
-            print(USAGE, file=sys.stderr)
-            return 2
     merge_fn = None
     if duckdb_table is not None:
         from spark_hadoop_automation_in_cloud_spark.streaming.incremental import (
@@ -84,10 +77,7 @@ def main(argv: list[str]) -> int:
 
         merge_fn = duckdb_merge_fn(table=duckdb_table)
     with session_scope() as spark:
-        opts = (
-            {"maxFilesPerTrigger": str(max_files)} if max_files is not None else None
-        )
-        stream = stream_events(spark, src, reader_options=opts)
+        stream = stream_events(spark, args.src, reader_options=args.reader_options)
         snapshot = stream.select(
             "event_id",
             "user_id",
@@ -95,13 +85,11 @@ def main(argv: list[str]) -> int:
             epoch_us("ts").alias("ts_us"),
             "value",
         )
-        run_incremental_upsert(
+        keys, order = ["user_id", "event_type"], ["ts_us", "event_id"]
+        drain(
             snapshot,
-            tgt,
-            key_cols=["user_id", "event_type"],
-            order_cols=["ts_us", "event_id"],
-            checkpoint_dir=ckpt,
-            merge_fn=merge_fn,
+            args.checkpoint,
+            lambda b, _e: upsert_batch(b, args.out, keys, order, merge_fn),
         )
     return 0
 

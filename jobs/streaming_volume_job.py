@@ -31,9 +31,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from spark_hadoop_automation_in_cloud_spark.args import StreamArgs
 from spark_hadoop_automation_in_cloud_spark.session import session_scope
 from spark_hadoop_automation_in_cloud_spark.streaming.incremental import (
-    run_streaming_volume_monitor,
+    drain,
+    update_daily_counts,
 )
 
 USAGE = (
@@ -45,27 +47,17 @@ EVENT_SCHEMA = "event_type string, d date"
 
 
 def main(argv: list[str]) -> int:
-    if not 3 <= len(argv) <= 4:
+    try:
+        args = StreamArgs.from_argv(argv)
+    except ValueError:
         print(USAGE, file=sys.stderr)
         return 2
-    src, index_dir, ckpt = argv[:3]
-    max_files = None
-    if len(argv) == 4:
-        try:
-            max_files = int(argv[3])
-        except ValueError:
-            print(USAGE, file=sys.stderr)
-            return 2
-        if max_files < 1:  # 0 would silently mean "unbounded" — reject
-            print(USAGE, file=sys.stderr)
-            return 2
     with session_scope() as spark:
-        reader = spark.readStream.schema(EVENT_SCHEMA)
-        if max_files is not None:
-            reader = reader.option("maxFilesPerTrigger", str(max_files))
-        stream = reader.parquet(src)
-        run_streaming_volume_monitor(
-            stream, index_dir, ckpt, ["event_type"], "d"
+        reader = spark.readStream.schema(EVENT_SCHEMA).options(**args.reader_options)
+        drain(
+            reader.parquet(args.src),
+            args.checkpoint,
+            lambda b, e: update_daily_counts(b, args.out, ["event_type"], "d", e),
         )
     return 0
 

@@ -74,3 +74,34 @@ class JobArgs:
             coords_path=argv[4] if len(argv) > 4 else None,
             processed_dttm=argv[5] if len(argv) > 5 else None,
         )
+
+
+@dataclass(frozen=True)
+class StreamArgs:
+    """Arguments of one streaming CLI run (``jobs/incremental_*_job.py``,
+    ``jobs/streaming_*_job.py``): drain ``src`` into the state at ``out``,
+    resuming from ``checkpoint``; ``max_files_per_trigger`` bounds each
+    micro-batch (None = the source's default)."""
+
+    src: str
+    out: str
+    checkpoint: str
+    max_files_per_trigger: int | None = None
+
+    @classmethod
+    def from_argv(cls, argv: list[str]) -> "StreamArgs":
+        """``<src> <out> <checkpoint> [max_files_per_trigger]``; raises
+        ``ValueError`` on any other shape (the job prints its usage and
+        exits 2)."""
+        if not 3 <= len(argv) <= 4:
+            raise ValueError("usage: <job> src out checkpoint [max_files_per_trigger]")
+        n = int(argv[3]) if len(argv) == 4 else None
+        if n is not None and n < 1:  # 0 would silently mean "unbounded"
+            raise ValueError(f"max_files_per_trigger must be >= 1, got {n}")
+        return cls(argv[0], argv[1], argv[2], n)
+
+    @property
+    def reader_options(self) -> dict[str, str]:
+        """Stream-reader options carrying the per-trigger file bound."""
+        n = self.max_files_per_trigger
+        return {} if n is None else {"maxFilesPerTrigger": str(n)}

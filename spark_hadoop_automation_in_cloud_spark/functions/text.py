@@ -15,14 +15,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def token_count(text: Column) -> Column:
-    """Whitespace-delimited token count (0 for empty/blank strings)."""
-    trimmed = F.trim(text)
-    return F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r"\s+"))
-    )
-
-
 SQL_TOKEN_COUNT = (
     "CASE WHEN length(trim({t})) = 0 THEN 0"
     " ELSE len(string_split_regex(trim({t}), '\\s+')) END"
@@ -41,21 +33,4 @@ def sql_occurrence_count(expr: str, needle: str) -> str:
     esc = needle.replace("'", "''")
     return (
         f"CAST((length({expr}) - length(replace({expr}, '{esc}', ''))) / {len(needle)} AS INT)"
-    )
-
-
-def char_class_ratio(text: Column, pattern: str) -> Column:
-    """Fraction of characters NOT matching ``pattern`` removed — i.e. the
-    ratio of characters that match the regex character class."""
-    kept = F.length(F.regexp_replace(text, pattern, ""))
-    return F.when(F.length(text) == 0, F.lit(0.0)).otherwise(
-        (F.length(text) - kept).cast("double") / F.length(text)
-    )
-
-
-def sql_char_class_ratio(expr: str, pattern: str) -> str:
-    return (
-        f"CASE WHEN length({expr}) = 0 THEN 0.0 ELSE "
-        f"CAST(length({expr}) - length(regexp_replace({expr}, '{pattern}', '', 'g')) AS DOUBLE)"
-        f" / length({expr}) END"
     )

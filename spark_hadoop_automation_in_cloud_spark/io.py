@@ -14,12 +14,19 @@ Reference parity map (SURVEY §2.1):
 - S4 idempotent datamart sink        → ``write_datamart``
 - S5 partitioned staging sink        → ``write_partitioned`` (the mover's
   sink, ``sources.mover.move_raw_to_staging``)
+
+Run-over-run state on plain parquet is replaced through ONE crash-safe
+directory swap, ``repair_swap`` + ``commit_swap``: ``compact`` here, and
+``streaming.incremental``'s upsert snapshot, fingerprint-index compaction
+and near-dup cluster labels.  No other module renames or deletes a
+directory.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -322,6 +329,43 @@ def write_zordered(
     return path
 
 
+def repair_swap(path: str) -> tuple[str, str]:
+    """Entry half of the crash-safe directory swap that replaces ``path``:
+    repair whatever a previous crash left, and return the (tmp, bak)
+    sibling paths for :func:`commit_swap`.
+
+    - backup + live both present → the old crash happened after the new
+      directory landed: drop the backup;
+    - backup present, live missing → the crash happened mid-swap: restore
+      the backup;
+    - stale tmp → always discarded (the caller rewrites it).
+
+    Local-filesystem paths only: the os-level renames are what make the
+    swap atomic; on an object store the table format's commit does this.
+    """
+    tmp, bak = f"{path}.tmp-merge", f"{path}.bak-merge"
+    if os.path.isdir(bak):
+        if os.path.isdir(path):
+            shutil.rmtree(bak)
+        else:
+            os.rename(bak, path)
+    if os.path.isdir(tmp):
+        shutil.rmtree(tmp)
+    return tmp, bak
+
+
+def commit_swap(path: str, tmp: str, bak: str) -> None:
+    """Commit half of the swap: the fully written ``tmp`` replaces
+    ``path``.  The live dir is renamed aside BEFORE the tmp renames in,
+    so at every crash point either the old or the new directory is
+    recoverable by :func:`repair_swap` (a delete-then-rename would lose
+    both if the process died between the two calls)."""
+    if os.path.isdir(path):
+        os.rename(path, bak)
+    os.rename(tmp, path)
+    shutil.rmtree(bak, ignore_errors=True)
+
+
 def compact(
     spark: SparkSession,
     path: str,
@@ -339,14 +383,14 @@ def compact(
     ``repartition(n)`` when the inputs are skewed enough that merged
     partitions would be lopsided — that pays one shuffle for even output).
 
-    The rewrite lands in ``<path>.tmp-compact`` and replaces the original
-    via directory rename, so a crash mid-compaction leaves the original
-    intact (same swap discipline as streaming.incremental.upsert_batch).
+    The rewrite is committed through :func:`repair_swap` /
+    :func:`commit_swap`, so a crash mid-compaction leaves the original
+    (or the finished rewrite) recoverable, and the next call repairs it
+    on entry.
     """
     import math
-    import os
-    import shutil
 
+    tmp, bak = repair_swap(path)
     total = sum(
         os.path.getsize(os.path.join(root, f))
         for root, _, files in os.walk(path)
@@ -356,10 +400,8 @@ def compact(
     n = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(path)
     out = df.repartition(n) if rebalance else df.coalesce(n)
-    tmp = f"{path}.tmp-compact"
     out.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
+    commit_swap(path, tmp, bak)
     return sum(
         1 for f in os.listdir(path) if f.endswith(".parquet")
     )

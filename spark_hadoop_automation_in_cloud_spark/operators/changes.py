@@ -1,9 +1,8 @@
 """Sequence/change-detection operators (lag-based).
 
 Reference (SURVEY §2.5 W4): travel detection — a user "travels" when the
-city of consecutive messages changes (``src/spark/collector.py:442-448``);
-home-city inference looks at gaps > 27 days between consecutive travels
-(``collector.py:483-496``).
+city of consecutive messages changes (``src/spark/collector.py:442-448``).
+Home-city inference lives in ``plans.demographics``.
 
 All are one window (partition by entity, order by time) → single shuffle on
 the entity key; Spark sorts within partitions, no driver involvement.
@@ -12,7 +11,7 @@ Ordering always includes a unique tiebreaker for determinism.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -35,49 +34,4 @@ def detect_changes(
     return df.withColumn(
         change_col,
         (prev.isNull() | (F.col(value_col) != prev)).cast("int"),
-    )
-
-
-def gap_days(
-    df: DataFrame,
-    entity_col: str,
-    ts_col: str,
-    tiebreak_col: str,
-    gap_col: str = "gap_days",
-) -> DataFrame:
-    """Days elapsed since the entity's previous row (null for the first)."""
-    prev_ts = F.lag(ts_col).over(_w(entity_col, ts_col, tiebreak_col))
-    return df.withColumn(gap_col, F.datediff(F.col(ts_col), prev_ts))
-
-
-def stable_value(
-    df: DataFrame,
-    entity_col: str,
-    ts_col: str,
-    value_col: str,
-    tiebreak_col: str,
-    min_days: int,
-) -> DataFrame:
-    """Per entity: the most recent value held for more than ``min_days``
-    consecutive days ("home city" semantics, ``collector.py:483-496``).
-
-    A run is the span between consecutive change points; its length is
-    next_change_ts - change_ts (now() for the open run).  Returns one row
-    per entity with ``stable_<value_col>`` (null if no qualifying run).
-    """
-    w = _w(entity_col, ts_col, tiebreak_col)
-    prev = F.lag(value_col).over(w)
-    changes = df.withColumn(
-        "__chg", (prev.isNull() | (F.col(value_col) != prev)).cast("int")
-    ).where(F.col("__chg") == 1)
-    nxt = F.lead(ts_col).over(_w(entity_col, ts_col, tiebreak_col))
-    runs = changes.withColumn("__run_days", F.datediff(nxt, F.col(ts_col)))
-    qualified = runs.where(F.col("__run_days") > min_days)
-    return (
-        qualified.groupBy(entity_col)
-        .agg(
-            F.max_by(
-                value_col, F.struct(F.col(ts_col), F.col(tiebreak_col))
-            ).alias(f"stable_{value_col}")
-        )
     )

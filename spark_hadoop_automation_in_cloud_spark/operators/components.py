@@ -495,18 +495,16 @@ def incremental_components(
             )
             .distinct()
         )
-        # ONE batch-sized result checkpoint, outside the scope's pins (the
-        # returned lineage pins exactly one block): reduced labels
-        # annotated with the is-new flag.  A per-batch ingest loop then
-        # accumulates one O(batch) block per call instead of three.
-        ann = (
+        # reduced labels annotated with the is-new flag, collected while
+        # the scope's pins are live: batch-sized (it is broadcast into the
+        # history remap below), and the returned frame owns no block, so
+        # a per-batch ingest loop accumulates none
+        ann = collect_local(
             reduced.join(
                 F.broadcast(new_ids), reduced.node == F.col("__nid"), "left"
-            )
-            .select(
+            ).select(
                 "node", "component_id", F.col("__nid").isNotNull().alias("__is_new")
             )
-            .localCheckpoint()
         )
     remap = ann.select(
         F.col("node").alias("__root"), F.col("component_id").alias("__new_comp")

@@ -622,24 +622,6 @@ def fuzzy_pairs_blocked(
     )
 
 
-def sql_fuzzy_pairs_blocked(
-    src: str, max_dist: int = 2, id_col: str = "c_custkey", name_col: str = "c_name"
-) -> str:
-    """DuckDB oracle: same block semantics spelled as predicates — the
-    length band is implied by the distance bound (lossless), the first-char
-    restriction is replayed explicitly so the oracle carries the same
-    recall trade as the Spark plan."""
-    return f"""
-SELECT a.{id_col} AS left_id, b.{id_col} AS right_id,
-       CAST(levenshtein(a.{name_col}, b.{name_col}) AS INT) AS edit_dist
-FROM {src} a JOIN {src} b
-  ON a.{id_col} < b.{id_col}
- AND substring(a.{name_col}, 1, 1) = substring(b.{name_col}, 1, 1)
- AND abs(length(a.{name_col}) - length(b.{name_col})) <= {max_dist}
-WHERE levenshtein(a.{name_col}, b.{name_col}) <= {max_dist}
-"""
-
-
 def contamination_overlap(
     train_shingles: DataFrame,
     test_shingles: DataFrame,

@@ -1,5 +1,5 @@
-"""Pair-generation operators: self-join candidates, anti-join exclusion,
-distance-threshold (range) join.
+"""Pair-generation operators: anti-join exclusion, distance-threshold
+(range) join, block-salted within-group pairs.
 
 Reference (SURVEY §2.3): the friend-recommendation datamart builds user
 pairs from a self equi-join on subscription channel (J6,
@@ -29,33 +29,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spark_hadoop_automation_in_cloud_spark.functions.geo import haversine_km
-
-
-def self_pairs(
-    df: DataFrame,
-    key: str | Sequence[str],
-    id_col: str,
-    payload: Sequence[str] = (),
-) -> DataFrame:
-    """All unordered id pairs sharing ``key``: (left_id < right_id).
-
-    Output: key cols + ``left_<id_col>``, ``right_<id_col>`` (+ payload from
-    each side prefixed ``left_``/``right_``).
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    cols = [*keys, id_col, *payload]
-    l = df.select(*cols).alias("l")
-    r = df.select(*cols).alias("r")
-    cond = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
-    pair_cond = F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
-    out = l.join(r, cond + [pair_cond], "inner")
-    sel = [F.col(f"l.{k}").alias(k) for k in keys]
-    sel.append(F.col(f"l.{id_col}").alias(f"left_{id_col}"))
-    sel.append(F.col(f"r.{id_col}").alias(f"right_{id_col}"))
-    for p in payload:
-        sel.append(F.col(f"l.{p}").alias(f"left_{p}"))
-        sel.append(F.col(f"r.{p}").alias(f"right_{p}"))
-    return out.select(*sel)
 
 
 def exclude_pairs(

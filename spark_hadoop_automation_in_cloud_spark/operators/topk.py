@@ -1,4 +1,4 @@
-"""Top-k-per-group and first/last-per-group operators.
+"""Top-k-per-group operator.
 
 Reference patterns (SURVEY §2.5-2.6):
 - W1/O2: ``row_number`` over (partition, order) + ``rank <= k`` filter
@@ -11,9 +11,7 @@ Determinism contract: every ordering includes a unique tiebreaker column so
 results are stable across engines and shuffle layouts (the reference's
 versions are tie-nondeterministic — SURVEY §7.5.1).
 
-Scale: one shuffle on the partition keys; for k=1 Catalyst can use
-``max_by``-style partial aggregation (``first_last_by`` below) which
-map-side-combines and avoids materializing full sorted partitions.
+Scale: one shuffle on the partition keys.
 """
 
 from __future__ import annotations
@@ -40,40 +38,3 @@ def topk_per_group(
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
     out = df.withColumn(rank_col, F.row_number().over(w)).where(F.col(rank_col) <= k)
     return out if keep_rank else out.drop(rank_col)
-
-
-def latest_per_group(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    ts_col: str,
-    tiebreak_col: str,
-) -> DataFrame:
-    """Row with the max (ts, tiebreak) per group — deterministic 'latest'.
-
-    Replaces the reference's ``F.first(...).over(orderBy desc)`` idiom
-    (``collector.py:337-353``) with a window-rank that has an explicit total
-    order.
-    """
-    return topk_per_group(
-        df, partition_by, [F.col(ts_col).desc(), F.col(tiebreak_col).desc()], k=1
-    )
-
-
-def first_last_by(
-    df: DataFrame,
-    group_by: Sequence[str],
-    ts_col: str,
-    value_col: str,
-) -> DataFrame:
-    """Per group: earliest ts, latest ts, and the value at each endpoint.
-
-    Aggregation form (``min_by``/``max_by`` + ``min``/``max``): partial
-    aggregation map-side, one shuffle, no per-partition sort — the cheap
-    idiom for k=1 endpoints at scale (SURVEY J2 note).
-    """
-    return df.groupBy(*group_by).agg(
-        F.min(ts_col).alias("first_ts"),
-        F.max(ts_col).alias("last_ts"),
-        F.min_by(value_col, F.col(ts_col)).alias("first_value"),
-        F.max_by(value_col, F.col(ts_col)).alias("last_value"),
-    )

@@ -4766,8 +4766,8 @@ FROM d JOIN fb ON d.content_hash = fb.content_hash AND d.b = fb.batch_id
 GROUP BY d.content_hash, fb.batch_id
 """,
     doc="Streaming dedup-on-arrival (streaming/incremental.py "
-    "dedup_batch_against_index, the foreachBatch body of "
-    "run_streaming_incremental_dedup): documents arrive as three "
+    "dedup_batch_against_index, the foreachBatch body its CLI runs "
+    "under drain): documents arrive as three "
     "deterministic micro-batches (md5 bucket % 3 = epoch) and each "
     "batch is deduped against the partitioned fingerprint index of "
     "every earlier epoch, its survivors becoming the index's next "
@@ -4783,18 +4783,16 @@ GROUP BY d.content_hash, fb.batch_id
     "containing the hash.",
 )
 def q111_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from spark_hadoop_automation_in_cloud_spark.streaming.incremental import (
         dedup_batch_against_index,
     )
 
-    root = tempfile.mkdtemp(prefix="q111_")
-    idx = f"{root}/index"
     d = read_table(spark, sf_dir, "documents")
     bucket = hashing.md5_prefix_int(F.col("doc_id"), nhex=8, salt=":sb") % 3
-    try:
+    with tempfile.TemporaryDirectory(prefix="q111_", ignore_cleanup_errors=True) as root:
+        idx = f"{root}/index"
         for b in range(3):
             dedup_batch_against_index(
                 d.where(bucket == b).select("doc_id", "text"),
@@ -4812,8 +4810,6 @@ def q111_streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFr
         # must not lazily depend on TMPDIR state, so the whole tempdir is
         # reclaimed here instead of leaking one tree per invocation
         return collect_local(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 from spark_hadoop_automation_in_cloud_spark.operators.packing import (  # noqa: E402
@@ -5038,7 +5034,6 @@ WHERE rn = 1
     "directions, not just append-newer.",
 )
 def q117_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     import duckdb
@@ -5048,14 +5043,13 @@ def q117_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_batch,
     )
 
-    root = tempfile.mkdtemp(prefix="q117_")
-    db = f"{root}/warehouse.duckdb"
     e = read_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
     batch = hashing.md5_prefix_int(F.col("event_id"), nhex=8, salt=":ub") % 3
     merge = duckdb_merge_fn()
-    try:
+    with tempfile.TemporaryDirectory(prefix="q117_", ignore_cleanup_errors=True) as root:
+        db = f"{root}/warehouse.duckdb"
         # 0, 1, 2, then 1 again: the replay sees only stale-or-equal rows
         for b in (0, 1, 2, 1):
             upsert_batch(
@@ -5069,9 +5063,6 @@ def q117_upsert_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).df()
         finally:
             con.close()
-    finally:
-        # the snapshot is fully materialized in pdf; reclaim the tempdir
-        shutil.rmtree(root, ignore_errors=True)
     return spark.createDataFrame(pdf)
 
 
@@ -5121,12 +5112,10 @@ from spark_hadoop_automation_in_cloud_spark.operators.similarity import (  # noq
     "value-identical to the in-memory composition.",
 )
 def q119_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     emb = read_table(spark, sf_dir, "embeddings", parallelize=True)
-    root = tempfile.mkdtemp(prefix="q119_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q119_", ignore_cleanup_errors=True) as root:
         cent = ivf_centroids(emb, centroid_mod=37)
         ivf_build_lists(emb, cent).write.partitionBy("cell_id").parquet(f"{root}/lists")
         cent.write.parquet(f"{root}/centroids")
@@ -5139,8 +5128,6 @@ def q119_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = ivf_score(probes, lists, k=5)
         # materialize before the index dirs go away (q111's discipline)
         return collect_local(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -6001,7 +5988,7 @@ def q141_bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: q142's audit probe: ≤ this many (hash-ordered) users per event_type,
-#: so the materialize-before-rmtree collect is bounded by construction
+#: so the materialize-before-cleanup collect is bounded by construction
 #: (types × 200 rows) at ANY sf — the r06 verdict's one unbounded collect
 _CM_PROBE_PER_TYPE = 200
 
@@ -6029,7 +6016,6 @@ _CM_PROBE_PER_TYPE = 200
     "test_streaming.py.",
 )
 def q142_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from spark_hadoop_automation_in_cloud_spark.operators.sketches import (
@@ -6042,9 +6028,8 @@ def q142_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = read_table(spark, sf_dir, "events")
     bucket = hashing.md5_prefix_int(F.col("event_id"), nhex=8, salt=":cmb") % 3
-    root = tempfile.mkdtemp(prefix="q142_")
-    idx = f"{root}/index"
-    try:
+    with tempfile.TemporaryDirectory(prefix="q142_", ignore_cleanup_errors=True) as root:
+        idx = f"{root}/index"
         for b in range(3):
             update_countmin_index(
                 e.where(bucket == b).select("event_type", "user_id"),
@@ -6085,8 +6070,6 @@ def q142_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize before the index dir goes away (q111's idiom)
         return collect_local(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @register(
@@ -6628,7 +6611,6 @@ def q151_freshness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     "idiom); the stream wiring is pinned in test_streaming.py.",
 )
 def q152_streaming_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from spark_hadoop_automation_in_cloud_spark.streaming.incremental import (
@@ -6638,9 +6620,8 @@ def q152_streaming_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = read_table(spark, sf_dir, "embeddings")
     bucket = hashing.md5_prefix_int(F.col("vec_id"), nhex=8, salt=":cov") % 3
-    root = tempfile.mkdtemp(prefix="q152_")
-    idx = f"{root}/index"
-    try:
+    with tempfile.TemporaryDirectory(prefix="q152_", ignore_cleanup_errors=True) as root:
+        idx = f"{root}/index"
         for b in range(3):
             update_covariance_index(
                 e.where(bucket == b).select("embedding"), idx, "embedding", b
@@ -6654,8 +6635,6 @@ def q152_streaming_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = la._center(merged).select("i", "j", cov.alias("cov"))
         # materialize before the index dir goes away (q111's idiom)
         return collect_local(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # --- round-8 batch: bucketed layout, rule-level gating, exact KS drift --------
@@ -6686,33 +6665,31 @@ GROUP BY 1, 2
     "the tempdir removed per invocation (q111's idiom).",
 )
 def q153_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from spark_hadoop_automation_in_cloud_spark.operators import bucketing as bk
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "source", "lang")
     emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    root = tempfile.mkdtemp(prefix="q153_")
-    try:
-        bk.write_bucketed(docs, "q153_docs", f"{root}/docs", "doc_id", n_buckets=8)
-        bk.write_bucketed(emb, "q153_emb", f"{root}/emb", "vec_id", n_buckets=8)
-        j = bk.colocated_join(spark, "q153_docs", "q153_emb", "doc_id", "vec_id")
-        emb0 = F.expr(
-            "CAST(round(element_at(CAST(embedding AS ARRAY<DOUBLE>), 1)"
-            " * 1000000.0) AS BIGINT)"
-        )
-        out = j.groupBy("source", "lang").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum(emb0).cast("bigint").alias("emb0_grid_sum"),
-        )
-        # materialize before the table files go away (q111's idiom);
-        # bounded: |sources| x |langs| rows
-        return collect_local(out)
-    finally:
-        bk.drop_table(spark, "q153_docs")
-        bk.drop_table(spark, "q153_emb")
-        shutil.rmtree(root, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="q153_", ignore_cleanup_errors=True) as root:
+        try:
+            bk.write_bucketed(docs, "q153_docs", f"{root}/docs", "doc_id", n_buckets=8)
+            bk.write_bucketed(emb, "q153_emb", f"{root}/emb", "vec_id", n_buckets=8)
+            j = bk.colocated_join(spark, "q153_docs", "q153_emb", "doc_id", "vec_id")
+            emb0 = F.expr(
+                "CAST(round(element_at(CAST(embedding AS ARRAY<DOUBLE>), 1)"
+                " * 1000000.0) AS BIGINT)"
+            )
+            out = j.groupBy("source", "lang").agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                F.sum(emb0).cast("bigint").alias("emb0_grid_sum"),
+            )
+            # materialize before the table files go away (q111's idiom);
+            # bounded: |sources| x |langs| rows
+            return collect_local(out)
+        finally:
+            bk.drop_table(spark, "q153_docs")
+            bk.drop_table(spark, "q153_emb")
 
 
 @register(
@@ -6909,7 +6886,6 @@ def q159_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "in test_streaming.py.",
 )
 def q160_streaming_ann_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from spark_hadoop_automation_in_cloud_spark.operators.similarity import (
@@ -6924,8 +6900,7 @@ def q160_streaming_ann_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     emb = read_table(spark, sf_dir, "embeddings", parallelize=True)
-    root = tempfile.mkdtemp(prefix="q160_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q160_", ignore_cleanup_errors=True) as root:
         # freeze the models (offline-rebuild artifacts), then stream epochs
         ivf_centroids(emb).write.mode("overwrite").parquet(f"{root}/centroids")
         books = train_pq_codebooks(emb)
@@ -6941,8 +6916,6 @@ def q160_streaming_ann_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
         # materialize before the index dir goes away (q111's idiom);
         # bounded: n_queries x k rows
         return collect_local(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 from spark_hadoop_automation_in_cloud_spark.operators.components import (  # noqa: E402
@@ -7427,7 +7400,6 @@ def q173_purchase_ab_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "idiom); availableNow stream wiring pinned in test_streaming.py.",
 )
 def q174_streaming_volume_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from spark_hadoop_automation_in_cloud_spark.operators.checks import (
@@ -7441,8 +7413,7 @@ def q174_streaming_volume_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
     e = read_table(spark, sf_dir, "events").select(
         "event_id", "event_type", F.to_date("ts").alias("d")
     )
-    root = tempfile.mkdtemp(prefix="q174_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q174_", ignore_cleanup_errors=True) as root:
         bucket = hashing.md5_prefix_int(F.col("event_id"), nhex=8, salt=":vol") % 3
         for b in range(3):
             update_daily_counts(
@@ -7455,8 +7426,6 @@ def q174_streaming_volume_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
         # materialize before the index dir goes away (q111's idiom);
         # bounded: |types x days| rows
         return collect_local(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 from spark_hadoop_automation_in_cloud_spark.operators.sketches import (  # noqa: E402
@@ -7721,11 +7690,10 @@ ORDER BY source
     "equal the parquet source of truth exactly and the quarantine "
     "count equals exactly the injected garbage — a malformed line "
     "neither kills the job (FAILFAST) nor silently becomes an all-NULL "
-    "row (plain PERMISSIVE). Tempdir materialize-and-rmtree is the "
+    "row (plain PERMISSIVE). Tempdir materialize-then-cleanup is the "
     "q111/q117 idiom.",
 )
 def q179_json_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from spark_hadoop_automation_in_cloud_spark.io import read_json_quarantine
@@ -7733,8 +7701,7 @@ def q179_json_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source"
     )
-    root = tempfile.mkdtemp(prefix="q179_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="q179_", ignore_cleanup_errors=True) as root:
         d.write.mode("overwrite").json(f"{root}/landing")
         with open(f"{root}/landing/part-corrupt.json", "w") as f:
             for i in range(7):
@@ -7752,8 +7719,6 @@ def q179_json_quarantine_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).select(F.lit("__quarantined__").alias("source"), "n_rows")
         ).orderBy("source")
         return collect_local(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 from spark_hadoop_automation_in_cloud_spark.operators.components import (  # noqa: E402

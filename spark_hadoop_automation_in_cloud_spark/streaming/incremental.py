@@ -10,14 +10,17 @@ a plain DataFrame: the merge is ordinary batch code (dedup-by-key against
 the current snapshot), reusing the engine's batch idioms instead of a
 bespoke stateful operator.
 
-On plain parquet the merge is read-union-rewrite with a CRASH-SAFE
-directory swap: write to ``<path>.tmp-merge``, rename the live snapshot
-aside to ``<path>.bak-merge``, rename the tmp into place, drop the
-backup — at every crash point either the old or the new snapshot is
-recoverable, and ``upsert_batch`` repairs the directory state on entry
-before merging (a delete-then-rename "swap" would destroy the snapshot
-if the process died between the two calls).  Local-filesystem paths only:
-the os-level renames are what make the swap atomic; a cloud deployment
+Every stream here runs through ONE availableNow loop, :func:`drain`,
+with the per-batch body passed in (``upsert_batch``,
+``dedup_batch_against_index``, the ``update_*`` index writers).
+
+On plain parquet the merge is read-union-rewrite committed through the
+crash-safe directory swap in ``io`` (``repair_swap``/``commit_swap``):
+at every crash point either the old or the new snapshot is recoverable,
+and ``upsert_batch`` repairs the directory state on entry before
+merging.  ``compact_dedup_index`` and ``maintain_neardup_clusters``
+commit through the same swap.  Local-filesystem paths only: the
+os-level renames are what make the swap atomic; a cloud deployment
 targets a table format (Delta/Iceberg ``MERGE INTO``) where the atomic
 commit is the format's job.
 
@@ -36,12 +39,12 @@ a JDBC warehouse) plugs in the same way.
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_hadoop_automation_in_cloud_spark.io import commit_swap, repair_swap
 from spark_hadoop_automation_in_cloud_spark.operators.topk import topk_per_group
 from spark_hadoop_automation_in_cloud_spark.session import owned
 
@@ -186,38 +189,6 @@ def duckdb_merge_fn(table: str = "datamart") -> MergeFn:
     return merge
 
 
-def _repair_swap(path: str) -> tuple[str, str]:
-    """Entry half of the crash-safe directory-swap protocol (ONE
-    definition — upsert_batch and maintain_neardup_clusters share it so a
-    protocol fix can never drift between them): repair whatever a
-    previous crash left, return the (tmp, bak) sibling paths.
-
-    - backup + live both present → the old crash happened after the new
-      snapshot landed: drop the backup;
-    - backup present, live missing → the crash happened mid-swap: restore
-      the backup;
-    - stale tmp → always discarded (the caller rewrites it).
-    """
-    tmp, bak = f"{path}.tmp-merge", f"{path}.bak-merge"
-    if os.path.isdir(bak):
-        if os.path.isdir(path):
-            shutil.rmtree(bak)
-        else:
-            os.rename(bak, path)
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    return tmp, bak
-
-
-def _commit_swap(path: str, tmp: str, bak: str) -> None:
-    """Commit half of the swap protocol: the live dir is renamed aside
-    BEFORE the tmp renames in, so no crash point loses the snapshot."""
-    if os.path.isdir(path):
-        os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak, ignore_errors=True)
-
-
 def upsert_batch(
     batch_df: DataFrame,
     path: str,
@@ -232,18 +203,11 @@ def upsert_batch(
     the storage merge is the backend's: atomic commit, URI paths, and
     concurrent-reader behavior are the format's contract.
 
-    Without it, the default parquet backend applies the crash-safe swap
-    protocol (see module docstring): tmp is written fresh each call; the
-    live dir is renamed aside before the tmp renames in, so no crash point
-    loses the snapshot.  Entry first REPAIRS any state a previous crash
-    left behind:
-
-    - backup + live both present → the old crash happened after the new
-      snapshot landed: drop the backup;
-    - backup present, live missing → the crash happened mid-swap: restore
-      the backup (the half-merged tmp is discarded; the engine replays the
-      failed micro-batch from its checkpoint);
-    - stale tmp → always discarded (rewritten below).
+    Without it, the default parquet backend rewrites the merged snapshot
+    into a fresh tmp and commits it with ``io.commit_swap``.  Entry first
+    repairs any state a previous crash left behind (``io.repair_swap``):
+    a half-merged tmp is discarded, and the engine replays the failed
+    micro-batch from its checkpoint.
     """
     if merge_fn is not None:
         merge_fn(latest_per_key(batch_df, key_cols, order_cols), path, key_cols, order_cols)
@@ -255,7 +219,7 @@ def upsert_batch(
             "to target a table format instead"
         )
     spark = batch_df.sparkSession
-    tmp, bak = _repair_swap(path)
+    tmp, bak = repair_swap(path)
 
     if os.path.isdir(path):
         current = spark.read.parquet(path)
@@ -265,34 +229,33 @@ def upsert_batch(
     else:
         merged = latest_per_key(batch_df, key_cols, order_cols)
     merged.write.mode("overwrite").parquet(tmp)
-    _commit_swap(path, tmp, bak)
+    commit_swap(path, tmp, bak)
 
 
-def run_incremental_upsert(
-    stream_df: DataFrame,
-    path: str,
-    key_cols: list[str],
-    order_cols: list[str],
+def drain(
+    stream: DataFrame,
     checkpoint_dir: str,
-    merge_fn: MergeFn | None = None,
+    body: Callable[[DataFrame, int], None],
 ) -> None:
-    """Drain ``stream_df`` (availableNow) into a last-writer-wins snapshot
-    at ``path`` via foreachBatch — parquet swap by default, a table-format
-    MERGE backend when ``merge_fn`` is given.
+    """Drain ``stream`` (availableNow) through ``body(batch, epoch_id)``,
+    once per micro-batch — the one foreachBatch loop of every incremental
+    state writer here, e.g. ``drain(stream, ckpt, lambda b, e:
+    update_countmin_index(b, idx, ["event_type"], "user_id", e))``.
 
-    Batch sizing is the SOURCE's knob: set ``maxFilesPerTrigger`` when
-    building ``stream_df`` to turn one big drain into many incremental
-    merges (as the checkpoint-resume test does).
+    Resumable: the checkpoint carries the epoch counter, so successive
+    runs over a growing source directory process only what arrived since
+    the last run and keep extending the same state — the cron-shaped
+    "whatever arrived since last run" job.  Batch sizing is the SOURCE's
+    knob: set ``maxFilesPerTrigger`` when building ``stream`` to turn one
+    big drain into many incremental batches.
     """
-    q = (
-        stream_df.writeStream.foreachBatch(
-            lambda bdf, _bid: upsert_batch(bdf, path, key_cols, order_cols, merge_fn)
-        )
+    (
+        stream.writeStream.foreachBatch(body)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
 
 
 # --- streaming incremental dedup --------------------------------------------
@@ -347,35 +310,6 @@ def dedup_batch_against_index(
     )
 
 
-def run_streaming_incremental_dedup(
-    stream_docs: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    id_col: str,
-    text_col: str,
-) -> None:
-    """Drain ``stream_docs`` (availableNow) through per-batch incremental
-    dedup into the partitioned fingerprint index at ``index_path``.
-
-    Resumable: the checkpoint carries the epoch counter, so successive
-    runs over a growing source directory keep extending the same index —
-    the cron-shaped "dedup whatever arrived since last run" job.  Batch
-    granularity is the source's ``maxFilesPerTrigger`` knob, as with
-    :func:`run_incremental_upsert`.
-    """
-    q = (
-        stream_docs.writeStream.foreachBatch(
-            lambda bdf, bid: dedup_batch_against_index(
-                bdf, index_path, id_col, text_col, bid
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def compact_dedup_index(spark, index_path: str, upto_epoch: int) -> None:
     """Collapse fingerprint-index partitions ``batch_id < upto_epoch`` into
     the single partition ``batch_id = upto_epoch - 1``.
@@ -395,27 +329,25 @@ def compact_dedup_index(spark, index_path: str, upto_epoch: int) -> None:
     (``upto_epoch`` <= the next epoch to be processed).  Committed epochs
     never replay under the availableNow/checkpoint contract, so no future
     writer overwrites ``batch_id < upto_epoch`` partitions; an in-flight
-    epoch >= upto_epoch replays onto its OWN partition, which compaction
-    never touches.
+    epoch >= upto_epoch replays onto its OWN partition, whose rows
+    compaction copies unchanged.
 
     EXCLUSIVITY: the directory swap is crash-safe but not reader-atomic —
-    between the rename-aside loop and the final rename the index is
-    missing its old partitions, so a dedup probe running CONCURRENTLY
-    would under-match and re-admit duplicates.  Run compaction only while
-    no drain is active (the CLI's ``--compact`` runs after its own drain
-    terminates, which guarantees this for a single cron job; multiple
-    overlapping jobs need external mutual exclusion).  A table format
-    (Delta OPTIMIZE / Iceberg rewrite) is the concurrent-reader-safe
-    path, as with the merge seam.
+    between the two renames of the commit there is no index at
+    ``index_path``, so a dedup probe running CONCURRENTLY would under-match
+    and re-admit duplicates.  Run compaction only while no drain is active
+    (the CLI's ``--compact`` runs after its own drain terminates, which
+    guarantees this for a single cron job; multiple overlapping jobs need
+    external mutual exclusion).  A table format (Delta OPTIMIZE / Iceberg
+    rewrite) is the concurrent-reader-safe path, as with the merge seam.
 
-    Crash safety (local paths, mirroring ``upsert_batch``'s rename
-    protocol): the compacted rows are fully written to a sibling tmp dir
-    first, old partitions are renamed aside into a sibling bak dir, the
-    tmp renames into place, then the bak drops.  On entry any previous
-    crash is repaired: a leftover bak with no compacted target restores
-    itself (the tmp, if any, is discarded and compaction redone); a
-    leftover bak WITH the target means the old run finished its renames —
-    the bak is dropped.
+    Crash safety is the shared swap's (``io.repair_swap`` /
+    ``io.commit_swap``): the whole index is rewritten into the swap's tmp,
+    partitioned by ``batch_id`` (older rows relabeled, newer partitions
+    copied), then committed; at every crash point the old or the
+    compacted index is recoverable, and the next call repairs it on
+    entry.  A compaction short of the newest epoch rewrites the newer
+    partitions too; the CLI compacts every committed epoch.
     """
     if "://" in index_path:
         raise ValueError(
@@ -426,25 +358,9 @@ def compact_dedup_index(spark, index_path: str, upto_epoch: int) -> None:
         )
     if upto_epoch < 1:
         raise ValueError(f"upto_epoch must be >= 1, got {upto_epoch}")
+    tmp, bak = repair_swap(index_path)
     if not os.path.isdir(index_path):
         return  # no index yet (first run never wrote one): nothing to compact
-    tmp, bak = f"{index_path}.compact-tmp", f"{index_path}.compact-bak"
-    target = os.path.join(index_path, f"batch_id={upto_epoch - 1}")
-
-    # entry repair (see docstring): bak present means a previous compact
-    # crashed mid-rename; the target's existence tells which side of the
-    # final rename it died on (the target was itself renamed INTO bak
-    # before the tmp could rename in, so "target exists" is unambiguous)
-    if os.path.isdir(bak):
-        if os.path.isdir(target):
-            shutil.rmtree(bak)
-        else:
-            for d in os.listdir(bak):
-                os.rename(os.path.join(bak, d), os.path.join(index_path, d))
-            os.rmdir(bak)
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-
     old = [
         d
         for d in os.listdir(index_path)
@@ -452,26 +368,22 @@ def compact_dedup_index(spark, index_path: str, upto_epoch: int) -> None:
     ]
     if len(old) <= 1:
         return  # nothing to collapse
+    bid = F.col("batch_id")
     (
         spark.read.parquet(index_path)
-        .where(F.col("batch_id") < upto_epoch)
-        .select("canonical_id", "content_hash")
+        .select(
+            "canonical_id",
+            "content_hash",
+            F.when(bid < upto_epoch, F.lit(upto_epoch - 1)).otherwise(bid).alias("batch_id"),
+        )
         .write.mode("overwrite")
+        .partitionBy("batch_id")
+        # the index root holds partition directories only, as the
+        # per-epoch writes leave it
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
         .parquet(tmp)
     )
-    os.makedirs(bak)
-    # the TARGET partition must be the FIRST rename: the entry repair
-    # reads "bak present AND target present" as proof the final
-    # tmp->target rename completed — that inference is only sound if the
-    # target's OLD directory can never still be sitting in the index
-    # mid-loop (a crash after moving some other partition but before
-    # moving the target would otherwise masquerade as the finished state
-    # and the repair would drop bak, destroying the moved partitions)
-    old.sort(key=lambda d: (d != f"batch_id={upto_epoch - 1}", d))
-    for d in old:
-        os.rename(os.path.join(index_path, d), os.path.join(bak, d))
-    os.rename(tmp, target)
-    shutil.rmtree(bak)
+    commit_swap(index_path, tmp, bak)
 
 
 def maintain_neardup_clusters(
@@ -501,7 +413,7 @@ def maintain_neardup_clusters(
       whole history.
     - ``state_dir/labels/`` — the full-coverage min-id label table
       (node, cluster_id), swap-rewritten per round with the shared
-      crash-safe rename protocol (``_repair_swap``/``_commit_swap``).
+      crash-safe directory swap (``io.repair_swap``/``io.commit_swap``).
 
     Per round: batch signatures → :func:`~spark_hadoop_automation_in_cloud_spark.operators.
     dedup.incremental_lsh_pairs` against the persisted index →
@@ -548,7 +460,7 @@ def maintain_neardup_clusters(
         )
     index_root = os.path.join(state_dir, "band_index")
     labels_path = os.path.join(state_dir, "labels")
-    tmp, bak = _repair_swap(labels_path)
+    tmp, bak = repair_swap(labels_path)
 
     batch = new_docs.select("doc_id", "text").where(F.col("doc_id").isNotNull())
     fp = batch.agg(
@@ -619,7 +531,7 @@ def maintain_neardup_clusters(
         # partition — replay-safe), then the label swap
         minhash_band_index(sig).write.mode("overwrite").parquet(token_dir)
         labels_new.write.mode("overwrite").parquet(tmp)
-        _commit_swap(labels_path, tmp, bak)
+        commit_swap(labels_path, tmp, bak)
     return spark.read.parquet(labels_path)
 
 
@@ -675,30 +587,6 @@ def read_countmin_index(
     return sk.merge_countmin_sketches(idx, group_cols, d, w)
 
 
-def run_streaming_countmin(
-    stream: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    group_cols: list[str],
-    value_col: str,
-) -> None:
-    """Drain ``stream`` (availableNow) through per-batch count-min updates
-    into the partitioned sketch index — the streaming frequency-state
-    job (trending keys, rate anomalies) whose state is depth x width
-    cells per group FOREVER, no matter how much data arrives."""
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: update_countmin_index(
-                bdf, index_path, group_cols, value_col, bid
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 # --- Streaming covariance maintenance (raw moment cells per batch) -----------
 #
 # The covariance family's raw moment cells (linalg.raw_moment_cells) are
@@ -738,28 +626,6 @@ def read_covariance_index(spark, index_path: str) -> DataFrame:
 
     idx = spark.read.parquet(index_path).drop("batch_id")
     return merge_moment_cells(idx)
-
-
-def run_streaming_covariance(
-    stream: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    vec_col: str,
-    dim: int = 64,
-) -> None:
-    """Drain ``stream`` (availableNow) through per-batch moment updates
-    into the partitioned covariance index."""
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: update_covariance_index(
-                bdf, index_path, vec_col, bid, dim
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 # --- streaming ANN (IVF-PQ) index maintenance ---------------------------------
@@ -814,29 +680,6 @@ def read_ann_index(spark, index_path: str) -> DataFrame:
     return spark.read.parquet(f"{index_path}/coded_lists").drop("batch_id")
 
 
-def run_streaming_ann_index(
-    stream: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Drain ``stream`` (availableNow) through per-batch encode-and-append
-    into the partitioned coded index — the ANN-serving ingest loop."""
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: update_ann_index(
-                bdf, index_path, codebooks, bid, id_col, vec_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 # --- Streaming daily-volume maintenance (additive count cells per batch) -----
 #
 # Daily arrival counts are plain integer sums per (group, day) — LINEAR,
@@ -874,27 +717,3 @@ def read_daily_counts(spark, index_path: str, group_cols: list[str]):
 
     idx = spark.read.parquet(index_path).drop("batch_id")
     return idx.groupBy(*group_cols, "d").agg(F.sum("n").alias("n"))
-
-
-def run_streaming_volume_monitor(
-    stream: DataFrame,
-    index_path: str,
-    checkpoint_dir: str,
-    group_cols: list[str],
-    day_col: str,
-) -> None:
-    """Drain ``stream`` (availableNow) through per-batch daily-count
-    updates into the partitioned index — the ingest-volume monitor's
-    state maintenance; anomaly scoring reads the merged table through
-    operators.checks.zscore_from_daily."""
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda bdf, bid: update_daily_counts(
-                bdf, index_path, group_cols, day_col, bid
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

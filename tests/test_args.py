@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from spark_hadoop_automation_in_cloud_spark.args import JobArgs
+from spark_hadoop_automation_in_cloud_spark.args import JobArgs, StreamArgs
 
 
 def _ok(**kw):
@@ -46,3 +46,14 @@ def test_from_argv_contract():
     assert a.depth == 7 and a.coords_path == "/coords"
     with pytest.raises(ValueError):
         JobArgs.from_argv(["2024-01-30"])
+
+
+def test_stream_args_contract():
+    """The streaming CLIs' ``<src> <out> <checkpoint> [max_files]``."""
+    a = StreamArgs.from_argv(["/src", "/out", "/ckpt"])
+    assert (a.src, a.out, a.checkpoint, a.reader_options) == ("/src", "/out", "/ckpt", {})
+    b = StreamArgs.from_argv(["/src", "/out", "/ckpt", "3"])
+    assert b.reader_options == {"maxFilesPerTrigger": "3"}
+    for bad in ([], ["a", "b"], ["a", "b", "c", "0"], ["a", "b", "c", "x"], list("abcde")):
+        with pytest.raises(ValueError):
+            StreamArgs.from_argv(bad)

@@ -3738,7 +3738,7 @@ def test_iterative_operators_release_checkpoints_on_error(spark, monkeypatch, tm
     def crash(*_):
         raise RuntimeError("crash before swap")
 
-    monkeypatch.setattr(incremental, "_commit_swap", crash)
+    monkeypatch.setattr(incremental, "commit_swap", crash)
     docs = spark.createDataFrame(
         [(i, f"the quick brown fox jumps {i % 5}") for i in range(30)],
         "doc_id bigint, text string",
@@ -3750,6 +3750,18 @@ def test_iterative_operators_release_checkpoints_on_error(spark, monkeypatch, tm
         incremental.maintain_neardup_clusters(spark, docs, str(tmp_path), 0.5)
     assert _persistent_rdd_ids(spark) - base == set()
     assert cache.isEmpty() == cache_empty
+
+    # a later batch merges into the persisted labels through
+    # incremental_components and leaves no block behind either
+    monkeypatch.undo()
+    state = str(tmp_path / "ok")
+    incremental.maintain_neardup_clusters(spark, docs.where("doc_id < 15"), state, 0.5)
+    base = _persistent_rdd_ids(spark)
+    labels = incremental.maintain_neardup_clusters(
+        spark, docs.where("doc_id >= 15"), state, 0.5
+    )
+    assert _persistent_rdd_ids(spark) - base == set()
+    assert labels.count() == 30
 
 
 def test_chain_gate_arms_bit_equal(spark, monkeypatch):

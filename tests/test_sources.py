@@ -176,6 +176,51 @@ def test_compact_merges_small_files(spark, sf_dir, tmp_path):
     assert got.unionByName(ev).distinct().count() == ev.distinct().count()
 
 
+def test_compact_restores_an_interrupted_swap(spark, sf_dir, tmp_path):
+    """A crash between the swap's two renames leaves the original table
+    at ``<path>.bak-merge`` and nothing at ``path``: the next compact
+    restores it, then compacts it, with the content equal to the
+    original."""
+    import os
+
+    from spark_hadoop_automation_in_cloud_spark.io import compact, read_table
+
+    path = str(tmp_path / "frag")
+    ev = read_table(spark, sf_dir, "events")
+    ev.repartition(8).write.parquet(f"{path}.bak-merge")
+    assert compact(spark, path, target_file_bytes=1 << 30) == 1
+    assert not os.path.exists(f"{path}.bak-merge")
+    got = spark.read.parquet(path)
+    assert got.exceptAll(ev).count() == 0 and ev.exceptAll(got).count() == 0
+
+
+def test_only_io_replaces_directories():
+    """One commit protocol: ``io`` (``repair_swap``/``commit_swap``) is
+    the only module of the package or ``jobs/`` that renames or deletes
+    a directory; every other state writer commits through it."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    banned = {("os", "rename"), ("os", "replace"), ("shutil", "rmtree")}
+    found = []
+    for f in sorted(
+        [*root.glob("spark_hadoop_automation_in_cloud_spark/**/*.py"), *root.glob("jobs/*.py")]
+    ):
+        if f.relative_to(root).as_posix() == "spark_hadoop_automation_in_cloud_spark/io.py":
+            continue
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+                hit = (node.value.id, node.attr) in banned
+            elif isinstance(node, ast.ImportFrom):
+                hit = any((node.module, a.name) in banned for a in node.names)
+            else:
+                continue
+            if hit:
+                found.append(f"{f.relative_to(root)}:{node.lineno}")
+    assert found == []
+
+
 def test_read_table_nanos_and_micros_encodings(spark, tmp_path):
     """The same helpers must read events whatever parquet timestamp encoding
     the writer used — round 2 broke when the lake moved from TIMESTAMP(NANOS)

@@ -182,8 +182,9 @@ def test_batch_session_window_equals_stateful_stream(spark):
 def test_incremental_upsert_multi_batch_equals_batch_merge(spark, sf_dir, tmp_path):
     """Two micro-batches merged via foreachBatch == one batch last-writer-wins."""
     from spark_hadoop_automation_in_cloud_spark.streaming.incremental import (
+        drain,
         latest_per_key,
-        run_incremental_upsert,
+        upsert_batch,
     )
 
     ev = read_table(spark, sf_dir, "events").select(
@@ -205,12 +206,11 @@ def test_incremental_upsert_multi_batch_equals_batch_merge(spark, sf_dir, tmp_pa
         .parquet(str(src))
     )
     out = tmp_path / "mart"
-    run_incremental_upsert(
+    keys, order = ["user_id", "event_type"], ["ts_us", "event_id"]
+    drain(
         stream,
-        str(out),
-        key_cols=["user_id", "event_type"],
-        order_cols=["ts_us", "event_id"],
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        str(tmp_path / "ckpt"),
+        lambda b, _e: upsert_batch(b, str(out), keys, order),
     )
 
     got = spark.read.parquet(str(out))
@@ -281,8 +281,8 @@ def test_incremental_upsert_merge_fn_backend_equals_batch_merge(
     last-writer-wins — and re-applying an already-applied batch must be a
     no-op (MERGE idempotency, the checkpoint-replay property)."""
     from spark_hadoop_automation_in_cloud_spark.streaming.incremental import (
+        drain,
         latest_per_key,
-        run_incremental_upsert,
         upsert_batch,
     )
 
@@ -301,13 +301,11 @@ def test_incremental_upsert_merge_fn_backend_equals_batch_merge(
         .parquet(str(src))
     )
     out = tmp_path / "mart"
-    run_incremental_upsert(
+    keys, order = ["user_id", "event_type"], ["ts_us", "event_id"]
+    drain(
         stream,
-        str(out),
-        key_cols=["user_id", "event_type"],
-        order_cols=["ts_us", "event_id"],
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        merge_fn=_emulated_table_merge,
+        str(tmp_path / "ckpt"),
+        lambda b, _e: upsert_batch(b, str(out), keys, order, _emulated_table_merge),
     )
 
     got = spark.read.parquet(str(out))
@@ -445,9 +443,9 @@ def test_duckdb_merge_fn_executes_real_upsert(spark, sf_dir, tmp_path):
     import duckdb
 
     from spark_hadoop_automation_in_cloud_spark.streaming.incremental import (
+        drain,
         duckdb_merge_fn,
         latest_per_key,
-        run_incremental_upsert,
         upsert_batch,
     )
 
@@ -467,10 +465,11 @@ def test_duckdb_merge_fn_executes_real_upsert(spark, sf_dir, tmp_path):
     )
     db = str(tmp_path / "mart.duckdb")
     keys, order = ["user_id", "event_type"], ["ts_us", "event_id"]
-    run_incremental_upsert(
-        stream, db, keys, order,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        merge_fn=duckdb_merge_fn(table="mart"),
+    merge = duckdb_merge_fn(table="mart")
+    drain(
+        stream,
+        str(tmp_path / "ckpt"),
+        lambda b, _e: upsert_batch(b, db, keys, order, merge),
     )
 
     want = {
@@ -644,7 +643,7 @@ def test_streaming_incremental_dedup_multi_run_and_replay(spark, tmp_path):
     its own failed attempt as already-ingested state."""
     from spark_hadoop_automation_in_cloud_spark.streaming.incremental import (
         dedup_batch_against_index,
-        run_streaming_incremental_dedup,
+        drain,
     )
 
     src = tmp_path / "src"
@@ -665,7 +664,11 @@ def test_streaming_incremental_dedup_multi_run_and_replay(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(f"{src}/*")
         )
-        run_streaming_incremental_dedup(stream, idx, ckpt, "doc_id", "text")
+        drain(
+            stream,
+            ckpt,
+            lambda b, e: dedup_batch_against_index(b, idx, "doc_id", "text", e),
+        )
 
     got = {
         (r["canonical_id"], r["content_hash"], r["batch_id"])
@@ -752,78 +755,67 @@ def test_compact_dedup_index_preserves_contract(spark, tmp_path):
 
 
 def test_compact_dedup_index_repairs_crash_states(spark, tmp_path):
-    """Entry repair: a leftover bak dir with NO compacted target restores
-    the original partitions (crash between the rename-aside and the final
-    rename); a bak WITH the target is the post-rename crash and just
-    drops.  Either way a re-run converges to the compacted layout with the
-    full row set."""
+    """The shared swap's three reachable crash states (``io.repair_swap``)
+    each converge on re-run to the compacted layout with the full row
+    set: a stale tmp (crash while the compacted rows were written), the
+    backup with no live index (crash between the commit's two renames),
+    and the backup next to the compacted index (crash before the backup
+    dropped — the backup must be dropped, not restored)."""
     import os
-    import shutil
 
     from spark_hadoop_automation_in_cloud_spark.streaming.incremental import (
         compact_dedup_index,
         dedup_batch_against_index,
     )
 
-    batches = [[(0, "alpha")], [(1, "beta")], [(2, "gamma")]]
-    idx = str(tmp_path / "idx")
-    for e, rows in enumerate(batches):
-        dedup_batch_against_index(
-            spark.createDataFrame(rows, "doc_id long, text string"),
-            idx, "doc_id", "text", epoch_id=e,
-        )
+    def build(idx):
+        for e, rows in enumerate([[(0, "alpha")], [(1, "beta")], [(2, "gamma")]]):
+            dedup_batch_against_index(
+                spark.createDataFrame(rows, "doc_id long, text string"),
+                idx, "doc_id", "text", epoch_id=e,
+            )
+
+    def junk(path):
+        spark.createDataFrame(
+            [("zz", 99)], "content_hash string, canonical_id long"
+        ).write.parquet(os.path.join(path, "batch_id=0"))
+
+    def compacted_rows(idx):
+        compact_dedup_index(spark, idx, upto_epoch=3)
+        assert sorted(os.listdir(idx)) == ["batch_id=2"]
+        assert not os.path.exists(f"{idx}.tmp-merge")
+        assert not os.path.exists(f"{idx}.bak-merge")
+        return {
+            (r["content_hash"], r["canonical_id"])
+            for r in spark.read.parquet(idx).collect()
+        }
+
+    ref = str(tmp_path / "ref")
+    build(ref)
     full = {
         (r["content_hash"], r["canonical_id"])
-        for r in spark.read.parquet(idx).collect()
+        for r in spark.read.parquet(ref).collect()
     }
+    assert len(full) == 3
 
-    # crash state A: old partitions renamed aside, final rename never ran
-    bak = f"{idx}.compact-bak"
-    os.makedirs(bak)
-    for d in ("batch_id=0", "batch_id=1", "batch_id=2"):
-        os.rename(os.path.join(idx, d), os.path.join(bak, d))
-    compact_dedup_index(spark, idx, upto_epoch=3)
-    assert not os.path.isdir(bak)
-    assert sorted(os.listdir(idx)) == ["batch_id=2"]
-    assert {
-        (r["content_hash"], r["canonical_id"])
-        for r in spark.read.parquet(idx).collect()
-    } == full
+    # stale tmp next to the healthy uncompacted index
+    a = str(tmp_path / "a")
+    build(a)
+    junk(f"{a}.tmp-merge")
+    assert compacted_rows(a) == full
 
-    # crash state A2: the rename-aside loop died MID-LOOP — the target
-    # partition moved first (the ordering the repair's disambiguation
-    # depends on), one more partition moved, one still in the index.
-    # Fresh 3-partition index: the one above is already compacted.
-    idx2 = str(tmp_path / "idx2")
-    for e, rows in enumerate(batches):
-        dedup_batch_against_index(
-            spark.createDataFrame(rows, "doc_id long, text string"),
-            idx2, "doc_id", "text", epoch_id=e,
-        )
-    bak2 = f"{idx2}.compact-bak"
-    os.makedirs(bak2)
-    for d in ("batch_id=2", "batch_id=0"):  # target first, then 0; 1 left
-        os.rename(os.path.join(idx2, d), os.path.join(bak2, d))
-    compact_dedup_index(spark, idx2, upto_epoch=3)
-    assert not os.path.isdir(bak2)
-    assert sorted(os.listdir(idx2)) == ["batch_id=2"]
-    assert {
-        (r["content_hash"], r["canonical_id"])
-        for r in spark.read.parquet(idx2).collect()
-    } == full
+    # live index renamed aside, the written tmp never renamed in
+    b = str(tmp_path / "b")
+    build(f"{b}.bak-merge")
+    junk(f"{b}.tmp-merge")
+    assert compacted_rows(b) == full
 
-    # crash state B: compacted target landed but the bak never dropped
-    os.makedirs(bak)
-    spark.createDataFrame(
-        [("zz", 99)], "content_hash string, canonical_id long"
-    ).write.parquet(os.path.join(bak, "batch_id=0"))
-    compact_dedup_index(spark, idx, upto_epoch=3)
-    assert not os.path.isdir(bak)  # stale bak dropped, not restored
-    assert {
-        (r["content_hash"], r["canonical_id"])
-        for r in spark.read.parquet(idx).collect()
-    } == full
-    shutil.rmtree(idx)
+    # compacted index landed, the old one still sits in the backup
+    c = str(tmp_path / "c")
+    build(c)
+    compact_dedup_index(spark, c, upto_epoch=3)
+    junk(f"{c}.bak-merge")
+    assert compacted_rows(c) == full
 
 
 def test_maintain_neardup_clusters_multi_batch_replay_and_crash(spark, sf_dir):
@@ -894,8 +886,8 @@ def test_streaming_countmin_equals_full_sketch_and_replays(spark, sf_dir, tmp_pa
         countmin_sketches,
     )
     from spark_hadoop_automation_in_cloud_spark.streaming.incremental import (
+        drain,
         read_countmin_index,
-        run_streaming_countmin,
         update_countmin_index,
     )
 
@@ -913,8 +905,10 @@ def test_streaming_countmin_equals_full_sketch_and_replays(spark, sf_dir, tmp_pa
         .parquet(str(src))
     )
     idx = str(tmp_path / "cm_index")
-    run_streaming_countmin(
-        stream, idx, str(tmp_path / "ckpt"), ["event_type"], "user_id"
+    drain(
+        stream,
+        str(tmp_path / "ckpt"),
+        lambda b, e: update_countmin_index(b, idx, ["event_type"], "user_id", e),
     )
     merged = read_countmin_index(spark, idx, ["event_type"])
     full = countmin_sketches(ev, ["event_type"], "user_id")
@@ -939,8 +933,8 @@ def test_streaming_covariance_equals_full_cells_and_replays(spark, sf_dir, tmp_p
         raw_moment_cells,
     )
     from spark_hadoop_automation_in_cloud_spark.streaming.incremental import (
+        drain,
         read_covariance_index,
-        run_streaming_covariance,
         update_covariance_index,
     )
 
@@ -957,7 +951,11 @@ def test_streaming_covariance_equals_full_cells_and_replays(spark, sf_dir, tmp_p
         .parquet(str(src))
     )
     idx = str(tmp_path / "cov_index")
-    run_streaming_covariance(stream, idx, str(tmp_path / "ckpt"), "embedding")
+    drain(
+        stream,
+        str(tmp_path / "ckpt"),
+        lambda b, e: update_covariance_index(b, idx, "embedding", e),
+    )
     key = ["i", "j", "sp", "sa", "sb", "n"]
     merged = sorted(map(tuple, read_covariance_index(spark, idx).select(*key).collect()))
     full = sorted(map(tuple, raw_moment_cells(emb, "embedding").select(*key).collect()))
@@ -985,8 +983,8 @@ def test_streaming_ann_index_equals_full_build_and_replays(spark, sf_dir, tmp_pa
         train_pq_codebooks,
     )
     from spark_hadoop_automation_in_cloud_spark.streaming.incremental import (
+        drain,
         read_ann_index,
-        run_streaming_ann_index,
         update_ann_index,
     )
 
@@ -1007,7 +1005,11 @@ def test_streaming_ann_index_equals_full_build_and_replays(spark, sf_dir, tmp_pa
         .option("recursiveFileLookup", "true")
         .parquet(str(src))
     )
-    run_streaming_ann_index(stream, idx, str(tmp_path / "ckpt"), books)
+    drain(
+        stream,
+        str(tmp_path / "ckpt"),
+        lambda b, e: update_ann_index(b, idx, books, e),
+    )
 
     merged = read_ann_index(spark, idx)
     full = pq_encode(
@@ -1030,8 +1032,8 @@ def test_streaming_volume_monitor_equals_batch_and_replays(spark, sf_dir, tmp_pa
     replaying an epoch overwrites its own partition — never
     double-counts."""
     from spark_hadoop_automation_in_cloud_spark.streaming.incremental import (
+        drain,
         read_daily_counts,
-        run_streaming_volume_monitor,
         update_daily_counts,
     )
 
@@ -1050,8 +1052,10 @@ def test_streaming_volume_monitor_equals_batch_and_replays(spark, sf_dir, tmp_pa
         .parquet(str(src))
     )
     idx = str(tmp_path / "vol_index")
-    run_streaming_volume_monitor(
-        stream, idx, str(tmp_path / "ckpt"), ["event_type"], "d"
+    drain(
+        stream,
+        str(tmp_path / "ckpt"),
+        lambda b, e: update_daily_counts(b, idx, ["event_type"], "d", e),
     )
     merged = read_daily_counts(spark, idx, ["event_type"])
     full = ev.groupBy("event_type", "d").agg(F.count(F.lit(1)).alias("n"))
