@@ -24,20 +24,69 @@ from pyspark.sql import functions as F
 EARTH_RADIUS_KM = 6371.0
 
 
+def haversine_term(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
+    """The haversine term ``sin²(Δlat/2) + cos·cos·sin²(Δlon/2)``: the
+    distance rises monotonically with it, so a nearest-neighbour search
+    can rank by it and take ``asin``/``sqrt`` of the winner only.
+
+    Squares are ``s * s``: fdlibm's ``pow(x, 2.0)`` is exactly ``x * x``,
+    so this is bit-equal to the ``** 2`` form without a native call.
+    """
+    return _term(lat1, lon1, lat2, lon2, F.sin, F.cos, F.radians)
+
+
+def haversine_term_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
+    """``haversine_term`` as Spark SQL text over SQL operands — the same
+    expression tree, for plans that inline many candidates in one parse."""
+    ops = [_Sql(x) for x in (lat1, lon1, lat2, lon2)]
+    return _term(*ops, _Sql.fn("sin"), _Sql.fn("cos"), _Sql.fn("radians"))
+
+
+def _term(lat1, lon1, lat2, lon2, sin, cos, radians):
+    s_lat = sin(radians(lat2 - lat1) / 2)
+    s_lon = sin(radians(lon2 - lon1) / 2)
+    return s_lat * s_lat + cos(radians(lat1)) * cos(radians(lat2)) * (s_lon * s_lon)
+
+
+class _Sql(str):
+    """SQL text with the arithmetic operators ``_term`` uses, each node
+    parenthesized so the parsed tree is the one Python built."""
+
+    def _op(self, sym: str, other) -> _Sql:
+        return _Sql(f"({self} {sym} {other})")
+
+    def __add__(self, other):
+        return self._op("+", other)
+
+    def __sub__(self, other):
+        return self._op("-", other)
+
+    def __mul__(self, other):
+        return self._op("*", other)
+
+    def __truediv__(self, other):
+        return self._op("/", other)
+
+    @staticmethod
+    def fn(name: str):
+        return lambda x: _Sql(f"{name}({x})")
+
+
 def haversine_km(
     lat1: Column, lon1: Column, lat2: Column, lon2: Column, *, reference_quirk: bool = False
 ) -> Column:
-    """Great-circle distance in kilometres between two (lat, lon) pairs.
+    """Great-circle distance in kilometres between two (lat, lon) pairs:
+    ``2R·asin(sqrt(haversine_term))``.
 
-    Pure built-in expressions (radians/sin/cos/sqrt/asin) — stays inside
-    whole-stage codegen.  Reference: ``collector.py:118-133``.
+    Pure built-in expressions — stays inside whole-stage codegen.
+    Reference: ``collector.py:118-133``.
     """
-    dlat = F.radians(lat2 - lat1)
-    dlon = F.radians(lon2 - lon1)
-    a = (
-        F.sin(dlat / 2) ** 2
-        + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.sin(dlon / 2) ** 2
-    )
+    a = haversine_term(lat1, lon1, lat2, lon2)
+    return haversine_from_term(a, reference_quirk=reference_quirk)
+
+
+def haversine_from_term(a: Column, *, reference_quirk: bool = False) -> Column:
+    """Kilometres from a ``haversine_term`` value."""
     arc = F.sin(F.sqrt(a)) if reference_quirk else F.asin(F.sqrt(a))
     return F.lit(2.0 * EARTH_RADIUS_KM) * arc
 

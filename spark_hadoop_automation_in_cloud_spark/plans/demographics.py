@@ -45,7 +45,7 @@ def user_demographics(
     tz_offset_col: str = "tz_offset_hours",
 ) -> DataFrame:
     """events_with_city: one row per event with nearest-city columns attached
-    (output of ``operators.nearest.nearest_neighbor_agg``)."""
+    (output of ``operators.nearest.nearest_neighbor``)."""
     # one Window pass (shared partitioning + sort): mark city changes, and
     # for each row find the ts of the NEXT change point — ts is monotone in
     # the frame, so min-over-following-change-rows is exactly the lead()

@@ -28,7 +28,7 @@ from spark_hadoop_automation_in_cloud_spark.functions.timeutils import epoch_us
 from spark_hadoop_automation_in_cloud_spark.io import read_events_window, read_table
 from spark_hadoop_automation_in_cloud_spark.operators import changes as chg
 from spark_hadoop_automation_in_cloud_spark.operators import topk as topk_ops
-from spark_hadoop_automation_in_cloud_spark.operators.nearest import nearest_neighbor_agg
+from spark_hadoop_automation_in_cloud_spark.operators.nearest import nearest_neighbor
 from spark_hadoop_automation_in_cloud_spark.operators.rollup import weekly_with_month_window
 from spark_hadoop_automation_in_cloud_spark.session import collect_local, owned
 
@@ -186,9 +186,9 @@ FROM nation
 """
 
 # Events with synthetic coordinates (the geo fact table), optionally cut to
-# a (date, depth_days) window.  parallelize=True: every consumer fans out
-# per row (×n_cities 1-NN candidates), so the single-row-group scan must
-# not stay a single task.
+# a (date, depth_days) window.  parallelize=True: every consumer spends
+# n_cities haversine terms (1-NN) or a candidate fan-out per row, so the
+# single-row-group scan must not stay a single task.
 def geo_events(
     spark: SparkSession, sf_dir: str, *, window: tuple[str, int] | None = None
 ) -> DataFrame:
@@ -235,11 +235,10 @@ def nearest_city_events(
     spark: SparkSession, sf_dir: str, *, window: tuple[str, int] | None = None
 ) -> DataFrame:
     """Every event with its nearest city attached (shared building block)."""
-    ev = geo_events(spark, sf_dir, window=window)
-    return nearest_neighbor_agg(
+    ev = geo_events(spark, sf_dir, window=window).drop("props")
+    return nearest_neighbor(
         ev,
         city_dim(spark, sf_dir),
-        fact_keys=["event_id", "user_id", "event_type", "ts", "value", "lat", "lon"],
         fact_lat="lat",
         fact_lon="lon",
         dim_id="city_id",
@@ -405,8 +404,9 @@ SELECT event_id, user_id, city_id, city_name,
        round(dist, 4) AS distance_km
 FROM best
 """,
-    doc="Spatial 1-NN assignment (J1/J2/W1): broadcast nested-loop join + "
-    "map-side min_by — the fact table is never shuffled in full width.",
+    doc="Spatial 1-NN assignment (J1/J2/W1): one projection of the event "
+    "scan — each event takes least() of the haversine term over the city "
+    "dim inlined as literals; no join, aggregate or shuffle.",
 )
 def q05_nearest_city(spark: SparkSession, sf_dir: str) -> DataFrame:
     ne = nearest_city_events(spark, sf_dir)
@@ -1639,11 +1639,6 @@ def q43_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from spark_hadoop_automation_in_cloud_spark.operators.nearest import (  # noqa: E402
-    nearest_neighbor_fold,
-)
-
-
 @register(
     "q44_streaming_geo_rollup",
     f"""
@@ -1655,14 +1650,11 @@ FROM best
 GROUP BY 1, 2
 """,
     doc="Streaming geo enrichment + rollup: the signature 1-NN operator "
-    "running INSIDE a stream via its stateless fold form (dim inlined as "
-    "literal candidates + least() — pure projection, no per-event state), "
-    "then watermarked weekly counts per city. The aggregate 1-NN form "
-    "would key unbounded state by event on a stream; the fold form is "
-    "the streaming-safe twin (equivalence tested in test_operators).",
+    "running INSIDE a stream — the same kernel as q05, a pure projection "
+    "over the dim inlined as literals, so it keeps no per-event state — "
+    "then watermarked weekly counts per city.",
 )
 def q44_streaming_geo_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    dim_rows = [r.asDict() for r in city_dim(spark, sf_dir).collect()]
     ev = stream_events(spark, f"{sf_dir}/events.parquet")
     geo_ev = ev.select(
         "event_id",
@@ -1671,9 +1663,9 @@ def q44_streaming_geo_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         geo.synth_event_lat(F.col("user_id"), F.col("event_id")).alias("lat"),
         geo.synth_event_lon(F.col("user_id"), F.col("event_id")).alias("lon"),
     )
-    ne = nearest_neighbor_fold(
+    ne = nearest_neighbor(
         geo_ev,
-        dim_rows,
+        city_dim(spark, sf_dir),
         fact_lat="lat",
         fact_lon="lon",
         dim_id="city_id",

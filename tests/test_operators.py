@@ -442,29 +442,89 @@ def test_haversine_reference_quirk_flag(spark):
     assert large["quirk"] < large["correct"]  # sin(x) < asin-based for large x
 
 
-def test_nearest_fold_equals_agg_form(spark, sf_dir):
-    """The stateless fold 1-NN (streaming-safe) must agree exactly with the
-    aggregate form, including distance and tiebreaks."""
-    from spark_hadoop_automation_in_cloud_spark.operators.nearest import (
-        nearest_neighbor_fold,
-    )
-    from spark_hadoop_automation_in_cloud_spark.queries import (
-        city_dim,
-        geo_events,
-        nearest_city_events,
+def _nearest_brute_force(facts, dim, key, payload):
+    """The reference's shape: cross join, haversine, rank 1 by
+    (distance, id) per fact row."""
+    from pyspark.sql import Window
+
+    from spark_hadoop_automation_in_cloud_spark.functions.geo import haversine_km
+
+    w = Window.partitionBy(key).orderBy(F.col("distance_km"), F.col("city_id"))
+    return (
+        facts.crossJoin(dim)
+        .withColumn(
+            "distance_km",
+            haversine_km(F.col("lat"), F.col("lon"), F.col("city_lat"), F.col("city_lon")),
+        )
+        .withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") == 1)
+        .select(*facts.columns, "distance_km", "city_id", *payload)
     )
 
-    ev = geo_events(spark, sf_dir)
-    rows = [r.asDict() for r in city_dim(spark, sf_dir).collect()]
-    fold = nearest_neighbor_fold(
-        ev, rows, "lat", "lon", "city_id", "city_lat", "city_lon",
-        dim_payload=("city_name", "tz_offset_hours"),
-    ).select("event_id", "city_id", "city_name", F.round("distance_km", 9).alias("d"))
-    agg = nearest_city_events(spark, sf_dir).select(
-        "event_id", "city_id", "city_name", F.round("distance_km", 9).alias("d")
+
+def _assert_same_rows(got, want):
+    assert got.schema == want.schema  # names, order, types and nullability
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def test_nearest_neighbor_equals_brute_force(spark, sf_dir):
+    """The 1-NN kernel (one projection over the dim inlined as literals,
+    ranked by the haversine term) equals the cross join + haversine +
+    rank-1 form on every column, distances compared exactly: on the
+    fixture, and on planted rows for the tiebreak, a zero distance, a NULL
+    coordinate, non-integer coordinates, a bigint id, a name that must
+    survive the literal round trip, and a one-row dim."""
+    from spark_hadoop_automation_in_cloud_spark.operators.nearest import nearest_neighbor
+    from spark_hadoop_automation_in_cloud_spark.queries import city_dim
+
+    def kernel(facts, dim, payload):
+        return nearest_neighbor(
+            facts, dim, "lat", "lon", "city_id", "city_lat", "city_lon", dim_payload=payload
+        )
+
+    payload = ("city_name", "tz_offset_hours")
+    ev = geo_events(spark, sf_dir).select("event_id", "user_id", "lat", "lon")
+    dim = city_dim(spark, sf_dir)
+    _assert_same_rows(kernel(ev, dim, payload), _nearest_brute_force(ev, dim, "event_id", payload))
+
+    big = 3_000_000_000
+    dim = spark.createDataFrame(
+        [
+            (9, 0.0, 10.0, "east"),
+            (3, 0.0, -10.0, "west"),  # equidistant from event 1: lower id wins
+            (big, -33.8688, 151.2093, "Sydney"),
+            (5, 51.5, -0.12, "O'Brien \\ \"Zürich\" 東京 ☃"),
+        ],
+        "city_id bigint, city_lat double, city_lon double, city_name string",
     )
-    assert fold.exceptAll(agg).count() == 0
-    assert agg.exceptAll(fold).count() == 0
+    facts = spark.createDataFrame(
+        [
+            (1, 0.0, 0.0),
+            (2, -33.8688, 151.2093),  # on a city: distance 0.0
+            (3, None, 12.5),
+            (4, -34.0, 150.95),
+            (5, 51.5, -0.12),
+        ],
+        "event_id bigint, lat double, lon double",
+    )
+    got = kernel(facts, dim, ("city_name",))
+    _assert_same_rows(got, _nearest_brute_force(facts, dim, "event_id", ("city_name",)))
+    by_id = {r["event_id"]: r for r in got.collect()}
+    assert by_id[1]["city_id"] == 3
+    assert (by_id[2]["city_id"], by_id[2]["distance_km"]) == (big, 0.0)
+    assert by_id[3]["distance_km"] is None
+    assert by_id[4]["city_id"] == big
+    assert by_id[5]["city_name"] == "O'Brien \\ \"Zürich\" 東京 ☃"
+
+    one = dim.where(F.col("city_id") == 9)
+    _assert_same_rows(
+        kernel(facts, one, ("city_name",)),
+        _nearest_brute_force(facts, one, "event_id", ("city_name",)),
+    )
+    with pytest.raises(ValueError, match="no rows"):
+        kernel(facts, dim.limit(0), ("city_name",))
 
 
 def test_approx_count_distinct_error_bound(spark, sf_dir):

@@ -117,6 +117,62 @@ def test_haversine_metric_properties(spark):
             assert r["d"] == 0.0
 
 
+_GRID_EDGES = [
+    (0.0, 0.0, 0.0, 1e-12),  # tiny delta
+    (-33.8688, 151.2093, -33.8688000001, 151.2093000001),
+    (-45.5, -120.25, -60.0, -170.0),  # negative deltas
+    (0.0, 0.0, 0.0, 180.0),  # antipodal
+    (45.0, 10.0, -45.0, -170.0),  # antipodal
+    (90.0, 0.0, -90.0, 0.0),  # pole to pole
+    (12.5, 20.0, 12.5, 20.0),  # zero
+]
+
+
+@settings(
+    max_examples=3,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    grid=st.lists(
+        st.tuples(
+            st.floats(min_value=-90.0, max_value=90.0, allow_nan=False),
+            st.floats(min_value=-180.0, max_value=180.0, allow_nan=False),
+            st.floats(min_value=-90.0, max_value=90.0, allow_nan=False),
+            st.floats(min_value=-180.0, max_value=180.0, allow_nan=False),
+        ),
+        min_size=1,
+        max_size=40,
+    )
+)
+def test_haversine_forms_are_bit_equal(spark, grid):
+    """``haversine_km`` squares with ``s * s``; it must be bit-equal to the
+    ``pow(s, 2)`` form it replaced, and to ``2R·asin(sqrt(term))`` over
+    ``haversine_term`` and over its SQL rendering (the 1-NN kernel ranks
+    by the SQL term)."""
+    from spark_hadoop_automation_in_cloud_spark.functions.geo import (
+        EARTH_RADIUS_KM,
+        haversine_km,
+        haversine_term,
+        haversine_term_sql,
+    )
+
+    c = [F.col(n) for n in ("la1", "lo1", "la2", "lo2")]
+    la1, lo1, la2, lo2 = c
+    def km(term):
+        return F.lit(2.0 * EARTH_RADIUS_KM) * F.asin(F.sqrt(term))
+
+    pow_form = km(
+        F.sin(F.radians(la2 - la1) / 2) ** 2
+        + F.cos(F.radians(la1)) * F.cos(F.radians(la2)) * F.sin(F.radians(lo2 - lo1) / 2) ** 2
+    )
+    sql_term = F.expr(haversine_term_sql("la1", "lo1", "la2", "lo2"))
+    df = spark.createDataFrame(grid + _GRID_EDGES, ["la1", "lo1", "la2", "lo2"])
+    got = df.select(haversine_km(*c), pow_form, km(haversine_term(*c)), km(sql_term))
+    for r in got.collect():
+        assert len({v.hex() for v in r}) == 1, r
+
+
 word = st.text(alphabet="abcde", min_size=1, max_size=4)
 
 
